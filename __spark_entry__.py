@@ -31,7 +31,7 @@ from time2feat_spark.operators import dedup as D
 from time2feat_spark.operators import text as T
 from time2feat_spark.operators import similarity as S
 
-SEQ_CACHE = "/root/repo/.cache"
+SEQ_CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
 SEQ_ROWS = {"sf0.001": 300, "sf0.01": 1500, "sf0.1": 15000}
 
 

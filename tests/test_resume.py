@@ -14,6 +14,7 @@ from time2feat_spark.generator import gen_pandas
 from time2feat_spark.operators.rollup import RollupConfig
 from time2feat_spark.plans.checkpoint import Manifest, snapshot_id
 from time2feat_spark.plans.ladder_job import LadderJob
+from time2feat_spark.plans.retention import RetentionPolicy
 
 CFG = RollupConfig(tiers=[("1m", 60), ("1h", 3600)], include_raw=False)
 
@@ -157,9 +158,8 @@ def test_salted_write_spreads_hot_source(spark, tmp_path):
 
 def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
     """plans/compaction: after a salted run plus an incremental append,
-    leaves hold many small files; compact_all must reduce to
-    files_per_partition per leaf and leave the table contents
-    bit-identical."""
+    leaves hold many small files; compact_all must reduce to one file
+    per leaf and leave the table contents bit-identical."""
     from time2feat_spark.plans.compaction import _parquet_files, compact_all
 
     inp = str(tmp_path / "seq")
@@ -173,23 +173,22 @@ def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
 
     before_files = len(_parquet_files(out))
     before = _table(spark, out)
-    res = compact_all(spark, out, files_per_partition=1)
+    res = compact_all(spark, out)
     after_files = len(_parquet_files(out))
     assert after_files < before_files, (before_files, after_files)
     assert all(r["files_after"] <= r["files_before"] for r in res.values())
     after = _table(spark, out)
     pd.testing.assert_frame_equal(before, after)
     # idempotent: second pass is a no-op
-    res2 = compact_all(spark, out, files_per_partition=1)
+    res2 = compact_all(spark, out)
     assert all(r["rows"] is None for r in res2.values())
 
 
 def test_run_compact_postpass(spark, tmp_path):
-    """run(compact=True) owns the small-file fix at the production entry
-    point: after an incremental append, every leaf of each processed
-    source holds <= files_per_partition files, the data is unchanged,
-    and the rewrite is recorded in the manifest (status='compacted',
-    namespaced unit key so unit state/watermarks are untouched)."""
+    """maintain() owns the small-file fix after an incremental run: every
+    leaf holds at most one file, the data is unchanged, and each rewrite
+    is recorded in the manifest (status='compacted', namespaced unit key
+    so unit state/watermarks are untouched)."""
     import glob
     import os
 
@@ -200,11 +199,13 @@ def test_run_compact_postpass(spark, tmp_path):
     job.run(incremental=True)
     before = _table(spark, out)
     spark.createDataFrame(gen_pandas(300, 420)).write.mode("append").parquet(inp)
-    r = LadderJob(spark, inp, out, CFG, rows_per_task=40).run(
-        incremental=True, compact=True, files_per_partition=1
-    )
-    assert r["processed"] and "compaction" in r
-    # every leaf of every processed source is at the target file count
+    job = LadderJob(spark, inp, out, CFG, rows_per_task=40)
+    r = job.run(incremental=True)
+    assert r["processed"]
+    res = job.maintain(policy=RetentionPolicy(max_age_days={}))  # keep all
+    assert not res["retention"]["dropped"]
+    assert any(c["rows"] is not None for c in res["compaction"].values())
+    # every leaf of every processed source is at one file
     for unit in r["processed"]:
         for leaf in glob.glob(f"{out}/{unit}/tier=*/window_day=*"):
             files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]

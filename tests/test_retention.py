@@ -102,9 +102,7 @@ def test_maintain_orchestrates_retention_and_compaction(spark, tmp_path):
     # age the clock so the oldest 1h day is past a 1-day 1h retention
     now_ms = (days[0] + 2) * MS_PER_DAY
     policy = RetentionPolicy(max_age_days={"1h": 1, "1d": None})
-    res = job.maintain(
-        policy=policy, files_per_partition=1, now_ms=now_ms
-    )
+    res = job.maintain(policy=policy, now_ms=now_ms)
     assert res["retention"]["dropped"], res["retention"]
     assert not glob.glob(f"{out}/source=*/tier=1h/window_day={days[0]}")
     # every surviving leaf compacted to one file
@@ -117,7 +115,7 @@ def test_maintain_orchestrates_retention_and_compaction(spark, tmp_path):
         r.unit.startswith("retention") for r in Manifest(out).records()
     )
     # idempotent second pass: nothing else dropped, no rewrites
-    res2 = job.maintain(policy=policy, files_per_partition=1, now_ms=now_ms)
+    res2 = job.maintain(policy=policy, now_ms=now_ms)
     assert not res2["retention"]["dropped"]
     assert all(v["rows"] is None for v in res2["compaction"].values())
 

@@ -9,6 +9,8 @@ independent of partitioning/parallelism.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -170,10 +172,11 @@ def test_rollup_points_streaming_flush_invariance(spark):
 
 def test_rollup_points_matches_sequences_semantics(spark):
     """Events-shaped input through rollup_points == same data through the
-    sequences path (same kernels, same windows)."""
+    sequences path: one tier core, so every tier's windows, statistics
+    and Gorilla bytes agree."""
     pdf = gen_pandas(0, 10)
-    cfg = RollupConfig(tiers=[("1m", 60)], include_raw=False, compress=False)
-    want = _normalize(rollup_sequences_pdf(pdf, cfg))
+    cfg = RollupConfig(include_raw=False)
+    want = rollup_sequences_pdf(pdf, cfg).drop(columns=["source"])
 
     # explode to points
     rows = []
@@ -194,14 +197,57 @@ def test_rollup_points_matches_sequences_semantics(spark):
     points = pd.concat(rows, ignore_index=True)
     sdf = spark.createDataFrame(points).repartition(7)
     got = rollup_points(sdf, ["doc_id"], "ts", "value", cfg).toPandas()
-    got = got.sort_values(["doc_id", "window_start_ms"]).reset_index(drop=True)
-    want = want.sort_values(["doc_id", "window_start_ms"]).reset_index(drop=True)
-    for col in ["count", "sum", "min", "max", "mean", "feat_variance",
-                "feat_median", "feat_autocorr_lag1", "feat_skewness"]:
-        g = got[col].to_numpy().astype(np.float64)
-        w = want[col].to_numpy().astype(np.float64)
-        both_nan = np.isnan(g) & np.isnan(w)
-        assert np.all(both_nan | (g == w)), col
+    order = ["tier", "doc_id", "window_start_ms"]
+    got = got.sort_values(order).reset_index(drop=True)
+    want = want.sort_values(order).reset_index(drop=True)
+    assert sorted(set(got.tier)) == ["1d", "1h", "1m"]
+    assert list(got.columns) == list(want.columns) and len(got) == len(want)
+    for col in want.columns:
+        g, w = got[col].to_numpy(), want[col].to_numpy()
+        if w.dtype == object:
+            assert all(bytes(x) == bytes(y) if isinstance(y, bytes) else x == y
+                       for x, y in zip(g, w)), col
+        else:
+            g64, w64 = g.astype(np.float64), w.astype(np.float64)
+            assert np.all((np.isnan(g64) & np.isnan(w64)) | (g64 == w64)), col
+
+
+@pytest.mark.parametrize("tick_ms", [600_000, 7000])
+def test_sequences_windows_on_tier_grid(tick_ms):
+    """Every tier holds every point once, in windows that start on a
+    multiple of the tier width (as the router assumes) and contain only
+    their own points — also for a tick wider than a tier (each point is
+    its own 1m window) or one that does not divide the tier width."""
+    pdf = gen_pandas(0, 3)
+    cfg = RollupConfig(tick_ms=tick_ms)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = rollup_sequences_pdf(pdf, cfg)
+    total = int(pdf.n_tok.sum())
+    for name, sec in cfg.tiers:
+        rows = out[out.tier == name]
+        ms = sec * 1000
+        assert int(rows["count"].sum()) == total, name
+        assert (rows.window_start_ms % ms == 0).all(), name
+        for ws, c, blk in zip(rows.window_start_ms, rows["count"], rows.ts_gorilla):
+            ts = decode_ts_block(bytes(blk), int(c))
+            assert ((ts >= ws) & (ts < ws + ms)).all(), (name, ws)
+
+
+@pytest.mark.parametrize("compress", [True, False])
+def test_sequences_zero_token_doc(compress):
+    """A 0-token doc yields no rows in any tier; the other docs' rows are
+    exactly those of a batch without it."""
+    pdf = gen_pandas(0, 4)
+    cfg = RollupConfig(compress=compress)
+    empty = pdf.iloc[[1]].assign(
+        doc_id="doc_empty", tokens=[np.array([], dtype=np.int32)], n_tok=0
+    )
+    mixed = pd.concat([pdf.iloc[:2], empty, pdf.iloc[2:]], ignore_index=True)
+    got = rollup_sequences_pdf(mixed, cfg)
+    assert not (got.doc_id == "doc_empty").any()
+    pd.testing.assert_frame_equal(got, rollup_sequences_pdf(pdf, cfg))
+    assert len(rollup_sequences_pdf(mixed.iloc[[2]], cfg)) == 0
 
 
 def test_rollup_points_edge_inputs(spark):

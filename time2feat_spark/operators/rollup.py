@@ -1,21 +1,25 @@
 """Tier-ladder rollup operator (raw -> 1m -> 1h -> 1d).
 
-The engine's workhorse (SURVEY.md §2.10, §7). Two input shapes:
+The engine's workhorse (SURVEY.md §2.10, §7). One core, ``_roll_tiers``,
+rolls every tier from flat arrays sorted by (group, ts): a tier's window
+boundary falls wherever the group or ``ts_ms // tier_ms`` changes, so each
+window is a contiguous slice that starts on a multiple of the tier width.
+Per tier it runs ``stats_ragged``, encodes the Gorilla blocks and builds
+the frame. The two input shapes only produce those arrays:
 
 * ``rollup_sequences`` — the canonical token table
-  (doc_id, tokens:array<int32>, n_tok, source); token position k has the
-  implicit timestamp ``t0 + k*tick``. Because every row is a whole series,
-  this path is **shuffle-free**: a single ``mapInPandas`` slices each doc's
-  array into nested tier windows and emits all tiers in one pass over the
-  raw data (the reference computes everything from one full-series pass too,
-  /root/reference/t2f/extraction/extractor.py:108-126 — here projected onto
-  nested tumbling windows, SURVEY.md §7.4).
+  (doc_id, tokens:array<int32>, n_tok, source); token k of a doc becomes
+  the point ``(doc, t0 + k*tick, token)``, and the ``raw`` tier is one
+  whole-doc window with NaN statistics. Because every row is a whole
+  series, this path is **shuffle-free**: a single ``mapInPandas`` emits
+  all tiers in one pass over the raw data.
 
 * ``rollup_points`` — long/event shape (key, ts, value), e.g. the events
   table. Points of one series must be co-located per day-chunk, so this
-  path shuffles once on ``(key, 1d-chunk)`` and runs the same kernels via
-  ``applyInPandas``. Chunking by the coarsest tier bounds group size (skew
-  relief) without splitting any window across groups.
+  path shuffles once on ``(key, 1d-chunk)``, then sorts and optionally
+  gap-fills each group before the core. Chunking by the coarsest tier
+  bounds group size (skew relief) without splitting any window across
+  groups.
 
 Determinism (SURVEY.md §7.5): all statistics come from
 ``kernels.window_stats`` on matrices padded to *power-of-two width buckets*
@@ -121,125 +125,127 @@ def stats_ragged(
     return out
 
 
+# --------------------------------------------------------------------- core
+
+_STAT_COLS = ["sum", "min", "max", "mean"]
+_COL_TYPES = {
+    "tier": StringType(),
+    "window_start_ms": LongType(),
+    "count": LongType(),
+    "ts_gorilla": BinaryType(),
+    "val_gorilla": BinaryType(),
+    "fill_method": StringType(),
+}  # every other tier column is a double
+
+
+def _tier_cols(cfg: RollupConfig) -> list[str]:
+    return (
+        ["tier", "window_start_ms", "count"] + _STAT_COLS
+        + [f"feat_{nm}" for nm in cfg.features]
+        + ["ts_gorilla", "val_gorilla", "fill_method"]
+    )
+
+
+def flat_schema(
+    cfg: RollupConfig, key_fields: list[StructField] | None = None
+) -> StructType:
+    """Schema of the flat tier frame: the key columns (by default the
+    sequences table's ``source, doc_id``) followed by the tier columns."""
+    if key_fields is None:
+        key_fields = [StructField(c, StringType()) for c in ("source", "doc_id")]
+    return StructType(
+        list(key_fields)
+        + [StructField(c, _COL_TYPES.get(c, DoubleType())) for c in _tier_cols(cfg)]
+    )
+
+
+def _empty_frame(cfg: RollupConfig, key_cols: list[str]) -> pd.DataFrame:
+    return pd.DataFrame({c: [] for c in key_cols + _tier_cols(cfg)})
+
+
+def _roll_tiers(
+    pdf: pd.DataFrame,
+    key_cols: list[str],
+    grp: np.ndarray,
+    ts_ms: np.ndarray,
+    vals: np.ndarray,
+    key_row: np.ndarray,
+    tiers: list[tuple[str, int | None]],
+    cfg: RollupConfig,
+    fill_method: str = "none",
+) -> pd.DataFrame:
+    """Roll flat points, sorted by (group, ts), into every tier.
+
+    A window boundary falls wherever the group id or ``ts_ms // tier_ms``
+    changes, so every window is a contiguous slice of the flat arrays and
+    starts at a multiple of the tier width. A tier width of ``None`` is the
+    raw tier: one window per group with NaN statistics. Point i's key
+    columns are read from row ``key_row[i]`` of ``pdf``."""
+    n = len(vals)
+    if n == 0:
+        return _empty_frame(cfg, key_cols)
+    keys = {c: pdf[c].to_numpy() for c in key_cols}
+    new_group = np.diff(grp) != 0
+    frames = []
+    for tier_name, tier_sec in tiers:
+        if tier_sec is None:
+            change = new_group
+        else:
+            ms = tier_sec * 1000
+            change = new_group | (np.diff(ts_ms // ms) != 0)
+        starts = np.concatenate(([0], np.nonzero(change)[0] + 1))
+        ends = np.append(starts[1:], n)
+        k = len(starts)
+        if tier_sec is None:
+            st = {nm: np.full(k, np.nan) for nm in _STAT_COLS + cfg.features}
+            st["count"] = ends - starts
+            window_start = ts_ms[starts]
+        else:
+            st = stats_ragged(vals, starts, ends, cfg.features)
+            window_start = ts_ms[starts] // ms * ms
+        res = {c: v[key_row[starts]] for c, v in keys.items()}
+        res["tier"] = np.full(k, tier_name, dtype=object)
+        res["window_start_ms"] = window_start
+        res["count"] = st["count"].astype(np.int64)
+        for nm in _STAT_COLS:
+            res[nm] = st[nm]
+        for nm in cfg.features:
+            res[f"feat_{nm}"] = st[nm]
+        if cfg.compress:
+            boffs = np.append(starts, n)
+            res["ts_gorilla"] = encode_ts_blocks(ts_ms, boffs)
+            res["val_gorilla"] = encode_val_blocks(vals, boffs)
+        else:
+            res["ts_gorilla"] = None
+            res["val_gorilla"] = None
+        res["fill_method"] = np.full(k, fill_method, dtype=object)
+        frames.append(pd.DataFrame(res))
+    return pd.concat(frames, ignore_index=True)
+
+
 # ---------------------------------------------------------------- sequences
 
 def rollup_sequences_pdf(pdf: pd.DataFrame, cfg: RollupConfig) -> pd.DataFrame:
     """Roll one pandas batch of sequence rows into all tiers (flat columns).
 
-    Shared verbatim by the Spark path (inside mapInPandas) and the
-    single-threaded oracle — that sharing is what makes tier outputs exactly
-    partition-invariant.
+    Token k of a doc becomes the point ``(doc, t0 + k*tick, token)``; the
+    ``raw`` tier is one whole-doc window. Shared verbatim by the Spark path
+    (inside mapInPandas) and the single-threaded oracle — that sharing is
+    what makes tier outputs exactly partition-invariant.
     """
-    n_docs = len(pdf)
-    if n_docs == 0:
-        return _empty_flat(cfg)
+    key_cols = ["source", "doc_id"]
+    if len(pdf) == 0:
+        return _empty_frame(cfg, key_cols)
     n_tok = pdf["n_tok"].to_numpy().astype(np.int64)
-    offsets = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(n_tok, out=offsets[1:])
-    flat = np.concatenate([np.asarray(t) for t in pdf["tokens"]]).astype(
+    doc = np.repeat(np.arange(len(pdf)), n_tok)
+    vals = np.concatenate([np.asarray(t) for t in pdf["tokens"]]).astype(
         np.float64, copy=False
     )
-    total = int(offsets[-1])
-    pos_in_doc = np.arange(total, dtype=np.int64) - np.repeat(offsets[:-1], n_tok)
-    ts_flat = cfg.t0_ms + pos_in_doc * cfg.tick_ms
-
-    frames = []
-    doc_ids = pdf["doc_id"].to_numpy()
-    sources = pdf["source"].to_numpy()
-
-    if cfg.include_raw:
-        frames.append(
-            _raw_tier_frame(doc_ids, sources, n_tok, offsets, ts_flat, flat, cfg)
-        )
-
-    for tier_name, tier_sec in cfg.tiers:
-        tt = tier_sec * 1000 // cfg.tick_ms  # window width in ticks
-        nw = (n_tok + tt - 1) // tt
-        nw_off = np.zeros(n_docs + 1, dtype=np.int64)
-        np.cumsum(nw, out=nw_off[1:])
-        k = int(nw_off[-1])
-        doc_of_w = np.repeat(np.arange(n_docs), nw)
-        j = np.arange(k, dtype=np.int64) - np.repeat(nw_off[:-1], nw)
-        w_starts = offsets[:-1][doc_of_w] + j * tt
-        w_ends = np.minimum(w_starts + tt, offsets[1:][doc_of_w])
-
-        st = stats_ragged(flat, w_starts, w_ends, cfg.features)
-        res = {
-            "source": sources[doc_of_w],
-            "doc_id": doc_ids[doc_of_w],
-            "tier": np.full(k, tier_name, dtype=object),
-            "window_start_ms": cfg.t0_ms + j * tt * cfg.tick_ms,
-            "count": st["count"].astype(np.int64),
-        }
-        for nm in ("sum", "min", "max", "mean"):
-            res[nm] = st[nm]
-        for nm in cfg.features:
-            res[f"feat_{nm}"] = st[nm]
-        if cfg.compress:
-            # windows tile each doc contiguously and docs are flat-contiguous,
-            # so block offsets are just the window starts + final end
-            boffs = np.append(w_starts, total)
-            res["ts_gorilla"] = encode_ts_blocks(ts_flat, boffs)
-            res["val_gorilla"] = encode_val_blocks(flat, boffs)
-        else:
-            res["ts_gorilla"] = None
-            res["val_gorilla"] = None
-        res["fill_method"] = np.full(k, "none", dtype=object)
-        frames.append(pd.DataFrame(res))
-    return pd.concat(frames, ignore_index=True)
-
-
-def _raw_tier_frame(doc_ids, sources, n_tok, offsets, ts_flat, flat, cfg):
-    n_docs = len(doc_ids)
-    if cfg.compress:
-        ts_blocks = encode_ts_blocks(ts_flat, offsets)
-        val_blocks = encode_val_blocks(flat, offsets)
-    else:
-        ts_blocks = [None] * n_docs
-        val_blocks = [None] * n_docs
-    base = {
-        "source": sources,
-        "doc_id": doc_ids,
-        "tier": np.full(n_docs, "raw", dtype=object),
-        "window_start_ms": np.full(n_docs, cfg.t0_ms, dtype=np.int64),
-        "count": n_tok,
-        "sum": np.full(n_docs, np.nan),
-        "min": np.full(n_docs, np.nan),
-        "max": np.full(n_docs, np.nan),
-        "mean": np.full(n_docs, np.nan),
-    }
-    for nm in cfg.features:
-        base[f"feat_{nm}"] = np.full(n_docs, np.nan)
-    base["ts_gorilla"] = ts_blocks
-    base["val_gorilla"] = val_blocks
-    base["fill_method"] = np.full(n_docs, "none", dtype=object)
-    return pd.DataFrame(base)
-
-
-def flat_schema(cfg: RollupConfig) -> StructType:
-    fields = [
-        StructField("source", StringType()),
-        StructField("doc_id", StringType()),
-        StructField("tier", StringType()),
-        StructField("window_start_ms", LongType()),
-        StructField("count", LongType()),
-        StructField("sum", DoubleType()),
-        StructField("min", DoubleType()),
-        StructField("max", DoubleType()),
-        StructField("mean", DoubleType()),
-    ]
-    fields += [StructField(f"feat_{nm}", DoubleType()) for nm in cfg.features]
-    fields += [
-        StructField("ts_gorilla", BinaryType()),
-        StructField("val_gorilla", BinaryType()),
-        StructField("fill_method", StringType()),
-    ]
-    return StructType(fields)
-
-
-def _empty_flat(cfg: RollupConfig) -> pd.DataFrame:
-    cols = [f.name for f in flat_schema(cfg)]
-    return pd.DataFrame({c: [] for c in cols})
+    first = np.cumsum(n_tok) - n_tok  # flat index of each doc's token 0
+    pos_in_doc = np.arange(len(vals), dtype=np.int64) - first[doc]
+    ts_ms = cfg.t0_ms + pos_in_doc * cfg.tick_ms
+    tiers = ([("raw", None)] if cfg.include_raw else []) + list(cfg.tiers)
+    return _roll_tiers(pdf, key_cols, doc, ts_ms, vals, doc, tiers, cfg)
 
 
 def rollup_sequences(df: DataFrame, cfg: RollupConfig | None = None) -> DataFrame:
@@ -339,15 +345,15 @@ def rollup_points_pdf(
 ) -> pd.DataFrame:
     """Roll MANY (key, chunk) groups at once — one vectorized pass over a
     whole partition (no per-group Python dispatch). Points are sorted by
-    (group, ts, value); every tier's windows are contiguous slices of the
-    sorted flat arrays, so the same stats_ragged/gorilla machinery as the
-    sequences path applies.
+    (group, ts, value), gap-filled if configured, and handed to the same
+    tier core as the sequences path. ``cfg.include_raw`` does not apply:
+    a (key, chunk) group is not a whole series.
 
     Requires a `_chunk` column (coarsest-tier id) so groups co-located by
     the repartition are whole; rows of one (key, _chunk) must all be
     present (guaranteed by rollup_points's repartition)."""
     if len(pdf) == 0:
-        return _empty_points_flat(cfg, key_cols)
+        return _empty_frame(cfg, key_cols)
 
     ts_raw = pdf[ts_col].to_numpy()
     if np.issubdtype(ts_raw.dtype, np.datetime64):
@@ -379,71 +385,19 @@ def rollup_points_pdf(
                 parts_g.append(np.full(len(gt), grp[s]))
                 parts_r.append(np.full(len(gt), key_row[s]))
         if not parts_t:
-            return _empty_points_flat(cfg, key_cols)
+            return _empty_frame(cfg, key_cols)
         ts_ms = np.concatenate(parts_t)
         vals = np.concatenate(parts_v)
         grp = np.concatenate(parts_g)
         key_row = np.concatenate(parts_r)
 
-    n = len(vals)
-    frames = []
-    for tier_name, tier_sec in cfg.tiers:
-        ms = tier_sec * 1000
-        wid = ts_ms // ms
-        change = (np.diff(grp) != 0) | (np.diff(wid) != 0)
-        boundaries = np.nonzero(change)[0] + 1
-        w_starts = np.concatenate(([0], boundaries))
-        w_ends = np.concatenate((boundaries, [n]))
-        st = stats_ragged(vals, w_starts, w_ends, cfg.features)
-        k = len(w_starts)
-        res = {
-            c: pdf[c].to_numpy()[key_row[w_starts]] for c in key_cols
-        }
-        res["tier"] = np.full(k, tier_name, dtype=object)
-        res["window_start_ms"] = wid[w_starts] * ms
-        res["count"] = st["count"].astype(np.int64)
-        for nm in ("sum", "min", "max", "mean"):
-            res[nm] = st[nm]
-        for nm in cfg.features:
-            res[f"feat_{nm}"] = st[nm]
-        if cfg.compress:
-            boffs = np.append(w_starts, n)
-            res["ts_gorilla"] = encode_ts_blocks(ts_ms, boffs)
-            res["val_gorilla"] = encode_val_blocks(vals, boffs)
-        else:
-            res["ts_gorilla"] = None
-            res["val_gorilla"] = None
-        res["fill_method"] = np.full(k, fill_method, dtype=object)
-        frames.append(pd.DataFrame(res))
-    return pd.concat(frames, ignore_index=True)
+    return _roll_tiers(
+        pdf, key_cols, grp, ts_ms, vals, key_row, cfg.tiers, cfg, fill_method
+    )
 
 
-def points_flat_schema(cfg: RollupConfig, key_fields: list[StructField]) -> StructType:
-    fields = list(key_fields) + [
-        StructField("tier", StringType()),
-        StructField("window_start_ms", LongType()),
-        StructField("count", LongType()),
-        StructField("sum", DoubleType()),
-        StructField("min", DoubleType()),
-        StructField("max", DoubleType()),
-        StructField("mean", DoubleType()),
-    ]
-    fields += [StructField(f"feat_{nm}", DoubleType()) for nm in cfg.features]
-    fields += [
-        StructField("ts_gorilla", BinaryType()),
-        StructField("val_gorilla", BinaryType()),
-        StructField("fill_method", StringType()),
-    ]
-    return StructType(fields)
-
-
-def _empty_points_flat(cfg: RollupConfig, key_cols: list[str]) -> pd.DataFrame:
-    names = key_cols + [
-        "tier", "window_start_ms", "count", "sum", "min", "max", "mean",
-    ] + [f"feat_{nm}" for nm in cfg.features] + [
-        "ts_gorilla", "val_gorilla", "fill_method",
-    ]
-    return pd.DataFrame({c: [] for c in names})
+#: scan bytes per shuffle partition when rollup_points sizes its shuffle
+_BYTES_PER_TASK = 256 << 20
 
 
 def rollup_points(
@@ -453,7 +407,6 @@ def rollup_points(
     val_col: str,
     cfg: RollupConfig | None = None,
     num_partitions: int | None = None,
-    bytes_per_task: int = 256 << 20,
     flush_rows: int = 65_536,
 ) -> DataFrame:
     """Tier-ladder rollup over long-format points.
@@ -463,7 +416,7 @@ def rollup_points(
     tier nest inside the chunk, so holistic stats stay exact.
 
     Scale posture (100 TB): the shuffle partition count is sized from the
-    optimizer's scan-size statistics (`bytes_per_task`, no extra pass —
+    optimizer's scan-size statistics (`_BYTES_PER_TASK`, no extra pass —
     file-listing stats Catalyst already has) rather than the static
     `spark.sql.shuffle.partitions`, and the kernel stage streams — rows
     are sorted within partitions by group key, so completed (key, chunk)
@@ -476,7 +429,7 @@ def rollup_points(
     cfg = cfg or RollupConfig(include_raw=False)
     coarsest_ms = max(sec for _, sec in cfg.tiers) * 1000
     key_fields = [df.schema[c] for c in key_cols]
-    schema = points_flat_schema(cfg, key_fields)
+    schema = flat_schema(cfg, key_fields)
 
     # project FIRST: only the grouping keys, timestamp, and value reach
     # the scan/shuffle (without this the exchange would carry every
@@ -514,7 +467,7 @@ def rollup_points(
             )
         except Exception:
             size_bytes = 0
-        num_partitions = max(default_p, -(-size_bytes // bytes_per_task))
+        num_partitions = max(default_p, -(-size_bytes // _BYTES_PER_TASK))
     group_cols = key_cols + ["_chunk"]
     parted = chunked.repartition(num_partitions, *group_cols)
     parted = parted.sortWithinPartitions(*group_cols)

@@ -20,6 +20,11 @@ restartable batch (SURVEY.md §2.9): sequences are append-only with
 monotonically increasing doc_id, so each unit's rollup watermark is its
 high-water doc_id; the next run processes only ``doc_id > watermark``
 and appends the new windows.
+
+``run`` only writes. The salted and incremental writes leave many small
+files per leaf; ``maintain`` is the one pass that cleans up after them:
+retention drops, then compaction of every source tree, each rewrite
+logged in the manifest.
 """
 
 from __future__ import annotations
@@ -58,17 +63,9 @@ class LadderJob:
         self,
         incremental: bool = False,
         max_units: int | None = None,
-        compact: bool = False,
-        files_per_partition: int = 1,
     ) -> dict:
         """Process all pending units; returns run metrics. ``max_units``
-        stops early (used by resume tests to simulate a crash).
-
-        ``compact=True`` runs small-file compaction over the units this
-        run actually wrote, as a post-pass: incremental appends and
-        salted writes are the small-file generators, so the production
-        entry point owns the fix (each rewrite is verified row-count-
-        equal before the swap and recorded in the manifest)."""
+        stops early (used by resume tests to simulate a crash)."""
         run_id = uuid.uuid4().hex[:8]
         snap = snapshot_id(self.input_path)
         seq = self.spark.read.parquet(self.input_path)
@@ -158,69 +155,28 @@ class LadderJob:
             self.manifest.append(rec)
             processed.append(unit)
 
-        result = {
+        return {
             "run_id": run_id,
             "snapshot": snap,
             "processed": processed,
             "skipped": skipped,
             "pending": len(units) - len(processed) - len(skipped),
         }
-        if compact:
-            from .compaction import compact_source
 
-            compacted = {}
-            for unit in processed:
-                source = unit.split("=", 1)[1]
-                t0 = time.time()
-                res = compact_source(
-                    self.spark, self.out_root, source, files_per_partition
-                )
-                compacted[source] = res
-                if res["rows"] is not None:  # an actual rewrite happened
-                    # unit key is namespaced so done_units()/watermarks()
-                    # (which key on the latest record per unit) never
-                    # mistake a compaction record for unit state
-                    self.manifest.append(
-                        UnitRecord(
-                            run_id=run_id,
-                            unit=f"compaction:source={source}",
-                            input_snapshot_id=snap,
-                            partition_range=(
-                                f"files {res['files_before']}"
-                                f"->{res['files_after']}"
-                            ),
-                            rollup_watermark="",
-                            rows_in=res["rows"],
-                            windows_out=res["rows"],
-                            points=0,
-                            bytes_compressed=0,
-                            wall_ms=int((time.time() - t0) * 1000),
-                            status="compacted",
-                        )
-                    )
-            result["compaction"] = compacted
-        return result
-
-    def maintain(
-        self,
-        policy=None,
-        files_per_partition: int = 1,
-        now_ms: int | None = None,
-    ) -> dict:
+    def maintain(self, policy=None, now_ms: int | None = None) -> dict:
         """One maintenance pass over the output table: retention first
         (pure window_day partition drops — cheaper to delete before
-        rewriting), then small-file compaction of every source tree.
-        Both steps are idempotent and manifest-logged; this is the
-        cron-able entry point a deployment schedules between runs."""
+        rewriting), then small-file compaction of every source tree to
+        one file per leaf. Both steps are idempotent and manifest-logged;
+        this is the cron-able entry point a deployment schedules between
+        runs, and the only compaction path."""
         from .compaction import compact_all
         from .retention import RetentionPolicy, enforce_retention
 
         policy = policy or RetentionPolicy()
         now = int(time.time() * 1000) if now_ms is None else now_ms
         ret = enforce_retention(self.out_root, policy, now)
-        comp = compact_all(
-            self.spark, self.out_root, files_per_partition
-        )
+        comp = compact_all(self.spark, self.out_root)
         return {"retention": ret, "compaction": comp}
 
     def read_output(self) -> DataFrame:
