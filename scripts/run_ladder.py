@@ -39,15 +39,17 @@ def main() -> None:
         default=None,
         help="per-tier max-age days as tier=days[,tier=days...]; 'forever' "
         "keeps a tier indefinitely (e.g. raw=7,1m=90,1h=730,1d=forever). "
-        "Enforced after the run as pure window_day partition drops.",
+        "Enforced after the run by LadderJob.maintain() as pure window_day "
+        "partition drops, followed by its compaction pass.",
     )
     p.add_argument(
         "--compact",
         action="store_true",
-        help="after the run (and retention), rewrite each source's "
-        "(tier, window_day) leaves to one file each — the small-file "
-        "maintenance pass for salted/incremental writes (on Iceberg use "
-        "rewrite_data_files instead).",
+        help="after the run, run LadderJob.maintain(): retention (keep "
+        "everything unless --retention is given), then rewrite each "
+        "(tier, window_day) leaf holding more than one file to one file — "
+        "the small-file maintenance pass for salted/incremental writes (on "
+        "Iceberg use rewrite_data_files instead).",
     )
     args = p.parse_args()
 
@@ -60,25 +62,16 @@ def main() -> None:
         spark, args.input, args.output, rows_per_task=args.rows_per_task
     )
     res = job.run(incremental=args.incremental, max_units=args.max_units)
-    if args.retention:
-        import time
+    if args.retention or args.compact:
+        from time2feat_spark.plans.retention import RetentionPolicy
 
-        from time2feat_spark.plans.retention import (
-            RetentionPolicy,
-            enforce_retention,
-        )
-
+        # without --retention the pass keeps everything, so --compact alone
+        # never drops data under the default policy
         ages: dict = {}
-        for part in args.retention.split(","):
+        for part in args.retention.split(",") if args.retention else []:
             tier, days = part.split("=")
             ages[tier] = None if days == "forever" else int(days)
-        res["retention"] = enforce_retention(
-            args.output, RetentionPolicy(ages), int(time.time() * 1000)
-        )
-    if args.compact:
-        from time2feat_spark.plans.compaction import compact_all
-
-        res["compaction"] = compact_all(spark, args.output)
+        res.update(job.maintain(RetentionPolicy(ages)))
     print(json.dumps(res))
 
 

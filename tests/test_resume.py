@@ -6,13 +6,25 @@ write path."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from time2feat_spark.generator import gen_pandas
 from time2feat_spark.operators.rollup import RollupConfig
+from time2feat_spark.plans import compaction
 from time2feat_spark.plans.checkpoint import Manifest, snapshot_id
+from time2feat_spark.plans.compaction import (
+    _leaves,
+    _parquet_files,
+    compact_all,
+    compact_source,
+)
 from time2feat_spark.plans.ladder_job import LadderJob
 from time2feat_spark.plans.retention import RetentionPolicy
 
@@ -160,8 +172,6 @@ def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
     """plans/compaction: after a salted run plus an incremental append,
     leaves hold many small files; compact_all must reduce to one file
     per leaf and leave the table contents bit-identical."""
-    from time2feat_spark.plans.compaction import _parquet_files, compact_all
-
     inp = str(tmp_path / "seq")
     out = str(tmp_path / "out")
     _write_input(spark, inp, 300)
@@ -173,14 +183,14 @@ def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
 
     before_files = len(_parquet_files(out))
     before = _table(spark, out)
-    res = compact_all(spark, out)
+    res = compact_all(out)
     after_files = len(_parquet_files(out))
     assert after_files < before_files, (before_files, after_files)
     assert all(r["files_after"] <= r["files_before"] for r in res.values())
     after = _table(spark, out)
     pd.testing.assert_frame_equal(before, after)
     # idempotent: second pass is a no-op
-    res2 = compact_all(spark, out)
+    res2 = compact_all(out)
     assert all(r["rows"] is None for r in res2.values())
 
 
@@ -222,6 +232,206 @@ def test_run_compact_postpass(spark, tmp_path):
     # unit state intact: a rerun still skips everything
     r3 = LadderJob(spark, inp, out, CFG).run(incremental=True)
     assert not r3["processed"] and r3["pending"] == 0
+
+
+@pytest.fixture(scope="module")
+def salted_out(spark, tmp_path_factory):
+    """A tier table whose leaves hold one file or several (salted run).
+    Tests copy it before changing it."""
+    base = tmp_path_factory.mktemp("salted")
+    inp, out = str(base / "seq"), str(base / "out")
+    _write_input(spark, inp, 300)
+    LadderJob(spark, inp, out, CFG, rows_per_task=40).run()
+    return out
+
+
+def _copy(src: str, tmp_path) -> str:
+    dst = str(tmp_path / "out")
+    shutil.copytree(src, dst)
+    return dst
+
+
+def _multi_leaf(out: str) -> tuple[str, list[str]]:
+    return next((d, n) for d, n in _leaves(out).items() if len(n) > 1)
+
+
+def _leaf_state(leaf: str) -> dict:
+    """Every entry of a leaf dir with its inode and bytes."""
+    out = {}
+    for n in sorted(os.listdir(leaf)):
+        with open(os.path.join(leaf, n), "rb") as f:
+            out[n] = (os.stat(os.path.join(leaf, n)).st_ino, f.read())
+    return out
+
+
+def test_compaction_keeps_single_file_leaves(salted_out, tmp_path):
+    """A leaf that already holds one file is not rewritten: same file
+    name, same inode."""
+    out = _copy(salted_out, tmp_path)
+    single = {d: n[0] for d, n in _leaves(out).items() if len(n) == 1}
+    assert single and any(len(n) > 1 for n in _leaves(out).values())
+    inodes = {d: os.stat(os.path.join(d, n)).st_ino for d, n in single.items()}
+    compact_all(out)
+    after = _leaves(out)
+    for d, n in single.items():
+        assert after[d] == [n]
+        assert os.stat(os.path.join(d, n)).st_ino == inodes[d]
+
+
+def test_compaction_one_file_one_row_group_per_leaf(salted_out, tmp_path):
+    """Every multi-file leaf ends with exactly one file holding one row
+    group, and no `.crc` sidecar of a replaced file is left behind."""
+    out = _copy(salted_out, tmp_path)
+    multi = {d: sum(pq.read_metadata(os.path.join(d, f)).num_rows for f in n)
+             for d, n in _leaves(out).items() if len(n) > 1}
+    assert multi
+    res = compact_all(out)
+    after = _leaves(out)
+    for d, rows in multi.items():
+        assert len(after[d]) == 1 and os.listdir(d) == after[d], os.listdir(d)
+        meta = pq.read_metadata(os.path.join(d, after[d][0]))
+        assert meta.num_row_groups == 1 and meta.num_rows == rows
+    assert sum(r["files_after"] for r in res.values()) == len(after)
+    # a rewrite reports the whole source tree's rows, from the footers
+    for src, r in res.items():
+        if r["rows"] is not None:
+            files = _parquet_files(f"{out}/source={src}")
+            assert r["rows"] == sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def _dictionary_columns(meta) -> set[str]:
+    rg = meta.row_group(0)
+    return {rg.column(i).path_in_schema for i in range(meta.num_columns)
+            if any("DICTIONARY" in e for e in rg.column(i).encodings)}
+
+
+def test_compacted_file_keeps_parquet_schema(salted_out, tmp_path):
+    """A compacted file's parquet schema (physical and logical types,
+    INT96 timestamps included), codec and Spark row metadata equal its
+    inputs', and it dictionary-encodes the columns its largest input did
+    (Spark's writer drops a dictionary that does not pay)."""
+    out = _copy(salted_out, tmp_path)
+    leaf, names = _multi_leaf(out)
+    inputs = [pq.read_metadata(os.path.join(leaf, n)) for n in names]
+    compact_all(out)
+    got = pq.read_metadata(os.path.join(leaf, os.listdir(leaf)[0]))
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    ts = got.schema.names.index("window_start")
+    assert got.schema.column(ts).physical_type == "INT96"
+    for m in inputs:
+        assert got.schema.equals(m.schema)
+        assert got.metadata[key] == m.metadata[key]
+        assert (got.row_group(0).column(0).compression
+                == m.row_group(0).column(0).compression)
+    big = max(inputs, key=lambda m: m.num_rows)
+    assert _dictionary_columns(got) == _dictionary_columns(big)
+
+
+def test_compaction_keeps_far_future_timestamps(spark, tmp_path):
+    """INT96 timestamps past 2262, the end of int64 nanoseconds, come
+    back from a compacted leaf unchanged."""
+    from datetime import datetime
+
+    out = str(tmp_path / "out")
+    leaf = f"{out}/source=s/tier=1d/window_day=0"
+    rows = [(1, datetime(3000, 1, 1, 0, 0, 0, 1)), (2, datetime(9999, 12, 31))]
+    for r in rows:  # one file per write
+        spark.createDataFrame([r], "k long, window_start timestamp").coalesce(
+            1).write.mode("append").parquet(leaf)
+    assert len(_leaves(out)[leaf]) == 2
+    compact_all(out)
+    assert len(_leaves(out)[leaf]) == 1
+    got = spark.read.parquet(leaf).orderBy("k").collect()
+    assert [tuple(r) for r in got] == rows
+
+
+def test_compaction_schema_drift_raises_leaf_untouched(salted_out, tmp_path):
+    """One file of a leaf written with another column type: compaction
+    raises before the rewrite and leaves the leaf exactly as it was."""
+    out = _copy(salted_out, tmp_path)
+    leaf, names = _multi_leaf(out)
+    f = os.path.join(leaf, names[-1])
+    t = pq.read_table(f, coerce_int96_timestamp_unit="us")
+    i = t.schema.get_field_index("count")
+    t = t.set_column(i, "count", t.column(i).cast(pa.int32()))
+    pq.write_table(t, f, use_deprecated_int96_timestamps=True)
+    before = _leaf_state(leaf)
+    source = leaf.split("source=", 1)[1].split("/", 1)[0]
+    with pytest.raises(RuntimeError, match="schema"):
+        compact_source(out, source)
+    assert _leaf_state(leaf) == before
+    assert not [n for n in os.listdir(os.path.dirname(leaf)) if n.startswith(".")]
+
+
+def test_compaction_lost_row_raises_leaf_untouched(salted_out, tmp_path, monkeypatch):
+    """A writer that drops a row fails the footer row-count check: the
+    leaf is left exactly as it was and the scratch dir is removed."""
+    out = _copy(salted_out, tmp_path)
+    leaf, _ = _multi_leaf(out)
+    before = _leaf_state(leaf)
+    write = pq.write_table
+    monkeypatch.setattr(compaction.pq, "write_table",
+                        lambda t, *a, **kw: write(t.slice(1), *a, **kw))
+    source = leaf.split("source=", 1)[1].split("/", 1)[0]
+    with pytest.raises(RuntimeError, match="rows"):
+        compact_source(out, source)
+    assert _leaf_state(leaf) == before
+    assert not [n for n in os.listdir(os.path.dirname(leaf)) if n.startswith(".")]
+
+
+def _plant_old_without_leaf(leaf):
+    parent, base = os.path.split(leaf)
+    os.rename(leaf, os.path.join(parent, ".old__" + base))
+
+
+def _plant_old_beside_leaf(leaf):
+    parent, base = os.path.split(leaf)
+    shutil.copytree(leaf, os.path.join(parent, ".old__" + base))
+
+
+def _plant_stale_compacting(leaf):
+    parent, base = os.path.split(leaf)
+    shutil.copytree(leaf, os.path.join(parent, ".compacting__" + base))
+
+
+def _plant_old_source_tree(leaf):
+    src = leaf.split("/tier=", 1)[0]
+    parent, base = os.path.split(src)
+    os.rename(src, os.path.join(parent, ".old__" + base))
+
+
+@pytest.mark.parametrize("plant", [
+    _plant_old_without_leaf,  # crash between the two renames
+    _plant_old_beside_leaf,  # crash before the replaced leaf was removed
+    _plant_stale_compacting,  # crash before the swap
+    _plant_old_source_tree,  # a whole-source-tree swap, at the table root
+], ids=lambda f: f.__name__[len("_plant_"):])
+def test_maintain_repairs_interrupted_swap(spark, salted_out, tmp_path, plant):
+    """A crash mid-swap leaves dot-prefixed dirs that readers skip; the
+    next maintain() restores the table exactly and leaves no scratch dir."""
+    out = _copy(salted_out, tmp_path)
+    want = _table(spark, out)
+    plant(_multi_leaf(out)[0])
+    job = LadderJob(spark, str(tmp_path / "unused"), out, CFG)
+    job.maintain(policy=RetentionPolicy(max_age_days={}))
+    pd.testing.assert_frame_equal(_table(spark, out), want)
+    for dirpath, dirs, _ in os.walk(out):
+        assert not [d for d in dirs if d.startswith((".old__", ".compacting__"))]
+    assert all(len(n) == 1 for n in _leaves(out).values())
+
+
+def test_parquet_files_skips_hidden_dirs(salted_out, tmp_path):
+    """Scratch (`.`-prefixed) and `_temporary` dirs are not table data:
+    neither `_parquet_files` nor compaction's file counts include them."""
+    out = _copy(salted_out, tmp_path)
+    n = len(_parquet_files(out))
+    leaf, _ = _multi_leaf(out)
+    parent, base = os.path.split(leaf)
+    shutil.copytree(leaf, os.path.join(parent, ".compacting__x" + base))
+    shutil.copytree(leaf, os.path.join(leaf, "_temporary", "0"))
+    assert len(_parquet_files(out)) == n
+    res = compact_all(out)
+    assert sum(r["files_before"] for r in res.values()) == n
 
 
 def test_read_tier_range_prunes_partitions(spark, tmp_path):

@@ -5,6 +5,7 @@ drops — finer tiers die young, coarser tiers live long."""
 from __future__ import annotations
 
 import glob
+import time
 
 import pytest
 
@@ -118,6 +119,41 @@ def test_maintain_orchestrates_retention_and_compaction(spark, tmp_path):
     res2 = job.maintain(policy=policy, now_ms=now_ms)
     assert not res2["retention"]["dropped"]
     assert all(v["rows"] is None for v in res2["compaction"].values())
+
+
+def test_run_ladder_compact_alone_keeps_everything(spark, tmp_path, monkeypatch,
+                                                   capsys):
+    """scripts/run_ladder.py --compact maintains through
+    LadderJob.maintain() with a keep-everything policy: raw and 1m
+    windows old enough for the default policy to drop stay, and every
+    leaf ends at one file."""
+    import importlib.util
+    import json
+    import os
+    import sys
+
+    inp, out = str(tmp_path / "seq"), str(tmp_path / "out")
+    spark.createDataFrame(gen_pandas(0, 80)).write.parquet(inp)
+    script = os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                          "scripts", "run_ladder.py")
+    spec = importlib.util.spec_from_file_location("run_ladder", script)
+    run_ladder = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run_ladder)
+    monkeypatch.setattr(sys, "argv", ["run_ladder.py", "--input", inp,
+                                      "--output", out, "--rows-per-task", "5",
+                                      "--compact"])
+    run_ladder.main()
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert res["retention"]["dropped"] == []
+    assert any(c["rows"] is not None for c in res["compaction"].values())
+    newest = max(int(p.rsplit("=", 1)[1])
+                 for p in glob.glob(f"{out}/source=*/tier=*/window_day=*"))
+    # the default policy keeps 1m for 90 days: these windows are older
+    assert RetentionPolicy().cutoff_day("1m", int(time.time() * 1000)) > newest
+    for tier in ("raw", "1m"):
+        assert glob.glob(f"{out}/source=*/tier={tier}/window_day=*")
+    for leaf in glob.glob(f"{out}/source=*/tier=*/window_day=*"):
+        assert len(glob.glob(f"{leaf}/*.parquet")) == 1, leaf
 
 
 def test_route_range_tiered_falls_back_after_retention(spark, tmp_path):

@@ -23,8 +23,9 @@ and appends the new windows.
 
 ``run`` only writes. The salted and incremental writes leave many small
 files per leaf; ``maintain`` is the one pass that cleans up after them:
-retention drops, then compaction of every source tree, each rewrite
-logged in the manifest.
+retention drops, then a file-level compaction that rewrites each
+multi-file leaf as one file (no Spark job), each rewrite logged in the
+manifest.
 """
 
 from __future__ import annotations
@@ -166,8 +167,8 @@ class LadderJob:
     def maintain(self, policy=None, now_ms: int | None = None) -> dict:
         """One maintenance pass over the output table: retention first
         (pure window_day partition drops — cheaper to delete before
-        rewriting), then small-file compaction of every source tree to
-        one file per leaf. Both steps are idempotent and manifest-logged;
+        rewriting), then small-file compaction of every multi-file leaf
+        to one file. Both steps are idempotent and manifest-logged;
         this is the cron-able entry point a deployment schedules between
         runs, and the only compaction path."""
         from .compaction import compact_all
@@ -176,7 +177,7 @@ class LadderJob:
         policy = policy or RetentionPolicy()
         now = int(time.time() * 1000) if now_ms is None else now_ms
         ret = enforce_retention(self.out_root, policy, now)
-        comp = compact_all(self.spark, self.out_root)
+        comp = compact_all(self.out_root)
         return {"retention": ret, "compaction": comp}
 
     def read_output(self) -> DataFrame:
