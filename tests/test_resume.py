@@ -12,6 +12,7 @@ import shutil
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -85,6 +86,59 @@ def test_manifest_lineage_and_metrics(spark, tmp_path):
         assert rec.rollup_watermark.startswith("doc_")
         assert rec.rows_in > 0 and rec.windows_out > 0 and rec.points > 0
         assert rec.bytes_compressed > 0 and rec.wall_ms >= 0
+
+
+def _written(files) -> tuple[int, int, int]:
+    """(rows, sum(count), Gorilla bytes) of the given tier files."""
+    rows = points = nbytes = 0
+    for f in files:
+        t = pq.read_table(f, columns=["count", "val_gorilla", "ts_gorilla"])
+        rows += t.num_rows
+        points += pc.sum(t["count"]).as_py() or 0
+        for c in ("val_gorilla", "ts_gorilla"):
+            nbytes += pc.sum(pc.binary_length(t[c])).as_py() or 0
+    return rows, points, nbytes
+
+
+def test_unit_metrics_are_what_each_run_wrote(spark, tmp_path):
+    """Each `done` record holds what its own run wrote for the unit (the
+    increment in append mode, not the unit's running total) and the
+    highest doc_id it processed; a run with no new docs records 0 and
+    keeps the watermark."""
+    inp, out = str(tmp_path / "seq"), str(tmp_path / "out")
+    docs = gen_pandas(0, 200)
+    spark.createDataFrame(docs[:150]).write.parquet(inp)
+    job = LadderJob(spark, inp, out, CFG, rows_per_task=40)  # several files
+    marks = {f"source={s}": "" for s in docs["source"].unique()}
+
+    def run_and_check(new_docs):
+        before = {u: set(_parquet_files(f"{out}/{u}")) for u in marks}
+        r = job.run(incremental=True)
+        assert sorted(r["processed"]) == sorted(marks)
+        recs = {x.unit: x for x in job.manifest.records()
+                if x.run_id == r["run_id"] and x.status == "done"}
+        assert set(recs) == set(marks)
+        for unit, rec in recs.items():
+            new = set(_parquet_files(f"{out}/{unit}")) - before[unit]
+            assert (rec.windows_out, rec.points, rec.bytes_compressed) == _written(new)
+            ids = new_docs.loc[new_docs["source"] == unit[len("source="):], "doc_id"]
+            marks[unit] = ids.max() if len(ids) else marks[unit]
+            assert rec.rollup_watermark == marks[unit]
+        return recs
+
+    build = run_and_check(docs[:150])
+    assert all(x.windows_out > 0 and x.bytes_compressed > 0 for x in build.values())
+    spark.createDataFrame(docs[150:]).write.mode("append").parquet(inp)
+    append = run_and_check(docs[150:])
+    assert any(0 < append[u].points < build[u].points for u in marks)
+    # the input snapshot moves (a file rewritten in place), no doc is new
+    f = _parquet_files(inp)[0]
+    os.utime(f, (os.stat(f).st_atime, os.stat(f).st_mtime + 10))
+    idle = run_and_check(docs[:0])
+    assert all(
+        (x.windows_out, x.points, x.bytes_compressed) == (0, 0, 0)
+        for x in idle.values()
+    )
 
 
 def test_rerun_is_noop_until_snapshot_changes(spark, tmp_path):

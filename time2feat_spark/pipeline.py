@@ -70,10 +70,10 @@ def pipeline(
     max_driver_rows: int | None = None,
     reference_names: bool = False,
 ) -> dict:
-    if [x for x in files if not os.path.isfile(x)]:
-        raise ValueError("at least one time-series path doesn't exist")
     if train_size < 0 or train_size > 1:
         raise ValueError("train size must be between 0 and 1")
+    if [x for x in files if not os.path.isfile(x)]:
+        raise ValueError("at least one time-series path doesn't exist")
 
     rows = []
     for fi, path in enumerate(files):

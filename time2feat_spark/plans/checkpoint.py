@@ -25,6 +25,11 @@ from dataclasses import asdict, dataclass, field
 
 @dataclass
 class UnitRecord:
+    """One manifest line. ``windows_out``, ``points`` (sum of window
+    counts) and ``bytes_compressed`` (Gorilla block bytes) are what this
+    run wrote for the unit: in append mode the increment, not the
+    unit's cumulative totals."""
+
     run_id: str
     unit: str  # partition unit key, e.g. "source=src_3"
     input_snapshot_id: str

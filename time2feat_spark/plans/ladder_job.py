@@ -21,6 +21,12 @@ monotonically increasing doc_id, so each unit's rollup watermark is its
 high-water doc_id; the next run processes only ``doc_id > watermark``
 and appends the new windows.
 
+A unit's manifest metrics (``windows_out``, ``points``,
+``bytes_compressed``) and its new watermark are what this run wrote —
+in append mode the increment, not the unit's running total. They are
+observed on the write itself (``DataFrame.observe``), so recording them
+costs no extra scan of the output or the input.
+
 ``run`` only writes. The salted and incremental writes leave many small
 files per leaf; ``maintain`` is the one pass that cleans up after them:
 retention drops, then a file-level compaction that rewrites each
@@ -33,7 +39,7 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..operators.rollup import RollupConfig, assemble, rollup_sequences
 from .checkpoint import Manifest, UnitRecord, snapshot_id
@@ -111,6 +117,10 @@ class LadderJob:
                     status="started",
                 )
             )
+            # the unit's metrics and its new watermark are observed while
+            # the write runs: no re-read of the output, no second scan
+            seen, wrote = Observation(), Observation()
+            part = part.observe(seen, F.max("doc_id").alias("hi"))
             salt_k = max(1, -(-n_rows // self.rows_per_task))
             flat = rollup_sequences(
                 part.repartition(salt_k, F.pmod(F.xxhash64("doc_id"), F.lit(salt_k))),
@@ -126,21 +136,21 @@ class LadderJob:
                     F.floor(F.unix_millis("window_start") / F.lit(86_400_000))
                     .cast("long"),
                 )
+                .observe(
+                    wrote,
+                    F.count(F.lit(1)).alias("w"),
+                    F.sum("count").alias("p"),
+                    F.sum(
+                        F.coalesce(F.length("val_gorilla"), F.lit(0))
+                        + F.coalesce(F.length("ts_gorilla"), F.lit(0))
+                    ).alias("b"),
+                )
             )
             out.write.mode(mode).partitionBy("tier", "window_day").parquet(
                 f"{self.out_root}/source={source}"
             )
-            stats = self.spark.read.parquet(
-                f"{self.out_root}/source={source}"
-            ).agg(
-                F.count(F.lit(1)).alias("w"),
-                F.sum("count").alias("p"),
-                F.sum(
-                    F.coalesce(F.length("val_gorilla"), F.lit(0))
-                    + F.coalesce(F.length("ts_gorilla"), F.lit(0))
-                ).alias("b"),
-            ).first()
-            hi = part.agg(F.max("doc_id")).first()[0] or wm or ""
+            stats = wrote.get
+            hi = seen.get["hi"] or wm or ""
             rec = UnitRecord(
                 run_id=run_id,
                 unit=unit,
@@ -148,9 +158,9 @@ class LadderJob:
                 partition_range=f"{source}",
                 rollup_watermark=str(hi),
                 rows_in=n_rows,
-                windows_out=int(stats.w),
-                points=int(stats.p),
-                bytes_compressed=int(stats.b or 0),
+                windows_out=stats["w"],
+                points=stats["p"] or 0,
+                bytes_compressed=stats["b"] or 0,
                 wall_ms=int((time.time() - t0) * 1000),
             )
             self.manifest.append(rec)

@@ -11,6 +11,7 @@ engine itself).
 from __future__ import annotations
 
 import os
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -64,3 +65,38 @@ def get_spark(app: str = "time2feat_spark", master: str | None = None,
     for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def cache_zip_directories() -> None:
+    """Make ``importlib.invalidate_caches()`` re-read a zip archive's
+    directory only when the archive's (mtime_ns, size) changed.
+
+    A Python worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``worker_util.setup_spark_files``). Before 3.12 each
+    zipimporter then eagerly re-reads its whole archive directory, and
+    there is one importer per package dir of pyspark.zip and py4j: most
+    of a reused worker's fixed CPU cost per task outside the UDF. Here
+    each archive's directory is read once per process and shared by its
+    importers; a rewritten archive is still picked up. Idempotent.
+    """
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_stat_keyed", False):
+        return
+    read: dict[str, tuple[tuple[int, int], dict]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return original(self)
+        key = (st.st_mtime_ns, st.st_size)
+        hit = read.get(self.archive)
+        if hit is not None and hit[0] == key:
+            self._files = zipimport._zip_directory_cache[self.archive] = hit[1]
+            return
+        original(self)
+        if self.archive in zipimport._zip_directory_cache:  # read succeeded
+            read[self.archive] = (key, self._files)
+
+    invalidate_caches._stat_keyed = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
