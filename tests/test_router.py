@@ -12,9 +12,26 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from time2feat_spark.generator import gen_pandas
-from time2feat_spark.operators.rollup import RollupConfig, tier_points
+import pytest
+
+from time2feat_spark.operators.rollup import (
+    T0_MS,
+    RollupConfig,
+    assemble,
+    rollup_points,
+    tier_points,
+    tier_table_schema,
+)
 from time2feat_spark.plans.ladder_job import LadderJob
-from time2feat_spark.plans.router import choose_tier, route_points, route_range
+from time2feat_spark.plans.retention import RetentionPolicy
+from time2feat_spark.plans.router import (
+    aggregate_range,
+    choose_tier,
+    quantile_range,
+    route_points,
+    route_range,
+    route_range_tiered,
+)
 
 CFG = RollupConfig()  # raw + 1m/1h/1d, compressed
 
@@ -206,3 +223,102 @@ def test_quantile_range_exact_vs_numpy(spark, tmp_path):
     # interpolation, last-ulp float difference
     for c in ("q_0_5", "q_0_9"):
         assert np.allclose(g[c], w[c], rtol=1e-12, atol=1e-12), c
+
+
+# ---------------------------------------------- declared read schema
+
+DAY_MS = 86_400_000
+SHORT = RollupConfig(features=["variance", "median", "q10"])
+
+
+def _points_table(spark, out, cfg):
+    """The points layout: ``rollup_points`` + ``assemble`` written with
+    ``partitionBy("source", "tier", "window_day")``."""
+    rng = np.random.default_rng(0)
+    frames = []
+    for k in range(4):
+        ts = np.sort(rng.choice(2 * 86_400, 400, replace=False)) * 1000 + T0_MS
+        frames.append(pd.DataFrame({
+            "source": f"s{k % 2}", "doc_id": f"d{k}",
+            "ts": pd.to_datetime(ts, unit="ms"),
+            "value": rng.normal(size=len(ts)),
+        }))
+    pts = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    assemble(rollup_points(pts, ["source", "doc_id"], "ts", "value", cfg),
+             cfg).withColumn(
+        "window_day",
+        F.floor(F.unix_millis("window_start") / F.lit(DAY_MS)).cast("long"),
+    ).write.partitionBy("source", "tier", "window_day").parquet(out)
+
+
+@pytest.mark.parametrize("cfg", [CFG, SHORT], ids=["default", "short"])
+@pytest.mark.parametrize("layout", ["ladder", "points"])
+def test_declared_schema_equals_inferred(spark, tmp_path, layout, cfg):
+    out = str(tmp_path / "out")
+    if layout == "ladder":
+        inp = str(tmp_path / "seq")
+        spark.createDataFrame(gen_pandas(0, 12)).write.parquet(inp)
+        LadderJob(spark, inp, out, cfg).run()
+    else:
+        _points_table(spark, out, cfg)
+    inferred = spark.read.option("basePath", out).parquet(out).schema
+    assert tier_table_schema(cfg) == inferred
+    assert LadderJob(spark, "", out, cfg).read_output().schema == inferred
+
+
+def test_planning_router_reads_launches_no_job(spark, tmp_path):
+    job = _ladder(spark, tmp_path, n=20)
+    sc = spark.sparkContext
+    group = f"plan-{tmp_path.name}"
+    sc.setJobGroup(group, "planning router reads")
+    try:
+        end = T0_MS + DAY_MS
+        frames = [
+            job.read_tier_range("1h", T0_MS, end),
+            aggregate_range(job, T0_MS, end, 6 * 3600)[1],
+            route_range_tiered(job, T0_MS, end, 60)[1],
+            quantile_range(job, T0_MS, end, 3600),
+            route_points(job, T0_MS, T0_MS + 600_000),
+        ]
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert all(len(df.collect()) > 0 for df in frames)
+        assert sc.statusTracker().getJobIdsForGroup(group)  # counter works
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_digit_source_names_stay_strings(spark, tmp_path):
+    inp = str(tmp_path / "seq")
+    pdf = gen_pandas(0, 30)
+    pdf["source"] = np.where(np.arange(len(pdf)) % 2, "010", "007")
+    spark.createDataFrame(pdf).write.parquet(inp)
+    job = LadderJob(spark, inp, str(tmp_path / "out"), CFG)
+    job.run()
+    got = {r[0] for r in job.read_output().select("source").distinct().collect()}
+    assert got == {"007", "010"}
+    _, agg = aggregate_range(job, T0_MS, T0_MS + DAY_MS, 6 * 3600, ["007"])
+    rows = agg.select("source").collect()
+    assert rows and {r[0] for r in rows} == {"007"}
+
+
+def test_table_without_data_files_reads_empty(spark, tmp_path):
+    """Before the first run, and after retention dropped every
+    partition, the table has no data file to infer a schema from."""
+    inp = str(tmp_path / "seq")
+    spark.createDataFrame(gen_pandas(0, 10)).write.parquet(inp)
+    fresh = LadderJob(spark, inp, str(tmp_path / "fresh"), CFG)
+    drained = LadderJob(spark, inp, str(tmp_path / "drained"), CFG)
+    drained.run()
+    drained.maintain(
+        RetentionPolicy({t: 0 for t in ("raw", "1m", "1h", "1d")}),
+        now_ms=T0_MS + 400 * DAY_MS,
+    )
+    schema = tier_table_schema(CFG)
+    for job in (fresh, drained):
+        assert job.read_output().schema == schema
+        assert job.read_output().count() == 0
+        _, agg = aggregate_range(job, T0_MS, T0_MS + DAY_MS, 6 * 3600)
+        assert agg.count() == 0
+        plan, df = route_range_tiered(job, T0_MS, T0_MS + DAY_MS, 3600)
+        assert plan == {} and df.schema == schema and df.count() == 0

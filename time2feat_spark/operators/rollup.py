@@ -43,10 +43,12 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from ..functions.kernels import ROLLUP_FEATURES, window_stats
@@ -285,6 +287,36 @@ def assemble(flat_df: DataFrame, cfg: RollupConfig | None = None) -> DataFrame:
         "ts_gorilla",
         "val_gorilla",
         "fill_method",
+    )
+
+
+def tier_table_schema(cfg: RollupConfig | None = None) -> StructType:
+    """Read schema of a stored tier table: ``assemble``'s columns with
+    ``source`` and ``tier`` moved to the partition columns
+    ``source, tier, window_day`` (the ``source=*/tier=*/window_day=*``
+    layout). Built from ``cfg`` alone, with no Spark call, so a reader
+    that passes it plans without opening a footer; it equals what Spark
+    infers for that layout, except that ``source`` stays a string when
+    every source name is made of digits."""
+    cfg = cfg or RollupConfig()
+    feat = StructType([StructField(nm, DoubleType()) for nm in cfg.features])
+    return StructType(
+        [
+            StructField("doc_id", StringType()),
+            StructField("window_start", TimestampType()),
+            StructField("count", LongType()),
+        ]
+        + [StructField(c, DoubleType()) for c in _STAT_COLS]
+        + [StructField("feat", feat)]
+        + [
+            StructField(c, _COL_TYPES[c])
+            for c in ("ts_gorilla", "val_gorilla", "fill_method")
+        ]
+        + [
+            StructField("source", StringType()),
+            StructField("tier", StringType()),
+            StructField("window_day", IntegerType()),
+        ]
     )
 
 

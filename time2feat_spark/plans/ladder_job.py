@@ -41,7 +41,12 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..operators.rollup import RollupConfig, assemble, rollup_sequences
+from ..operators.rollup import (
+    RollupConfig,
+    assemble,
+    rollup_sequences,
+    tier_table_schema,
+)
 from .checkpoint import Manifest, UnitRecord, snapshot_id
 
 
@@ -191,8 +196,16 @@ class LadderJob:
         return {"retention": ret, "compaction": comp}
 
     def read_output(self) -> DataFrame:
-        return self.spark.read.option("basePath", self.out_root).parquet(
-            self.out_root
+        """The whole tier table, read with the schema declared by
+        ``tier_table_schema(self.cfg)``, not inferred from the files:
+        planning the read opens no parquet footer and launches no Spark
+        job, a digit-only source name stays a string, and a table with
+        no data files yet (before the first run, or after retention
+        dropped every partition) reads as 0 rows of that schema."""
+        return (
+            self.spark.read.schema(tier_table_schema(self.cfg))
+            .option("basePath", self.out_root)
+            .parquet(self.out_root)
         )
 
     def read_tier_range(
@@ -208,7 +221,9 @@ class LadderJob:
         listing at planning time — days outside the range are never
         opened; at 100 TB this is the difference between reading two
         days and scanning a year) and once exactly on window_start.
-        `sources` adds source-partition pruning the same way."""
+        `sources` adds source-partition pruning the same way. The read
+        is ``read_output``'s, so its schema is declared, not inferred,
+        and building this DataFrame launches no Spark job."""
         lo_day = start_ms // 86_400_000
         hi_day = (end_ms - 1) // 86_400_000
         df = self.read_output().where(

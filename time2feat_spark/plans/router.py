@@ -21,6 +21,8 @@ a raw-table scan.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.rollup import RollupConfig, tier_points
@@ -98,7 +100,8 @@ def route_range_tiered(
     old days degrade to coarser windows instead of disappearing, exactly
     the zoomed-out view a dashboard shows for old data. Returns
     ({day: tier} plan, windows DataFrame with its `tier` column); days
-    with no surviving tier are simply absent. Each per-tier read is a
+    with no surviving tier are simply absent, and an empty plan returns
+    0 rows of the table's declared schema. Each per-tier read is a
     window_day-pruned `read_tier_range`."""
     cfg = cfg or job.cfg
     preferred = choose_tier(cfg, resolution_sec)
@@ -117,20 +120,13 @@ def route_range_tiered(
             if day in have[t]:
                 plan[day] = t
                 break
-    parts = []
-    for t in sorted(set(plan.values())):
-        days = [d for d, pt in plan.items() if pt == t]
-        part = job.read_tier_range(t, start_ms, end_ms, sources).where(
-            F.col("window_day").isin(days)
+    parts = [
+        job.read_tier_range(t, start_ms, end_ms, sources).where(
+            F.col("window_day").isin([d for d, pt in plan.items() if pt == t])
         )
-        parts.append(part)
-    if not parts:
-        empty = job.read_output().where(F.lit(False))
-        return plan, empty
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return plan, df
+        for t in sorted(set(plan.values()))
+    ] or [job.read_output().where(F.lit(False))]
+    return plan, reduce(DataFrame.unionByName, parts)
 
 
 def choose_divisor_tier(cfg: RollupConfig, resolution_sec: int) -> str | None:
