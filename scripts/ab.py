@@ -2,16 +2,15 @@
 """Interleaved A/B of the rollup-engine benchmark: a git revision against
 the working tree.
 
-    python3 scripts/ab.py --rev HEAD --seeds 1-10 --out ab.jsonl
-    python3 scripts/ab.py --report ab.jsonl        # summary of saved runs
+    python3 scripts/ab.py --rev HEAD --seeds 1-10 [--trace 1]
 
 The revision is exported with ``git archive`` into a temporary directory
 (no worktree, nothing written under ``.git``). For every seed and
-workload, ``perfbench/run.py`` runs once in that export (``base``) and
-once in the working tree (``head``), one after the other; odd-numbered
-pairs run ``base`` first and even-numbered pairs ``head`` first, so
-drift on the machine does not always favour the same side. Each result
-line is appended to ``--out`` as soon as it is known.
+every workload of ``BENCHMARK.json``, ``perfbench/run.py`` runs for the
+benchmark's ``run_seconds`` once in that export (``base``) and once in
+the working tree (``head``), one after the other; odd-numbered pairs
+run ``base`` first and even-numbered pairs ``head`` first, so drift on
+the machine does not always favour the same side.
 
 For each workload and metric the summary prints each side's median and
 quartiles, the pairs ``head`` won (ties count for neither side, the
@@ -35,7 +34,8 @@ import tempfile
 from collections import defaultdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKLOADS = ("long_series", "event_points")
+with open(os.path.join(ROOT, "BENCHMARK.json")) as _f:
+    BENCH = json.load(_f)
 
 
 def parse_seeds(text: str) -> list[int]:
@@ -53,10 +53,10 @@ def export(rev: str, dest: str) -> None:
         t.extractall(dest, filter="data")
 
 
-def run_one(tree: str, workload: str, seed: int, seconds: float,
-            trace: int) -> dict:
+def run_one(tree: str, workload: str, seed: int, trace: int) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+           "--seed", str(seed), "--seconds", str(BENCH["run_seconds"]),
+           "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True,
                        timeout=1800)
     lines = p.stdout.strip().splitlines()
@@ -67,13 +67,6 @@ def run_one(tree: str, workload: str, seed: int, seconds: float,
         return {"correct": False, "attempted": 0, "failed": 0, "metrics": {}}
 
 
-def better_of() -> dict[str, str]:
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        bench = json.load(f)
-    return {m["name"]: m["better"]
-            for m in bench["end_to_end"] + bench["per_layer"]}
-
-
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
@@ -82,7 +75,8 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 
 def report(rows: list[dict]) -> None:
-    better = better_of()
+    better = {m["name"]: m["better"]
+              for m in BENCH["end_to_end"] + BENCH["per_layer"]}
     by = defaultdict(dict)  # (workload, seed) -> side -> result
     for r in rows:
         by[(r["workload"], r["seed"])][r["side"]] = r["result"]
@@ -119,19 +113,9 @@ def report(rows: list[dict]) -> None:
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--rev", default="HEAD", help="base revision")
-    p.add_argument("--workloads", nargs="+", choices=WORKLOADS,
-                   default=list(WORKLOADS))
     p.add_argument("--seeds", default="1-10", help="e.g. 1-10 or 1,3,5")
-    p.add_argument("--seconds", type=float, default=3)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--out", help="append each result line to this JSONL file")
-    p.add_argument("--report", help="only summarise this saved JSONL file")
     args = p.parse_args(argv)
-
-    if args.report:
-        with open(args.report) as f:
-            report([json.loads(line) for line in f if line.strip()])
-        return 0
 
     base = tempfile.mkdtemp(prefix="ab-base-")
     rows: list[dict] = []
@@ -140,19 +124,14 @@ def main(argv=None) -> int:
         trees = {"base": base, "head": ROOT}
         for i, seed in enumerate(parse_seeds(args.seeds)):
             order = ("base", "head") if i % 2 == 0 else ("head", "base")
-            for workload in args.workloads:
+            for workload in (w["name"] for w in BENCH["workloads"]):
                 for side in order:
-                    res = run_one(trees[side], workload, seed, args.seconds,
-                                  args.trace)
-                    row = {"workload": workload, "seed": seed, "side": side,
-                           "rev": args.rev, "trace": args.trace, "result": res}
-                    rows.append(row)
+                    res = run_one(trees[side], workload, seed, args.trace)
+                    rows.append({"workload": workload, "seed": seed,
+                                 "side": side, "result": res})
                     print(f"ab: {workload} seed={seed} {side} "
                           f"correct={res['correct']}", file=sys.stderr,
                           flush=True)
-                    if args.out:
-                        with open(args.out, "a") as f:
-                            f.write(json.dumps(row) + "\n")
     finally:
         shutil.rmtree(base, ignore_errors=True)
     report(rows)

@@ -23,9 +23,10 @@ from time2feat_spark.operators.rollup import (
     tier_table_schema,
 )
 from time2feat_spark.plans.ladder_job import LadderJob
-from time2feat_spark.plans.retention import RetentionPolicy
+from time2feat_spark.plans.retention import RetentionPolicy, enforce_retention
 from time2feat_spark.plans.router import (
     aggregate_range,
+    available_days,
     choose_tier,
     quantile_range,
     route_points,
@@ -264,6 +265,56 @@ def test_declared_schema_equals_inferred(spark, tmp_path, layout, cfg):
     inferred = spark.read.option("basePath", out).parquet(out).schema
     assert tier_table_schema(cfg) == inferred
     assert LadderJob(spark, "", out, cfg).read_output().schema == inferred
+
+
+def test_read_follows_cfg_features(spark, tmp_path):
+    """``feat`` is read as ``cfg.features`` declares it, not as stored,
+    so a table must be read with the config it was written with: read
+    with a longer list, the features its files lack come back null."""
+    inp, out = str(tmp_path / "seq"), str(tmp_path / "out")
+    spark.createDataFrame(gen_pandas(0, 12)).write.parquet(inp)
+    LadderJob(spark, inp, out, SHORT).run()
+    stored = LadderJob(spark, "", out, SHORT).read_output()
+    wide = LadderJob(spark, "", out, CFG).read_output()
+    assert wide.schema["feat"].dataType.names == CFG.features
+    key = ["source", "doc_id", "tier", "window_start"]
+    got = wide.select(*key, "feat.*").toPandas()
+    assert len(got) == stored.count() > 0
+    missing = [nm for nm in CFG.features if nm not in SHORT.features]
+    assert got[missing].isna().all().all()
+    want = stored.select(*key, "feat.*").toPandas()
+    both = want.merge(got, on=key, suffixes=("", "_wide"))
+    assert len(both) == len(want)
+    for nm in SHORT.features:
+        assert np.allclose(both[nm], both[f"{nm}_wide"], equal_nan=True), nm
+
+
+def test_route_range_tiered_is_one_pruned_scan(spark, tmp_path):
+    """A plan that mixes tiers is still one scan of the table, pruned to
+    the planned (tier, window_day) partitions."""
+    inp = str(tmp_path / "seq")
+    spark.createDataFrame(gen_pandas(0, 20)).write.parquet(inp)
+    cfg = RollupConfig(tiers=[("1h", 3600), ("1d", 86400)], include_raw=False,
+                       tick_ms=600_000, features=["variance"])  # 10-min ticks
+    job = LadderJob(spark, inp, str(tmp_path / "out"), cfg)
+    job.run()
+    days = sorted(available_days(job, "1h"))
+    enforce_retention(job.out_root, RetentionPolicy({"1h": 1, "1d": None}),
+                      (days[1] + 1) * DAY_MS)
+    start, end = days[0] * DAY_MS, (days[-1] + 1) * DAY_MS
+    plan, df = route_range_tiered(job, start, end, 3600)
+    assert set(plan.values()) == {"1h", "1d"}, plan
+    scans = [ln for ln in df._jdf.queryExecution().executedPlan().toString()
+             .splitlines() if "FileScan" in ln]
+    assert len(scans) == 1 and "PartitionFilters" in scans[0], scans
+    pruned = scans[0].split("PartitionFilters")[1].split("PushedFilters")[0]
+    assert "tier" in pruned and "window_day" in pruned and " OR " in pruned
+    got = df.toPandas()
+    for t in ("1h", "1d"):
+        tdays = [d for d, pt in plan.items() if pt == t]
+        want = job.read_tier_range(t, start, end).where(
+            F.col("window_day").isin(tdays)).toPandas()
+        assert len(got[got.tier == t]) == len(want) > 0, t
 
 
 def test_planning_router_reads_launches_no_job(spark, tmp_path):

@@ -267,26 +267,47 @@ def rollup_sequences(df: DataFrame, cfg: RollupConfig | None = None) -> DataFram
     return df.mapInPandas(run, schema)
 
 
+def _assembled_fields(cfg: RollupConfig) -> list[StructField]:
+    """``assemble``'s columns, in order, with the types they are stored
+    with: the one place the tier table's column layout is decided."""
+    feat = StructType([StructField(nm, DoubleType()) for nm in cfg.features])
+    return (
+        [
+            StructField("source", StringType()),
+            StructField("doc_id", StringType()),
+            StructField("tier", StringType()),
+            StructField("window_start", TimestampType()),
+            StructField("count", LongType()),
+        ]
+        + [StructField(c, DoubleType()) for c in _STAT_COLS]
+        + [StructField("feat", feat)]
+        + [
+            StructField(c, _COL_TYPES[c])
+            for c in ("ts_gorilla", "val_gorilla", "fill_method")
+        ]
+    )
+
+
+#: partition columns of the stored ``source=*/tier=*/window_day=*`` layout
+_PARTITION_FIELDS = [
+    StructField("source", StringType()),
+    StructField("tier", StringType()),
+    StructField("window_day", IntegerType()),
+]
+
+
 def assemble(flat_df: DataFrame, cfg: RollupConfig | None = None) -> DataFrame:
     """Flat tier frame -> FIXTURES.md F4 schema (feat struct + timestamp)."""
     cfg = cfg or RollupConfig()
-    feat = F.struct(
-        *[F.col(f"feat_{nm}").alias(nm) for nm in cfg.features]
-    ).alias("feat")
+    derived = {
+        "window_start": F.timestamp_millis(F.col("window_start_ms")),
+        "feat": F.struct(*[F.col(f"feat_{nm}").alias(nm) for nm in cfg.features]),
+    }
     return flat_df.select(
-        "source",
-        "doc_id",
-        "tier",
-        F.timestamp_millis(F.col("window_start_ms")).alias("window_start"),
-        "count",
-        "sum",
-        "min",
-        "max",
-        "mean",
-        feat,
-        "ts_gorilla",
-        "val_gorilla",
-        "fill_method",
+        *[
+            derived[f.name].alias(f.name) if f.name in derived else f.name
+            for f in _assembled_fields(cfg)
+        ]
     )
 
 
@@ -297,26 +318,15 @@ def tier_table_schema(cfg: RollupConfig | None = None) -> StructType:
     layout). Built from ``cfg`` alone, with no Spark call, so a reader
     that passes it plans without opening a footer; it equals what Spark
     infers for that layout, except that ``source`` stays a string when
-    every source name is made of digits."""
+    every source name is made of digits. The ``feat`` struct follows
+    ``cfg.features``, so the table must be read with the config it was
+    written with: a feature the files lack reads as null, and a stored
+    one that ``cfg.features`` omits is not read."""
     cfg = cfg or RollupConfig()
-    feat = StructType([StructField(nm, DoubleType()) for nm in cfg.features])
+    keys = {f.name for f in _PARTITION_FIELDS}
     return StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("window_start", TimestampType()),
-            StructField("count", LongType()),
-        ]
-        + [StructField(c, DoubleType()) for c in _STAT_COLS]
-        + [StructField("feat", feat)]
-        + [
-            StructField(c, _COL_TYPES[c])
-            for c in ("ts_gorilla", "val_gorilla", "fill_method")
-        ]
-        + [
-            StructField("source", StringType()),
-            StructField("tier", StringType()),
-            StructField("window_day", IntegerType()),
-        ]
+        [f for f in _assembled_fields(cfg) if f.name not in keys]
+        + _PARTITION_FIELDS
     )
 
 

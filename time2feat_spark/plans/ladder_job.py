@@ -201,7 +201,10 @@ class LadderJob:
         planning the read opens no parquet footer and launches no Spark
         job, a digit-only source name stays a string, and a table with
         no data files yet (before the first run, or after retention
-        dropped every partition) reads as 0 rows of that schema."""
+        dropped every partition) reads as 0 rows of that schema. The
+        ``feat`` struct follows ``self.cfg.features``, so open the table
+        with the config it was written with: a feature its files lack
+        reads as null."""
         return (
             self.spark.read.schema(tier_table_schema(self.cfg))
             .option("basePath", self.out_root)

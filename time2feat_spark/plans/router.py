@@ -21,8 +21,6 @@ a raw-table scan.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.rollup import RollupConfig, tier_points
@@ -100,9 +98,11 @@ def route_range_tiered(
     old days degrade to coarser windows instead of disappearing, exactly
     the zoomed-out view a dashboard shows for old data. Returns
     ({day: tier} plan, windows DataFrame with its `tier` column); days
-    with no surviving tier are simply absent, and an empty plan returns
-    0 rows of the table's declared schema. Each per-tier read is a
-    window_day-pruned `read_tier_range`."""
+    with no surviving tier are simply absent. The windows are ONE read
+    of the table, pruned to the planned (tier, window_day) partitions
+    and filtered exactly on window_start, as `read_tier_range` does for
+    one tier; an empty plan prunes every partition and returns 0 rows
+    of the table's declared schema."""
     cfg = cfg or job.cfg
     preferred = choose_tier(cfg, resolution_sec)
     if preferred is None:
@@ -120,13 +120,18 @@ def route_range_tiered(
             if day in have[t]:
                 plan[day] = t
                 break
-    parts = [
-        job.read_tier_range(t, start_ms, end_ms, sources).where(
-            F.col("window_day").isin([d for d, pt in plan.items() if pt == t])
-        )
-        for t in sorted(set(plan.values()))
-    ] or [job.read_output().where(F.lit(False))]
-    return plan, reduce(DataFrame.unionByName, parts)
+    picked = F.lit(False)
+    for t in sorted(set(plan.values())):
+        days = [d for d, pt in plan.items() if pt == t]
+        picked = picked | ((F.col("tier") == t) & F.col("window_day").isin(days))
+    df = job.read_output().where(
+        picked
+        & (F.unix_millis("window_start") >= start_ms)
+        & (F.unix_millis("window_start") < end_ms)
+    )
+    if sources is not None:
+        df = df.where(F.col("source").isin(sources))
+    return plan, df
 
 
 def choose_divisor_tier(cfg: RollupConfig, resolution_sec: int) -> str | None:
