@@ -7,6 +7,8 @@ clustering quality on BasicMotions (report Table 2: AMI 1.0)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -22,6 +24,10 @@ from time2feat_spark.operators.selection import clean_features, pfa, top_k_featu
 from time2feat_spark.sources.ts_reader import bm_series_rows, read_ts
 
 BM_TRAIN = "/root/reference/data/BasicMotions/BasicMotions_TRAIN.txt"
+#: the reference checkout's fixture; the tests that read it skip without it
+needs_bm = pytest.mark.skipif(
+    not os.path.exists(BM_TRAIN), reason=f"missing {BM_TRAIN}"
+)
 
 
 @pytest.fixture(scope="module")
@@ -30,6 +36,7 @@ def bm(spark):
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
+@needs_bm
 def test_ts_reader_shape():
     cases, labels, header = read_ts(BM_TRAIN)
     assert len(cases) == 40
@@ -39,6 +46,7 @@ def test_ts_reader_shape():
     assert header["problemname"].lower().startswith("basicmotions")
 
 
+@needs_bm
 def test_intra_feature_extraction_width(spark, bm):
     feats = extract_series_features(bm, value_col="values").toPandas()
     assert len(feats) == 240  # 40 cases x 6 signals
@@ -49,6 +57,7 @@ def test_intra_feature_extraction_width(spark, bm):
     assert not feats[core].isna().any().any()
 
 
+@needs_bm
 def test_full_parity_width_matches_report_table3(spark, bm):
     """The FULL grid: 787 features per signal (report Table 3: BM S=6 ->
     6 x 787 = 4722 intra per case; +120 pair features elsewhere)."""
@@ -178,6 +187,7 @@ def test_grid_family_counts_match_derivation_note():
     assert sum(counts.values()) == 37 + 750 == 787
 
 
+@needs_bm
 def test_pair_feature_width_matches_report_table3(spark, bm):
     pairs = extract_pair_features(bm).toPandas()
     # 8 metrics x C(6,2)=15 pairs = 120 per case (report Table 3, row BM)
@@ -188,6 +198,7 @@ def test_pair_feature_width_matches_report_table3(spark, bm):
     assert np.isfinite(pairs.dist).all()
 
 
+@needs_bm
 def test_pair_distances_match_formulas(spark, bm):
     """Spot-check each metric against a direct formula evaluation."""
     pairs = extract_pair_features(bm).toPandas()
@@ -210,6 +221,7 @@ def test_pair_distances_match_formulas(spark, bm):
         assert r.dist == pytest.approx(want, rel=1e-12)
 
 
+@needs_bm
 def test_unsupervised_pipeline_clusters_basicmotions(spark, bm):
     """extract -> clean (P2-P4) -> PFA (0.9) -> KMeans k=4 -> AMI.
     The reference reports AMI 1.0 on BasicMotions (report.pdf Table 2)."""
@@ -255,6 +267,7 @@ def test_unsupervised_pipeline_clusters_basicmotions(spark, bm):
     assert ami(labels.to_numpy(), pred_pair) == pytest.approx(1.0)
 
 
+@needs_bm
 def test_supervised_topk_ranking(spark, bm):
     """T1: ANOVA-F ranking with labels — top features separate classes."""
     feats = extract_series_features(bm, value_col="values")

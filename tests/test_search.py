@@ -5,6 +5,8 @@ mode reports AMI ~1.0 on BM, report.pdf Table 2)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -15,6 +17,10 @@ from time2feat_spark.operators.search import rank_features, simple_grid_search
 from time2feat_spark.sources.ts_reader import bm_series_rows
 
 BM_TRAIN = "/root/reference/data/BasicMotions/BasicMotions_TRAIN.txt"
+#: the reference checkout's fixture; the tests that read it skip without it
+needs_bm = pytest.mark.skipif(
+    not os.path.exists(BM_TRAIN), reason=f"missing {BM_TRAIN}"
+)
 
 
 @pytest.fixture(scope="module")
@@ -34,6 +40,7 @@ def bm_features(spark):
     return wide, labels
 
 
+@needs_bm
 def test_grid_search_selects_discriminative_features(spark, bm_features):
     wide, labels = bm_features
     sdf = spark.createDataFrame(wide.reset_index().rename(columns={"case_id": "doc_id"}))
@@ -54,6 +61,7 @@ def test_grid_search_selects_discriminative_features(spark, bm_features):
     assert full_ami >= 0.7, f"AMI {full_ami}"
 
 
+@needs_bm
 def test_domain_mode_spreads_families(spark, bm_features):
     wide, labels = bm_features
     sdf = spark.createDataFrame(
@@ -72,6 +80,7 @@ def test_domain_mode_spreads_families(spark, bm_features):
     assert len(fams) >= 3  # spread across feature families
 
 
+@needs_bm
 def test_pvalue_mode_matches_f_ordering(spark, bm_features):
     """T2 sk_pvalue: p-asc ordering == F-desc ordering (monotone sf),
     and the p-values are genuine probabilities from the F distribution."""
@@ -109,6 +118,7 @@ def test_f_sf_golden_values():
     assert f_sf(5.8489, 2, 20) == pytest.approx(0.01, abs=2e-4)
 
 
+@needs_bm
 def test_spectral_clustering_on_bm(bm_features):
     """ClusterWrapper 'Spectral' parity (t2f/model/clustering.py:62):
     comparable quality to KMeans on the same feature block."""
@@ -122,6 +132,7 @@ def test_spectral_clustering_on_bm(bm_features):
     assert ami_s >= min(0.7, ami_k - 0.1), f"spectral {ami_s} vs kmeans {ami_k}"
 
 
+@needs_bm
 def test_mwu_relevance_modes(spark, bm_features):
     """'tsfresh'/'multi' strategies (Mann-Whitney relevance p-values):
     deterministic, probability-valued, and discriminative on BM."""

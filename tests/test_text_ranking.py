@@ -356,6 +356,21 @@ def test_hll_tier_cascade_equals_direct_registers(spark):
         assert got == want, name
 
 
+def test_hll_tier_rollup_rejects_tier_not_nested_in_previous(spark):
+    """Each tier must be a whole multiple of the tier before it: 3m is a
+    multiple of the finest 1m but not of 2m, so the cascade refuses it
+    instead of merging 2m windows that straddle 3m boundaries."""
+    from time2feat_spark.operators.approx import hll_tier_rollup
+
+    regs = spark.createDataFrame(
+        [("a", 0, 0, 1)], "key string, wms long, bucket int, m int"
+    )
+    with pytest.raises(ValueError, match="3m is not a multiple of 2m"):
+        hll_tier_rollup(
+            regs, ["key"], "wms", [("1m", 60), ("2m", 120), ("3m", 180)]
+        )
+
+
 def test_streaming_cms_cells_match_batch(spark, tmp_path):
     """Streamed per-window CMS cells == batch cms_build per window."""
     import pandas as pd

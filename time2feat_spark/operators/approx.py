@@ -6,9 +6,8 @@ state is opaque (no stable cross-engine definition, no partial you can
 persist next to tier tables), while a training-data pipeline wants
 distinct-user / distinct-token cardinalities maintained INCREMENTALLY
 alongside the rollup ladder — i.e. a register table you can merge with
-`max` per bucket, exactly like the sketch cascade in
-`operators/sketch_rollup.py` merges histograms (SURVEY.md §2.4
-"aggregations maintained under appends").
+`max` per bucket (SURVEY.md §2.4 "aggregations maintained under
+appends").
 
 Construction (Flajolet et al., "HyperLogLog: the analysis of a
 near-optimal cardinality estimation algorithm", AofA 2007):
@@ -33,13 +32,10 @@ Scale shape: one map-side-combinable groupBy to (keys, bucket) — 64
 rows per key regardless of input size — then a 64-row-per-key final
 agg. The partial (`hll_partial`) is a persistable register table;
 appending a day of data = partial over the new rows + `hll_merge` —
-no rescan of history. This is the sketch-cascade posture the tier
-ladder uses for quantiles, applied to cardinality.
+no rescan of history.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -164,11 +160,6 @@ SELECT {keys},
                    END, 7), 4) AS hll_estimate
 FROM agg
 """.strip()
-
-
-def hll_error_bound(m: int = M) -> float:
-    """Theoretical relative standard error 1.04/sqrt(m) (paper Thm 1)."""
-    return 1.04 / math.sqrt(m)
 
 
 # --------------------------------------------------------------------------
@@ -297,20 +288,25 @@ def hll_tier_rollup(
     bucket_col: str = "bucket",
 ) -> DataFrame:
     """Distinct-count continuous aggregate: per-window HLL registers at
-    every tier, where each coarser tier is built by MERGING the finest
-    tier's registers (groupBy + max) — the sketch-cascade posture of
-    `operators/sketch_rollup.py` applied to cardinality. Raw data is
+    every tier, where each coarser tier is built by MERGING the
+    registers of the tier before it (groupBy + max). Raw data is
     touched exactly once (the caller produces the finest-tier registers
     with `hll_partial` over `floor(ts / finest)` windows); every coarser
     tier costs O(finer windows x 64), never a raw rescan — the
     TimescaleDB "approximate count distinct continuous aggregate"
     feature, Spark-shaped.
 
+    Contract: `tiers_sec` runs fine to coarse and each tier must be a
+    whole multiple of the tier BEFORE it, not just of the finest
+    (1m -> 2m -> 3m is rejected: 3m is not a multiple of 2m); otherwise
+    the function raises `ValueError`.
+
     Correctness is EXACT, not approximate, at the register level:
     register max is associative and the tier grid is nested (each
-    coarser window is a whole number of finer windows), so cascaded
-    registers equal direct-from-raw registers bit-for-bit — pytest
-    asserts it and the driver oracle replays the 1h estimates from raw.
+    coarser window is a whole number of the previous tier's windows),
+    so cascaded registers equal direct-from-raw registers bit-for-bit —
+    pytest asserts it and the driver oracle replays the 1h estimates
+    from raw.
 
     Input: a register table (key_cols..., window_ms_col, bucket, m)
     at tiers_sec[0] resolution. Output: (tier, keys..., window_start_ms,

@@ -106,50 +106,6 @@ def _seeded(shingle_hashes: Column, seed: int) -> Column:
     )
 
 
-def minhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    num_perm: int = 64,
-    shingle_k: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """Add a `minhash` array<long> column: shingles hashed ONCE JVM-side
-    (xxhash64 transform), reduced by the vectorized OPH pass."""
-    sh = _seeded(_shingles(F.col(text_col), shingle_k), seed)
-    return df.withColumn("minhash", _oph_udf(num_perm)(sh))
-
-
-def minhash_lsh_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    bands: int = 8,
-    shingle_k: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """LSH banding: rows (band_id, band_hash, id). Docs sharing a
-    (band_id, band_hash) are near-dup candidates."""
-    assert num_perm % bands == 0
-    r = num_perm // bands
-    sig = minhash_signature(df, text_col, num_perm, shingle_k, seed)
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band_id"),
-                F.xxhash64(
-                    F.slice(F.col("minhash"), bi * r + 1, r).cast("string")
-                ).alias("band_hash"),
-            )
-            for bi in range(bands)
-        ]
-    )
-    return (
-        sig.select(F.col(id_col).alias("id"), F.explode(rows).alias("b"))
-        .select("id", "b.band_id", "b.band_hash")
-    )
-
-
 def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -341,11 +297,6 @@ def simhash(
         F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: tok_hash(t)
     )
     return df.withColumn("simhash", votes(toks))
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Popcount of a XOR b via bit_count (Spark 3.3+)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def near_duplicate_clusters(

@@ -219,10 +219,9 @@ def quantile_range(
     count per bucket) and runs Spark's exact percentile per bucket. The
     read is still window_day partition-pruned and touches only the
     compressed tier table, never a raw-table scan; decode cost is
-    O(points in range), the floor for any exact holistic answer. (The
-    approximate O(1)-per-window alternative is the sketch cascade,
-    operators/sketch_rollup.py.) Output: one row per
-    (source, doc_id, bucket_start_ms) with q_<pct> columns."""
+    O(points in range), the floor for any exact holistic answer.
+    Output: one row per (source, doc_id, bucket_start_ms) with q_<pct>
+    columns."""
     cfg = cfg or job.cfg
     res_ms = resolution_sec * 1000
     if start_ms % res_ms or end_ms % res_ms:
