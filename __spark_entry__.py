@@ -4,7 +4,8 @@
 sf0.001 events table. `queries()` exposes every implemented operator
 (engine rollups/gap-fill over events, the canonical sequences ladder,
 relational operators, dedup/text/similarity); `oracle_sql()` has the
-DuckDB-equivalent SQL for everything SQL-expressible.
+DuckDB-equivalent SQL for everything SQL-expressible. Both are derived
+from `_QUERIES` at the bottom of the file, one line per query.
 
 Conventions shared by both sides (so value hashes match):
 - every computed column is aliased identically;
@@ -21,6 +22,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from time2feat_spark.functions.rounding import round2
 from time2feat_spark.operators.rollup import (
     RollupConfig,
     assemble,
@@ -35,82 +37,11 @@ SEQ_CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
 SEQ_ROWS = {"sf0.001": 300, "sf0.01": 1500, "sf0.1": 15000}
 
 
-#: path|parallelism -> scan partition count. Pure PLANNING metadata of an
-#: immutable input file (never results): probing it costs a ~0.1 s
-#: Python->JVM RDD conversion, which dominates sub-second queries when
-#: paid on every call.
-_SCAN_PARTS: dict[str, int] = {}
-
-#: below this compressed input size a rebalance does not pay: the
-#: exchange's fixed cost (~0.2-0.3 s: shuffle round + 32-task stage)
-#: exceeds the single-task compute it parallelizes (measured at sf0.1,
-#: 0.6 MB documents: tfidf +0.86 s, bm25 +0.60 s WITH rebalance; at
-#: sf1.0, 5.7 MB: minhash -19 s WITHOUT it). Size-adaptive, not
-#: SF-specific — any input past a few MB of compressed text is worth
-#: spreading.
-_REBALANCE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_REBALANCE_MIN_BYTES", str(4 << 20))
-)
-
-
-def _t(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    balance: bool = False,
-    balance_min_bytes: int | None = None,
-) -> DataFrame:
-    """Read one sf table. ``balance=True`` rebalances a row-group-bound
-    narrow scan (see _rebalance_scan) — opt IN per query, because the
-    decision is about the QUERY's pre-shuffle compute, not the table:
-    shingling/tokenize/vector passes win 3-8x from it, while queries
-    whose first real operator is an aggregate exchange (one md5 + group,
-    hash-threshold splits, one regexp chain) only pay the extra exchange
-    (measured: dedup_exact 0.37 -> 0.90 s WITH a forced rebalance at
-    sf1.0, minhash_near_dups 23.6 -> 4.4 s)."""
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one sf table."""
     # window arithmetic and the DuckDB oracle both assume naive==UTC
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    min_bytes = (
-        _REBALANCE_MIN_BYTES if balance_min_bytes is None else balance_min_bytes
-    )
-    if balance and os.path.getsize(path) >= min_bytes:
-        df = _rebalance_scan(spark, df, path)
-    return df
-
-
-def _rebalance_scan(
-    spark: SparkSession, df: DataFrame, cache_key: str | None = None
-) -> DataFrame:
-    """Fix row-group-bound scan parallelism (optimization guide §2.5,
-    "one huge unsplittable file ... repartition immediately after the
-    read"). Spark assigns whole parquet row groups to splits, and the
-    driver's sf tables are written as a single row group per file — so
-    without this, EVERY pre-shuffle operator (tokenize/shingle/explode,
-    Arrow UDF passes, map-side partial aggregation) runs in ONE task no
-    matter how many cores the session has (measured: minhash_near_dups
-    23.6 s single-task vs 4.4 s rebalanced at sf1.0 on local[32]).
-
-    Scale-adaptive, not a local[32] constant: the target is the
-    session's defaultParallelism and the branch only fires when the scan
-    is NARROWER than that — a production-scale input with thousands of
-    row groups already scans wide and passes through untouched (no extra
-    exchange at 100 TB). Results are partitioning-independent: every
-    query either aggregates with order-independent arithmetic (integer
-    micro-sums, round_bin'd quotients of exact integer counts) or runs
-    the pow2-padded kernels that are bit-identical under any
-    partitioning (CLAUDE.md invariant)."""
-    target = spark.sparkContext.defaultParallelism
-    key = f"{cache_key}|{target}" if cache_key else None
-    nparts = _SCAN_PARTS.get(key) if key else None
-    if nparts is None:
-        nparts = df.rdd.getNumPartitions()
-        if key:
-            _SCAN_PARTS[key] = nparts
-    if nparts < target:
-        return df.repartition(target)
-    return df
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _ensure_sequences(sf_base: str) -> str:
@@ -141,29 +72,16 @@ def _nn(c):
     return F.when(F.isnan(c), F.lit(None)).otherwise(c)
 
 
-def _round_bin(c, d: int):
-    """Round like DuckDB/std::round — on the exact binary value:
-    sign(x) * floor(|x|*10^d + 0.5) / 10^d.
-
-    Spark's F.round instead rounds the shortest decimal representation
-    (BigDecimal.valueOf), which disagrees with DuckDB whenever the true
-    value ends exactly in ...5 — this expression is bit-identical to
-    DuckDB's round (verified on 900k adversarial values)."""
-    s = F.lit(float(10**d))
-    scaled = c * s
-    return F.floor(F.abs(scaled) + F.lit(0.5)) * F.signum(scaled) / s
-
-
 def _r4(c):
     """Double rounding: the inner round(7) collapses the two sides' floats
     onto one value when the true result sits exactly on a .00005 boundary
     (common with 2-decimal source data), so the outer round(4) agrees."""
-    return _round_bin(_round_bin(_nn(c), 7), 4)
+    return round2(_nn(c), 7, 4)
 
 
 def _r2(c):
     """Same trick for large sums: inner 5, outer 2."""
-    return _round_bin(_round_bin(_nn(c), 5), 2)
+    return round2(_nn(c), 5, 2)
 
 
 # --------------------------------------------------------------------------
@@ -941,7 +859,7 @@ FROM documents
 
 
 def q_embedding_topk(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings", balance=True)
+    emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -986,7 +904,9 @@ def q_minhash_near_dups(spark, sf_dir):
     ~1 (8 bands x 8 rows, threshold (1/8)^(1/8) = 0.77; every pair above
     0.5 in this corpus is a planted dup at j >= 0.93), so the LSH output
     equals the exact all-pairs answer the SQL computes."""
-    d = _t(spark, sf_dir, "documents", balance=True, balance_min_bytes=0)
+    d = _t(spark, sf_dir, "documents")
+    # one row group is one scan task; spread, 3.24 s falls to 2.15 s (sf0.1, local[4])
+    d = d.repartition(spark.sparkContext.defaultParallelism)
     return D.minhash_near_duplicates(d, min_jaccard=0.5)
 
 
@@ -1024,7 +944,9 @@ def q_dedup_clusters(spark, sf_dir):
     step between LSH pair generation and canonical-doc selection.
     Oracle: DuckDB recursive-CTE transitive closure over the same
     exact-Jaccard pair set."""
-    d = _t(spark, sf_dir, "documents", balance=True, balance_min_bytes=0)
+    d = _t(spark, sf_dir, "documents")
+    # one row group is one scan task; spread, 4.05 s falls to 3.14 s (sf0.1, local[4])
+    d = d.repartition(spark.sparkContext.defaultParallelism)
     pairs = D.minhash_near_duplicates(d, min_jaccard=0.5)
     return D.near_duplicate_clusters(pairs)
 
@@ -1947,7 +1869,7 @@ def q_heavy_hitters_tokens(spark, sf_dir):
     (tie-break: count desc, token asc)."""
     from time2feat_spark.operators.text import _words, heavy_hitters
 
-    d = _t(spark, sf_dir, "documents", balance=True)
+    d = _t(spark, sf_dir, "documents")
     toks = d.select(F.explode(_words(F.col("text"))).alias("tok"))
     return heavy_hitters(toks, "tok", 30)
 
@@ -2210,7 +2132,7 @@ def q_source_kl(spark, sf_dir):
     cross-engine equality."""
     from time2feat_spark.operators.text import source_kl_divergence
 
-    return source_kl_divergence(_t(spark, sf_dir, "documents", balance=True))
+    return source_kl_divergence(_t(spark, sf_dir, "documents"))
 
 
 SQL_SOURCE_KL = r"""
@@ -2241,7 +2163,7 @@ def q_pmi_collocations(spark, sf_dir):
     rounded score with lexicographic tie-break."""
     from time2feat_spark.operators.text import pmi_collocations
 
-    return pmi_collocations(_t(spark, sf_dir, "documents", balance=True), k=20, min_count=5)
+    return pmi_collocations(_t(spark, sf_dir, "documents"), k=20, min_count=5)
 
 
 SQL_PMI_COLLOCATIONS = r"""
@@ -2331,7 +2253,7 @@ def q_unigram_xent(spark, sf_dir):
     micro-scores so the tf-weighted sums are order-independent."""
     from time2feat_spark.operators.text import unigram_crossentropy
 
-    return unigram_crossentropy(_t(spark, sf_dir, "documents", balance=True))
+    return unigram_crossentropy(_t(spark, sf_dir, "documents"))
 
 
 SQL_UNIGRAM_XENT = r"""
@@ -2362,7 +2284,7 @@ def q_cms_token_estimates(spark, sf_dir):
     from time2feat_spark.operators.approx import cms_build, cms_lookup
     from time2feat_spark.operators.text import _words
 
-    d = _t(spark, sf_dir, "documents", balance=True)
+    d = _t(spark, sf_dir, "documents")
     toks = d.select(
         F.explode(_words(F.col("text"))).alias("tok")
     ).localCheckpoint(eager=True)  # feeds both the sketch and the truth
@@ -2636,7 +2558,7 @@ def q_tfidf_top_terms(spark, sf_dir):
     (ranked on the rounded score so both engines order identically)."""
     from time2feat_spark.operators.text import tfidf_top_terms
 
-    return tfidf_top_terms(_t(spark, sf_dir, "documents", balance=True), k=5)
+    return tfidf_top_terms(_t(spark, sf_dir, "documents"), k=5)
 
 
 SQL_TFIDF_TOP_TERMS = r"""
@@ -2666,7 +2588,7 @@ def q_bm25_dbterms(spark, sf_dir):
     float reduction order cannot differ between engines."""
     from time2feat_spark.operators.text import bm25_search
 
-    return bm25_search(_t(spark, sf_dir, "documents", balance=True), _BM25_TERMS, k=20)
+    return bm25_search(_t(spark, sf_dir, "documents"), _BM25_TERMS, k=20)
 
 
 def _sql_bm25_dbterms() -> str:
@@ -2791,158 +2713,97 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "rollup_1h_basic": q_rollup_1h_basic,
-        "rollup_1d_dispersion": q_rollup_1d_dispersion,
-        "rollup_1d_shape": q_rollup_1d_shape,
-        "rollup_1d_change": q_rollup_1d_change,
-        "rollup_1d_autocorr": q_rollup_1d_autocorr,
-        "rollup_1d_mean_counts": q_rollup_1d_mean_counts,
-        "rollup_1d_trend": q_rollup_1d_trend,
-        "rollup_1d_nonlinear": q_rollup_1d_nonlinear,
-        "asof_join": q_asof_join,
-        "sessionize": q_sessionize,
-        "gapfill_locf_1h": q_gapfill_locf_1h,
-        "gapfill_linear_1h": q_gapfill_linear_1h,
-        "seq_1m_basic": q_seq_1m_basic,
-        "seq_1h_energy": q_seq_1h_energy,
-        "pricing_summary": q_pricing_summary,
-        "revenue_by_nation": q_revenue_by_nation,
-        "customers_with_orders": q_customers_with_orders,
-        "customers_without_orders": q_customers_without_orders,
-        "union_order_slices": q_union_order_slices,
-        "top_orders": q_top_orders,
-        "order_rank_per_customer": q_order_rank_per_customer,
-        "column_profile": q_column_profile,
-        "zscore_by_type": q_zscore_by_type,
-        "distinct_counts": q_distinct_counts,
-        "dedup_exact": q_dedup_exact,
-        "dedup_resolve": q_dedup_resolve,
-        "dedup_clusters": q_dedup_clusters,
-        "token_topk": q_token_topk,
-        "token_counts": q_token_counts,
-        "text_quality": q_text_quality,
-        "quality_filter": q_quality_filter,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
-        "embedding_topk": q_embedding_topk,
-        "embedding_norms": q_embedding_norms,
-        "minhash_near_dups": q_minhash_near_dups,
-        "simhash": q_simhash,
-        "winnowing_fingerprints": q_winnowing_fingerprints,
-        "lsh_topk": q_lsh_topk,
-        "ivf_topk": q_ivf_topk,
-        "ivf_topk_at_rest": q_ivf_topk_at_rest,
-        "ladder_full": q_ladder_full,
-        "ladder_tier_counts": q_ladder_tier_counts,
-        "ladder_decode_roundtrip": q_ladder_decode_roundtrip,
-        "anova_f": q_anova_f,
-        "anova_pvalue_rank": q_anova_pvalue_rank,
-        "pair_distances": q_pair_distances,
-        "ngram_jaccard": q_ngram_jaccard,
-        "embedding_near_dups": q_embedding_near_dups,
-        "multimodal_features": q_multimodal_features,
-        "deterministic_split": q_deterministic_split,
-        "sample_per_group": q_sample_per_group,
-        "sample_fraction": q_sample_fraction,
-        "interval_join": q_interval_join,
-        "detect_gaps": q_detect_gaps,
-        "heavy_hitters_tokens": q_heavy_hitters_tokens,
-        "redact_pii": q_redact_pii,
-        "repetition_features": q_repetition_features,
-        "hll_distinct_users": q_hll_distinct_users,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "bm25_dbterms": q_bm25_dbterms,
-        "decontaminate": q_decontaminate,
-        "semantic_dedup": q_semantic_dedup,
-        "routed_aggregate_6h": q_routed_aggregate_6h,
-        "routed_quantile_2h": q_routed_quantile_2h,
-        "token_window_dups": q_token_window_dups,
-        "cms_token_estimates": q_cms_token_estimates,
-        "hll_tier_1h": q_hll_tier_1h,
-        "unigram_xent": q_unigram_xent,
-        "mixture_sample": q_mixture_sample,
-        "pmi_collocations": q_pmi_collocations,
-        "source_kl": q_source_kl,
-        "curation_pipeline": q_curation_pipeline,
-        "ppl_buckets": q_ppl_buckets,
-    }
+#: Every driver query, declared once: name -> (Spark builder, DuckDB
+#: oracle). The oracle is SQL text, None when the query has no SQL
+#: equivalent, or a callable that builds the SQL when oracle_sql() is
+#: called, never at import: those write the sequences cache, train the
+#: IVF centroids or read the mixture thresholds.
+_Builder = Callable[[SparkSession, str], DataFrame]
+_QUERIES: dict[str, tuple[_Builder, str | Callable[[], str] | None]] = {
+    "rollup_1h_basic": (q_rollup_1h_basic, SQL_ROLLUP_1H_BASIC),
+    "rollup_1d_dispersion": (q_rollup_1d_dispersion, SQL_ROLLUP_1D_DISPERSION),
+    "rollup_1d_shape": (q_rollup_1d_shape, SQL_ROLLUP_1D_SHAPE),
+    "rollup_1d_change": (q_rollup_1d_change, SQL_ROLLUP_1D_CHANGE),
+    "rollup_1d_autocorr": (q_rollup_1d_autocorr, SQL_ROLLUP_1D_AUTOCORR),
+    "rollup_1d_mean_counts": (q_rollup_1d_mean_counts, SQL_ROLLUP_1D_MEAN_COUNTS),
+    "rollup_1d_trend": (q_rollup_1d_trend, SQL_ROLLUP_1D_TREND),
+    "rollup_1d_nonlinear": (q_rollup_1d_nonlinear, SQL_ROLLUP_1D_NONLINEAR),
+    "asof_join": (q_asof_join, SQL_ASOF_JOIN),
+    "sessionize": (q_sessionize, SQL_SESSIONIZE),
+    "gapfill_locf_1h": (q_gapfill_locf_1h, SQL_GAPFILL_LOCF_1H),
+    "gapfill_linear_1h": (q_gapfill_linear_1h, SQL_GAPFILL_LINEAR_1H),
+    "seq_1m_basic": (q_seq_1m_basic, lambda: sql_seq_1m_basic("sf0.01")),
+    "seq_1h_energy": (q_seq_1h_energy, lambda: sql_seq_1h_energy("sf0.01")),
+    "pricing_summary": (q_pricing_summary, SQL_PRICING_SUMMARY),
+    "revenue_by_nation": (q_revenue_by_nation, SQL_REVENUE_BY_NATION),
+    "customers_with_orders": (q_customers_with_orders, SQL_CUSTOMERS_WITH_ORDERS),
+    "customers_without_orders": (q_customers_without_orders, SQL_CUSTOMERS_WITHOUT_ORDERS),
+    "union_order_slices": (q_union_order_slices, SQL_UNION_ORDER_SLICES),
+    "top_orders": (q_top_orders, SQL_TOP_ORDERS),
+    "order_rank_per_customer": (q_order_rank_per_customer, SQL_ORDER_RANK_PER_CUSTOMER),
+    "column_profile": (q_column_profile, SQL_COLUMN_PROFILE),
+    "zscore_by_type": (q_zscore_by_type, SQL_ZSCORE_BY_TYPE),
+    "distinct_counts": (q_distinct_counts, SQL_DISTINCT_COUNTS),
+    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
+    "dedup_resolve": (q_dedup_resolve, SQL_DEDUP_RESOLVE),
+    "dedup_clusters": (q_dedup_clusters, SQL_DEDUP_CLUSTERS),
+    "token_topk": (q_token_topk, lambda: sql_token_topk("sf0.01")),
+    "token_counts": (q_token_counts, SQL_TOKEN_COUNTS),
+    "text_quality": (q_text_quality, SQL_TEXT_QUALITY),
+    "quality_filter": (q_quality_filter, SQL_QUALITY_FILTER),
+    "lang_id": (q_lang_id, _sql_lang_id),
+    "fingerprint": (q_fingerprint, SQL_FINGERPRINT),
+    "embedding_topk": (q_embedding_topk, SQL_EMBEDDING_TOPK),
+    "embedding_norms": (q_embedding_norms, SQL_EMBEDDING_NORMS),
+    "minhash_near_dups": (q_minhash_near_dups, SQL_MINHASH_NEAR_DUPS),
+    "simhash": (q_simhash, SQL_SIMHASH),
+    "winnowing_fingerprints": (q_winnowing_fingerprints, SQL_WINNOWING),
+    "lsh_topk": (q_lsh_topk, _sql_lsh_topk),
+    "ivf_topk": (q_ivf_topk, _sql_ivf_topk),
+    "ivf_topk_at_rest": (q_ivf_topk_at_rest, _sql_ivf_topk),
+    "ladder_full": (q_ladder_full, None),
+    "ladder_tier_counts": (q_ladder_tier_counts, lambda: sql_ladder_tier_counts("sf0.01")),
+    "ladder_decode_roundtrip": (q_ladder_decode_roundtrip, lambda: sql_ladder_decode_roundtrip("sf0.01")),
+    "anova_f": (q_anova_f, SQL_ANOVA_F),
+    "anova_pvalue_rank": (q_anova_pvalue_rank, SQL_ANOVA_PVALUE_RANK),
+    "pair_distances": (q_pair_distances, SQL_PAIR_DISTANCES),
+    "ngram_jaccard": (q_ngram_jaccard, SQL_NGRAM_JACCARD),
+    "embedding_near_dups": (q_embedding_near_dups, SQL_EMBEDDING_NEAR_DUPS),
+    "multimodal_features": (q_multimodal_features, SQL_MULTIMODAL_FEATURES),
+    "deterministic_split": (q_deterministic_split, SQL_DETERMINISTIC_SPLIT),
+    "sample_per_group": (q_sample_per_group, SQL_SAMPLE_PER_GROUP),
+    "sample_fraction": (q_sample_fraction, SQL_SAMPLE_FRACTION),
+    "interval_join": (q_interval_join, SQL_INTERVAL_JOIN),
+    "detect_gaps": (q_detect_gaps, SQL_DETECT_GAPS),
+    "heavy_hitters_tokens": (q_heavy_hitters_tokens, SQL_HEAVY_HITTERS_TOKENS),
+    "redact_pii": (q_redact_pii, _sql_redact_pii),
+    "repetition_features": (q_repetition_features, SQL_REPETITION_FEATURES),
+    "hll_distinct_users": (q_hll_distinct_users, _sql_hll_distinct_users),
+    "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
+    "bm25_dbterms": (q_bm25_dbterms, _sql_bm25_dbterms),
+    "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
+    "semantic_dedup": (q_semantic_dedup, _sql_semantic_dedup),
+    "routed_aggregate_6h": (q_routed_aggregate_6h, lambda: sql_routed_aggregate_6h("sf0.01")),
+    "routed_quantile_2h": (q_routed_quantile_2h, lambda: sql_routed_quantile_2h("sf0.01")),
+    "token_window_dups": (q_token_window_dups, lambda: sql_token_window_dups("sf0.01")),
+    "cms_token_estimates": (q_cms_token_estimates, SQL_CMS_TOKEN_ESTIMATES),
+    "hll_tier_1h": (q_hll_tier_1h, _sql_hll_tier_1h),
+    "unigram_xent": (q_unigram_xent, SQL_UNIGRAM_XENT),
+    "mixture_sample": (q_mixture_sample, _sql_mixture_sample),
+    "pmi_collocations": (q_pmi_collocations, SQL_PMI_COLLOCATIONS),
+    "source_kl": (q_source_kl, SQL_SOURCE_KL),
+    "curation_pipeline": (q_curation_pipeline, _sql_curation_pipeline),
+    "ppl_buckets": (q_ppl_buckets, _sql_ppl_buckets),
+}
+
+
+def queries() -> dict[str, _Builder]:
+    return {name: build for name, (build, _) in _QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "rollup_1h_basic": SQL_ROLLUP_1H_BASIC,
-        "rollup_1d_dispersion": SQL_ROLLUP_1D_DISPERSION,
-        "rollup_1d_shape": SQL_ROLLUP_1D_SHAPE,
-        "rollup_1d_change": SQL_ROLLUP_1D_CHANGE,
-        "rollup_1d_autocorr": SQL_ROLLUP_1D_AUTOCORR,
-        "rollup_1d_mean_counts": SQL_ROLLUP_1D_MEAN_COUNTS,
-        "rollup_1d_trend": SQL_ROLLUP_1D_TREND,
-        "rollup_1d_nonlinear": SQL_ROLLUP_1D_NONLINEAR,
-        "asof_join": SQL_ASOF_JOIN,
-        "sessionize": SQL_SESSIONIZE,
-        "gapfill_locf_1h": SQL_GAPFILL_LOCF_1H,
-        "gapfill_linear_1h": SQL_GAPFILL_LINEAR_1H,
-        "seq_1m_basic": sql_seq_1m_basic("sf0.01"),
-        "seq_1h_energy": sql_seq_1h_energy("sf0.01"),
-        "pricing_summary": SQL_PRICING_SUMMARY,
-        "revenue_by_nation": SQL_REVENUE_BY_NATION,
-        "customers_with_orders": SQL_CUSTOMERS_WITH_ORDERS,
-        "customers_without_orders": SQL_CUSTOMERS_WITHOUT_ORDERS,
-        "union_order_slices": SQL_UNION_ORDER_SLICES,
-        "top_orders": SQL_TOP_ORDERS,
-        "order_rank_per_customer": SQL_ORDER_RANK_PER_CUSTOMER,
-        "column_profile": SQL_COLUMN_PROFILE,
-        "zscore_by_type": SQL_ZSCORE_BY_TYPE,
-        "distinct_counts": SQL_DISTINCT_COUNTS,
-        "dedup_exact": SQL_DEDUP_EXACT,
-        "dedup_resolve": SQL_DEDUP_RESOLVE,
-        "dedup_clusters": SQL_DEDUP_CLUSTERS,
-        "token_topk": sql_token_topk("sf0.01"),
-        "token_counts": SQL_TOKEN_COUNTS,
-        "text_quality": SQL_TEXT_QUALITY,
-        "quality_filter": SQL_QUALITY_FILTER,
-        "lang_id": _sql_lang_id(),
-        "fingerprint": SQL_FINGERPRINT,
-        "embedding_topk": SQL_EMBEDDING_TOPK,
-        "embedding_norms": SQL_EMBEDDING_NORMS,
-        "lsh_topk": _sql_lsh_topk(),
-        "ivf_topk": _sql_ivf_topk(),
-        "ivf_topk_at_rest": _sql_ivf_topk(),
-        "anova_f": SQL_ANOVA_F,
-        "anova_pvalue_rank": SQL_ANOVA_PVALUE_RANK,
-        "pair_distances": SQL_PAIR_DISTANCES,
-        "minhash_near_dups": SQL_MINHASH_NEAR_DUPS,
-        "ngram_jaccard": SQL_NGRAM_JACCARD,
-        "simhash": SQL_SIMHASH,
-        "winnowing_fingerprints": SQL_WINNOWING,
-        "embedding_near_dups": SQL_EMBEDDING_NEAR_DUPS,
-        "multimodal_features": SQL_MULTIMODAL_FEATURES,
-        "ladder_tier_counts": sql_ladder_tier_counts("sf0.01"),
-        "ladder_decode_roundtrip": sql_ladder_decode_roundtrip("sf0.01"),
-        "deterministic_split": SQL_DETERMINISTIC_SPLIT,
-        "sample_per_group": SQL_SAMPLE_PER_GROUP,
-        "sample_fraction": SQL_SAMPLE_FRACTION,
-        "interval_join": SQL_INTERVAL_JOIN,
-        "detect_gaps": SQL_DETECT_GAPS,
-        "heavy_hitters_tokens": SQL_HEAVY_HITTERS_TOKENS,
-        "redact_pii": _sql_redact_pii(),
-        "repetition_features": SQL_REPETITION_FEATURES,
-        "hll_distinct_users": _sql_hll_distinct_users(),
-        "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
-        "bm25_dbterms": _sql_bm25_dbterms(),
-        "decontaminate": SQL_DECONTAMINATE,
-        "semantic_dedup": _sql_semantic_dedup(),
-        "routed_aggregate_6h": sql_routed_aggregate_6h("sf0.01"),
-        "routed_quantile_2h": sql_routed_quantile_2h("sf0.01"),
-        "token_window_dups": sql_token_window_dups("sf0.01"),
-        "cms_token_estimates": SQL_CMS_TOKEN_ESTIMATES,
-        "hll_tier_1h": _sql_hll_tier_1h(),
-        "unigram_xent": SQL_UNIGRAM_XENT,
-        "mixture_sample": _sql_mixture_sample(),
-        "pmi_collocations": SQL_PMI_COLLOCATIONS,
-        "source_kl": SQL_SOURCE_KL,
-        "curation_pipeline": _sql_curation_pipeline(),
-        "ppl_buckets": _sql_ppl_buckets(),
+        name: sql if isinstance(sql, str) else sql()
+        for name, (_, sql) in _QUERIES.items()
+        if sql is not None
     }

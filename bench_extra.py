@@ -61,7 +61,7 @@ def main() -> None:
         print(f"{name:44s} min {min(walls):6.3f} "
               f"all {[round(w, 2) for w in walls]}", flush=True)
 
-    docs = lambda: E._t(spark, SF_DIR, "documents", balance=True)  # noqa: E731
+    docs = lambda: E._t(spark, SF_DIR, "documents")  # noqa: E731
     ev = lambda: E._t(spark, SF_DIR, "events")  # noqa: E731
     seq = lambda: spark.read.parquet(seq_path)  # noqa: E731
 

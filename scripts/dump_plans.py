@@ -3,9 +3,13 @@
 Usage:
     python scripts/dump_plans.py OUTDIR SUFFIX [query ...]
 
-Writes OUTDIR/<query>_<SUFFIX>.txt for each query (default: a fixed hot
-set). Plans are built (not executed) at $SPARK_GRAFT_SF_DIR (default
-sf0.1) — plan SHAPE is SF-independent; AQE runtime rewrites are noted in
+Writes OUTDIR/<query>_<SUFFIX>.txt for each named query (default: every
+query in queries()). Plans are built, not collected, at
+$SPARK_GRAFT_SF_DIR (default sf0.1); building some queries still runs
+Spark jobs (eager checkpoints, and the IVF layout and LadderJob tables
+cached under .cache/ on first use). No builder branches on input size
+(rollup_points widens its shuffle only past 256 MB of scan per task), so
+plan shape does not depend on sf; AQE runtime rewrites are noted in
 OPTIMIZATION_r06.md where they matter.
 """
 
@@ -19,31 +23,9 @@ from contextlib import redirect_stdout
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-DEFAULT_QUERIES = [
-    "minhash_near_dups",
-    "bm25_dbterms",
-    "pmi_collocations",
-    "tfidf_top_terms",
-    "token_window_dups",
-    "hll_tier_1h",
-    "rollup_1h_basic",
-    "gapfill_locf_1h",
-    "text_quality",
-    "heavy_hitters_tokens",
-    "unigram_xent",
-    "source_kl",
-    "cms_token_estimates",
-    "interval_join",
-    "embedding_topk",
-    "semantic_dedup",
-    "curation_pipeline",
-    "decontaminate",
-]
-
 
 def main() -> None:
     outdir, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:] or DEFAULT_QUERIES
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -56,7 +38,7 @@ def main() -> None:
         extra={"spark.ui.enabled": "false"},
     )
     qs = E.queries()
-    for name in names:
+    for name in sys.argv[3:] or qs:
         if name not in qs:
             print(f"skip {name}: not a declared query")
             continue

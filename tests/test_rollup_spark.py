@@ -146,10 +146,17 @@ def test_rollup_points_streaming_flush_invariance(spark):
     sdf = spark.createDataFrame(pdf)
 
     def run(num_partitions, flush_rows):
-        out = rollup_points(
-            sdf, ["key"], "ts", "value", cfg,
-            num_partitions=num_partitions, flush_rows=flush_rows,
-        ).toPandas()
+        # the input is far below _BYTES_PER_TASK, so the shuffle width is
+        # exactly spark.sql.shuffle.partitions
+        key = "spark.sql.shuffle.partitions"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(num_partitions))
+        try:
+            out = rollup_points(
+                sdf, ["key"], "ts", "value", cfg, flush_rows=flush_rows,
+            ).toPandas()
+        finally:
+            spark.conf.set(key, prev)
         return out.sort_values(
             ["key", "tier", "window_start_ms"]
         ).reset_index(drop=True)

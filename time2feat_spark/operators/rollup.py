@@ -448,7 +448,6 @@ def rollup_points(
     ts_col: str,
     val_col: str,
     cfg: RollupConfig | None = None,
-    num_partitions: int | None = None,
     flush_rows: int = 65_536,
 ) -> DataFrame:
     """Tier-ladder rollup over long-format points.
@@ -495,21 +494,20 @@ def rollup_points(
             F.unix_millis(F.col(ts_col).cast("timestamp")) / F.lit(coarsest_ms)
         ).cast("long"),
     )
-    if num_partitions is None:
-        default_p = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    default_p = int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    try:
+        size_bytes = int(
+            chunked._jdf.queryExecution()
+            .optimizedPlan()
+            .stats()
+            .sizeInBytes()
+            .toString()
         )
-        try:
-            size_bytes = int(
-                chunked._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-                .toString()
-            )
-        except Exception:
-            size_bytes = 0
-        num_partitions = max(default_p, -(-size_bytes // _BYTES_PER_TASK))
+    except Exception:
+        size_bytes = 0
+    num_partitions = max(default_p, -(-size_bytes // _BYTES_PER_TASK))
     group_cols = key_cols + ["_chunk"]
     parted = chunked.repartition(num_partitions, *group_cols)
     parted = parted.sortWithinPartitions(*group_cols)

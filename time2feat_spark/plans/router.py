@@ -10,7 +10,8 @@ automatic so zooming never needs query rewrites. Reference scope: the
 tier ladder (north_rule) exists exactly so reads can be answered from
 rollups; this module is the read-side dispatch over
 `LadderJob.read_tier_range` (window_day partition pruning on every
-path).
+path). Every route plans from `job.cfg`, the config the table was
+written with; no other config reads it correctly.
 
 Raw fidelity comes from the compressed store itself: when the request
 is finer than the finest windowed tier, the finest tier's Gorilla
@@ -54,16 +55,14 @@ def route_range(
     end_ms: int,
     resolution_sec: float,
     sources: list[str] | None = None,
-    cfg: RollupConfig | None = None,
 ) -> tuple[str, DataFrame]:
     """Windows of the coarsest sufficient tier for [start_ms, end_ms),
     day-partition-pruned. Returns (tier_name, DataFrame); tier_name is
     "points" when the request is finer than the finest windowed tier
     (the DataFrame is then decoded points: key cols + ts_ms + value)."""
-    cfg = cfg or job.cfg
-    tier = choose_tier(cfg, resolution_sec)
+    tier = choose_tier(job.cfg, resolution_sec)
     if tier is None:
-        return "points", route_points(job, start_ms, end_ms, sources, cfg)
+        return "points", route_points(job, start_ms, end_ms, sources)
     return tier, job.read_tier_range(tier, start_ms, end_ms, sources)
 
 
@@ -89,7 +88,6 @@ def route_range_tiered(
     end_ms: int,
     resolution_sec: float,
     sources: list[str] | None = None,
-    cfg: RollupConfig | None = None,
 ) -> tuple[dict, DataFrame]:
     """Retention-aware range read (data tiering): per window_day, read
     the PREFERRED tier (coarsest sufficient for the resolution) where it
@@ -103,13 +101,12 @@ def route_range_tiered(
     and filtered exactly on window_start, as `read_tier_range` does for
     one tier; an empty plan prunes every partition and returns 0 rows
     of the table's declared schema."""
-    cfg = cfg or job.cfg
-    preferred = choose_tier(cfg, resolution_sec)
+    preferred = choose_tier(job.cfg, resolution_sec)
     if preferred is None:
         raise ValueError(
             "resolution finer than every windowed tier — use route_points"
         )
-    ladder = [name for name, _ in windowed_tiers(cfg)]
+    ladder = [name for name, _ in windowed_tiers(job.cfg)]
     candidates = ladder[ladder.index(preferred):]  # preferred, then coarser
     have = {t: available_days(job, t, sources) for t in candidates}
     lo_day = start_ms // MS_PER_DAY
@@ -152,7 +149,6 @@ def aggregate_range(
     end_ms: int,
     resolution_sec: int,
     sources: list[str] | None = None,
-    cfg: RollupConfig | None = None,
 ):
     """Algebraic rollup of [start_ms, end_ms) onto a `resolution_sec`
     bucket grid, answered from the coarsest EVENLY-DIVIDING tier — the
@@ -163,16 +159,15 @@ def aggregate_range(
     day-pruned). start/end must sit on the bucket grid. Returns
     (source_tier_name, DataFrame) with one row per
     (source, doc_id, bucket_start) carrying count/sum/min/max/mean."""
-    cfg = cfg or job.cfg
     res_ms = resolution_sec * 1000
     if start_ms % res_ms or end_ms % res_ms:
         raise ValueError(
             f"start/end must be multiples of resolution ({res_ms} ms) so "
             f"buckets are whole; got start={start_ms}, end={end_ms}"
         )
-    tier = choose_divisor_tier(cfg, resolution_sec)
+    tier = choose_divisor_tier(job.cfg, resolution_sec)
     if tier is None:
-        pts = route_points(job, start_ms, end_ms, sources, cfg)
+        pts = route_points(job, start_ms, end_ms, sources)
         bucket = (F.floor(F.col("ts_ms") / F.lit(res_ms)) * res_ms).cast(
             "long"
         )
@@ -209,7 +204,6 @@ def quantile_range(
     resolution_sec: int,
     qs: tuple[float, ...] = (0.5, 0.95, 0.99),
     sources: list[str] | None = None,
-    cfg: RollupConfig | None = None,
 ) -> DataFrame:
     """EXACT quantiles of [start_ms, end_ms) on a `resolution_sec`
     bucket grid. Quantiles are holistic — they cannot be re-aggregated
@@ -222,16 +216,15 @@ def quantile_range(
     O(points in range), the floor for any exact holistic answer.
     Output: one row per (source, doc_id, bucket_start_ms) with q_<pct>
     columns."""
-    cfg = cfg or job.cfg
     res_ms = resolution_sec * 1000
     if start_ms % res_ms or end_ms % res_ms:
         raise ValueError(
             f"start/end must be multiples of resolution ({res_ms} ms); "
             f"got start={start_ms}, end={end_ms}"
         )
-    tier = choose_divisor_tier(cfg, resolution_sec)
+    tier = choose_divisor_tier(job.cfg, resolution_sec)
     if tier is None:
-        pts = route_points(job, start_ms, end_ms, sources, cfg)
+        pts = route_points(job, start_ms, end_ms, sources)
     else:
         w = job.read_tier_range(tier, start_ms, end_ms, sources)
         pts = tier_points(w, key_cols=["source", "doc_id"])
@@ -252,15 +245,13 @@ def route_points(
     start_ms: int,
     end_ms: int,
     sources: list[str] | None = None,
-    cfg: RollupConfig | None = None,
 ) -> DataFrame:
     """Exact raw points in [start_ms, end_ms) decoded from the FINEST
     windowed tier's Gorilla blocks. The day bound prunes partitions; the
     window bound is widened to whole windows of that tier (a point lives
     in exactly one window, so decoding the covering windows and
     filtering ts exactly loses nothing and reads no raw table)."""
-    cfg = cfg or job.cfg
-    name, sec = windowed_tiers(cfg)[0]
+    name, sec = windowed_tiers(job.cfg)[0]
     w_ms = sec * 1000
     lo = (start_ms // w_ms) * w_ms
     hi = -(-end_ms // w_ms) * w_ms
