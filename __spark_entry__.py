@@ -1240,7 +1240,7 @@ def q_ladder_full(spark, sf_dir):
 def q_ladder_decode_roundtrip(spark, sf_dir):
     """Compress -> decode roundtrip as a VALUE-exact oracle row: the 1h
     tier's Gorilla blocks for the first 100 docs, decoded back to points
-    via the batched SIMD-across-blocks decoder, must equal the original
+    via the flat cross-block decoder, must equal the original
     token stream (t0 + k*tick, token value) that plain SQL reproduces."""
     from time2feat_spark.operators.rollup import tier_points
 

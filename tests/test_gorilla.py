@@ -115,14 +115,18 @@ def test_val_roundtrip_property(vals):
 
 
 def test_batched_decoders_match_sequential_and_truth():
-    """decode_{ts,val}_blocks (SIMD-across-blocks) == the per-bit
-    reference decoders == the original data, over ragged blocks with
-    constants, NaNs, and every dod bucket incl. the 64-bit escape."""
+    """decode_{ts,val}_blocks and decode_{ts,val}_points (cross-block)
+    == the per-bit reference decoders == the original data, over ragged
+    blocks with constants, NaNs, and every dod bucket incl. the 64-bit
+    escape; once as generated and once with zero-count blocks
+    interleaved."""
     from time2feat_spark.functions.gorilla import (
         decode_ts_block,
         decode_ts_blocks,
+        decode_ts_points,
         decode_val_block,
         decode_val_blocks,
+        decode_val_points,
         encode_ts_blocks,
         encode_val_blocks,
     )
@@ -150,17 +154,28 @@ def test_batched_decoders_match_sequential_and_truth():
         counts.append(n)
         truth_v.append(v)
         truth_t.append(t)
-    counts = np.array(counts)
-    mv = decode_val_blocks(blocks_v, counts)
-    mt = decode_ts_blocks(blocks_t, counts)
-    for i, n in enumerate(counts):
-        g, w = mv[i, :n], truth_v[i]
-        assert ((np.isnan(g) & np.isnan(w)) | (g == w)).all(), f"val {i}"
-        assert (mt[i, :n] == truth_t[i]).all(), f"ts {i}"
-        if i % 17 == 0:
-            sv = decode_val_block(blocks_v[i], int(n))
-            assert ((np.isnan(sv) & np.isnan(w)) | (sv == w)).all()
-            assert (decode_ts_block(blocks_t[i], int(n)) == truth_t[i]).all()
+    rows = list(zip(blocks_v, blocks_t, counts, truth_v, truth_t))
+    # the same blocks with a zero-count block (of any bytes) after every 7th
+    empty = (blocks_v[0], b"", 0, truth_v[0][:0], truth_t[0][:0])
+    with_empty = [r for i, row in enumerate(rows)
+                  for r in ([row, empty] if i % 7 == 0 else [row])]
+    for batch in (rows, with_empty):
+        blocks_v, blocks_t, counts, truth_v, truth_t = zip(*batch)
+        counts = np.array(counts)
+        mv = decode_val_blocks(blocks_v, counts)
+        mt = decode_ts_blocks(blocks_t, counts)
+        for i, n in enumerate(counts):
+            g, w = mv[i, :n], truth_v[i]
+            assert ((np.isnan(g) & np.isnan(w)) | (g == w)).all(), f"val {i}"
+            assert (mt[i, :n] == truth_t[i]).all(), f"ts {i}"
+            if i % 17 == 0 and n:
+                sv = decode_val_block(blocks_v[i], int(n))
+                assert ((np.isnan(sv) & np.isnan(w)) | (sv == w)).all()
+                assert (decode_ts_block(blocks_t[i], int(n)) == truth_t[i]).all()
+        fv = decode_val_points(blocks_v, counts)
+        assert fv.view(np.uint64).tolist() == (
+            np.concatenate(truth_v).view(np.uint64).tolist())
+        assert (decode_ts_points(blocks_t, counts) == np.concatenate(truth_t)).all()
 
 
 def test_batched_decoders_honor_zero_count_padding():
@@ -187,3 +202,66 @@ def test_batched_decoders_honor_zero_count_padding():
     assert (mt[1] == 0).all()
     assert (mv[0] == v).all() and (mv[2] == v).all()
     assert (mt[0] == t).all() and (mt[2] == t).all()
+
+
+@pytest.mark.parametrize("stream", ["ts", "val"])
+@pytest.mark.parametrize("short", [0, 2, 5])
+def test_truncated_block_raises(stream, short):
+    """A block whose codes need more bits than it holds is named in a
+    ValueError, whether it is first, in the middle, or last in the
+    joined buffer (where its cursor would read the next block's bits or
+    run past the end)."""
+    from time2feat_spark.functions.gorilla import decode_ts_points, decode_val_points
+
+    rng = np.random.default_rng(4)
+    offs = np.array([0, 50, 100, 300, 400, 500])
+    if stream == "ts":
+        data = np.cumsum(rng.integers(1, 10**6, 500)).astype(np.int64)
+        blocks, decode = encode_ts_blocks(data, offs), decode_ts_points
+    else:
+        data = rng.standard_normal(500)
+        blocks, decode = encode_val_blocks(data, offs), decode_val_points
+    counts = np.diff(offs)
+    assert (decode(blocks, counts) == data).all()
+    for b in (0, 2, 4):
+        cut = list(blocks)
+        cut[b] = cut[b][: len(cut[b]) // 2 if short == 0 else -short]
+        with pytest.raises(ValueError, match=f"Gorilla block {b} "):
+            decode(cut, counts)
+
+
+def test_flat_decode_of_mixed_lengths_is_bounded():
+    """One 5,000-point block among 10^4 blocks of 60 points: the flat
+    decoders equal the per-block reference decoders, and their traced
+    peak memory stays linear in points + bytes. A (blocks x longest
+    block) layout needs a 400 MB matrix per stream here."""
+    import tracemalloc
+
+    from time2feat_spark.functions.gorilla import decode_ts_points, decode_val_points
+
+    rng = np.random.default_rng(9)
+    counts = np.full(10_001, 60)
+    counts[4_321] = 5_000
+    offs = np.concatenate(([0], np.cumsum(counts)))
+    n = int(offs[-1])
+    ts = np.cumsum(rng.choice([1000, 1000, 1000, 999, 1003, 70_000], n))
+    vals = np.round(np.cumsum(rng.standard_normal(n)), 2)
+    tb, vb = encode_ts_blocks(ts, offs), encode_val_blocks(vals, offs)
+    nbytes = sum(map(len, tb)) + sum(map(len, vb))
+
+    tracemalloc.start()
+    try:
+        got_t = decode_ts_points(tb, counts)
+        got_v = decode_val_points(vb, counts)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * n + 4 * nbytes, (peak, n, nbytes)
+
+    assert (got_t == ts).all()
+    assert (got_v.view(np.uint64) == vals.view(np.uint64)).all()
+    for b in [4_321, *range(0, 10_001, 997)]:
+        lo, hi = offs[b], offs[b + 1]
+        assert (got_t[lo:hi] == decode_ts_block(tb[b], int(counts[b]))).all()
+        assert (got_v[lo:hi].view(np.uint64)
+                == decode_val_block(vb[b], int(counts[b])).view(np.uint64)).all()

@@ -116,6 +116,27 @@ def test_route_points_matches_raw_tier_decode(spark, tmp_path):
     assert g.ts_ms.min() >= start and g.ts_ms.max() < end
 
 
+def test_tier_points_mixed_tiers_match_reference_decoders(spark, tmp_path):
+    """tier_points over every tier of a LadderJob table in one read,
+    coalesced so raw, 1m, 1h and 1d blocks share Arrow batches: row for
+    row, in order, the per-block reference decoders' points."""
+    from time2feat_spark.functions.gorilla import decode_ts_block, decode_val_block
+
+    full = _ladder(spark, tmp_path, n=20).read_output().coalesce(1)
+    keys = ["source", "tier", "doc_id", "window_start"]
+    rows = full.select(*keys, "count", "ts_gorilla", "val_gorilla").toPandas()
+    assert set(rows.tier) == {"raw", "1m", "1h", "1d"}
+    got = tier_points(full, key_cols=keys).toPandas()
+
+    counts = rows["count"].to_numpy()
+    want = pd.DataFrame({c: np.repeat(rows[c].to_numpy(), counts) for c in keys})
+    want["ts_ms"] = np.concatenate([
+        decode_ts_block(bytes(b), int(c)) for b, c in zip(rows.ts_gorilla, counts)])
+    want["value"] = np.concatenate([
+        decode_val_block(bytes(b), int(c)) for b, c in zip(rows.val_gorilla, counts)])
+    pd.testing.assert_frame_equal(got, want)
+
+
 def test_route_points_empty_range(spark, tmp_path):
     job = _ladder(spark, tmp_path, n=30)
     assert route_points(job, 0, 1000).count() == 0

@@ -31,8 +31,9 @@ global cumsum of bit offsets, each field contributes to at most two 64-bit
 output words, and contributions are merged with one bitwise_or.reduceat
 pass (fields arrive in stream order, so word indices are sorted) — no
 per-point or per-block Python in the encode path (north_rule: no per-row
-Python). The decoders are sequential bit readers used for verification and
-point queries over small result sets, not in the write hot path.
+Python). ``decode_ts_points`` / ``decode_val_points`` are the read path,
+vectorized across blocks (section "batched" below); ``decode_ts_block`` /
+``decode_val_block`` are per-bit reference readers for verification.
 """
 
 from __future__ import annotations
@@ -44,6 +45,8 @@ __all__ = [
     "encode_val_blocks",
     "decode_ts_block",
     "decode_val_block",
+    "decode_ts_points",
+    "decode_val_points",
     "decode_ts_blocks",
     "decode_val_blocks",
 ]
@@ -344,114 +347,107 @@ def decode_val_block(data: bytes, count: int) -> np.ndarray:
 
 
 # --------------------------------------------------------------- batched
-# SIMD-across-blocks decoders: one Python step per VALUE INDEX advances
-# every still-open block by one point with pure uint64 vector arithmetic
-# (the per-block codes are sequential by nature — the cross-block axis is
-# where the parallelism is). Used by point reads over tier tables; the
-# per-bit readers above stay as the independent verification oracle.
-
-def _blocks_to_words(blocks: list[bytes]) -> np.ndarray:
-    """(B, W) native-endian uint64 words, big-endian bit order within the
-    stream, + guard words so any in-bounds 64-bit window read is safe."""
-    b_count = len(blocks)
-    nbytes = np.fromiter((len(b) for b in blocks), np.int64, count=b_count)
-    max_b = int(nbytes.max()) if b_count else 0
-    w = -(-max_b // 8) + 3  # +2 guard words beyond any block's end
-    joined = np.frombuffer(b"".join(blocks), dtype=np.uint8)
-    offs = np.concatenate(([0], np.cumsum(nbytes)))
-    col = np.arange(w * 8)
-    mask = col[None, :] < nbytes[:, None]
-    idx = offs[:-1, None] + np.where(mask, col[None, :], 0)
-    buf = np.where(mask, joined[idx] if len(joined) else 0, 0).astype(np.uint8)
-    return buf.reshape(b_count, w, 8).view(">u8")[:, :, 0].astype(np.uint64)
-
+# Cross-block decoders: a block's codes are sequential, so the vector axis
+# is across blocks. All blocks sit in one joined word buffer, longest
+# first; step i advances only the prefix of blocks that have a point i and
+# writes each point straight into a flat output. Memory is O(points +
+# bytes) and vector work O(points) for any mix of block lengths.
 
 def _window64(words: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    """The 64 bits starting at bit offset `pos` of each block."""
-    wi = (pos >> _U64(6)).astype(np.int64)
+    """The 64 bits at bit offset `pos` of the joined stream (clipped, so a
+    corrupt block's cursor past the end reads garbage, caught later)."""
+    wi = (pos >> _U64(6)).astype(np.intp)
     sh = pos & _U64(63)
-    rows = np.arange(len(words))
-    w0 = words[rows, wi]
-    w1 = words[rows, wi + 1]
-    right = np.where(sh > 0, w1 >> ((_U64(64) - sh) & _U64(63)), _U64(0))
-    return (w0 << sh) | right
+    w1 = words.take(wi + 1, mode="clip")
+    return (words.take(wi, mode="clip") << sh) | ((w1 >> _U64(1)) >> (_U64(63) - sh))
+
+
+def _val_step(words, pos, state) -> np.ndarray:
+    """One XOR-coded value per block; state[0] = previous value bits."""
+    reg = _window64(words, pos)
+    is_xor = (reg >> _U64(63)).astype(bool)
+    lead = (reg >> _U64(57)) & _U64(31)
+    m6 = (reg >> _U64(51)) & _U64(63)
+    mlen = np.where(m6 == 0, _U64(64), m6)
+    meaningful = _window64(words, pos + _U64(13)) >> ((_U64(64) - m6) & _U64(63))
+    trail = _U64(64) - lead - mlen
+    state[0] ^= np.where(is_xor, meaningful << trail, _U64(0))
+    pos += np.where(is_xor, _U64(13) + mlen, _U64(1))
+    return state[0]
+
+
+# bits one timestamp point takes, by the top 4 bits at its cursor
+_TS_BITS = np.array([1] * 8 + [9] * 4 + [12] * 2 + [16, 68], dtype=np.uint64)
+
+
+def _ts_step(words, pos, state) -> np.ndarray:
+    """One delta-of-delta timestamp per block; state = (previous ts, delta)
+    as uint64 bits, whose sums wrap exactly like int64."""
+    reg = _window64(words, pos)
+    top = reg >> _U64(60)
+    p7 = ((reg >> _U64(55)) & _U64(0x7F)) - _U64(63)
+    p9 = ((reg >> _U64(52)) & _U64(0x1FF)) - _U64(255)
+    p12 = ((reg >> _U64(48)) & _U64(0xFFF)) - _U64(2047)
+    p64 = _window64(words, pos + _U64(4))
+    state[1] += np.where(top < 8, _U64(0), np.where(top < 12, p7, np.where(
+        top < 14, p9, np.where(top < 15, p12, p64))))
+    state[0] += state[1]
+    pos += _TS_BITS[top]
+    return state[0]
+
+
+def _decode_points(blocks, counts, step, n_state: int) -> np.ndarray:
+    """Every point of every block as uint64 bits, in block order."""
+    counts = np.asarray(counts, dtype=np.int64)
+    first = np.concatenate(([0], np.cumsum(counts)))
+    out = np.empty(int(first[-1]), dtype=np.uint64)
+    if not len(out):
+        return out
+    nbytes = np.fromiter(map(len, blocks), np.int64, count=len(counts))
+    bit = np.concatenate(([0], np.cumsum(nbytes))).astype(np.uint64) * _U64(8)
+    buf = np.zeros((-(-int(bit[-1]) // 64) + 2) * 8, dtype=np.uint8)  # +2 guard words
+    buf[: int(bit[-1]) // 8] = np.frombuffer(b"".join(blocks), dtype=np.uint8)
+    words = buf.view(">u8").astype(np.uint64)
+
+    order = np.argsort(-counts, kind="stable")
+    n_open = np.searchsorted(-counts[order], -np.arange(counts.max()))  # count > i
+    pos, dst, n = bit[:-1][order], first[:-1][order], n_open[0]
+    state = np.zeros((n_state, n), dtype=np.uint64)
+    state[0] = _window64(words, pos[:n])
+    pos[:n] += _U64(64)
+    out[dst[:n]] = state[0]
+    for i, k in enumerate(n_open[1:], 1):
+        out[dst[:k] + i] = step(words, pos[:k], state[:, :k])
+    over = np.flatnonzero(pos[:n] > bit[1:][order[:n]])
+    if len(over):
+        b = order[over[0]]
+        raise ValueError(f"Gorilla block {b} ({nbytes[b]} bytes) is too short "
+                         f"for its {counts[b]} points")
+    return out
+
+
+def decode_val_points(blocks, counts) -> np.ndarray:
+    """Every value of every block, flat float64 in block order."""
+    return _decode_points(blocks, counts, _val_step, 1).view(np.float64)
+
+
+def decode_ts_points(blocks, counts) -> np.ndarray:
+    """Every timestamp of every block, flat int64 in block order."""
+    return _decode_points(blocks, counts, _ts_step, 2).view(np.int64)
+
+
+def _pad(points: np.ndarray, counts, fill) -> np.ndarray:
+    counts = np.asarray(counts, dtype=np.int64)
+    out = np.full((len(counts), counts.max(initial=0)), fill, dtype=points.dtype)
+    out[np.arange(out.shape[1]) < counts[:, None]] = points
+    return out
 
 
 def decode_val_blocks(blocks: list[bytes], counts: np.ndarray) -> np.ndarray:
-    """Decode B value blocks at once -> (B, max_count) float64 matrix,
-    NaN-padded past each block's count."""
-    counts = np.asarray(counts, dtype=np.int64)
-    b_count = len(blocks)
-    maxc = int(counts.max()) if b_count else 0
-    out = np.full((b_count, maxc), np.nan)
-    if not b_count or maxc == 0:
-        return out
-    words = _blocks_to_words(blocks)
-    prev = words[:, 0]
-    # honor the NaN-padding contract for empty blocks: a row with
-    # counts[i]==0 must not surface the (garbage) header word
-    out[counts > 0, 0] = prev.view(np.float64)[counts > 0]
-    pos = np.full(b_count, 64, dtype=np.uint64)
-    for i in range(1, maxc):
-        act = counts > i
-        reg = _window64(words, pos)
-        is_xor = (reg >> _U64(63)).astype(bool)
-        lead = (reg >> _U64(57)) & _U64(31)
-        m6 = (reg >> _U64(51)) & _U64(63)
-        mlen = np.where(m6 == 0, _U64(64), m6)
-        meaningful = _window64(words, pos + _U64(13)) >> (
-            (_U64(64) - mlen) & _U64(63)
-        )
-        trail = _U64(64) - lead - mlen
-        nxt = np.where(is_xor, prev ^ (meaningful << trail), prev)
-        prev = np.where(act, nxt, prev)
-        vals = prev.view(np.float64)
-        out[act, i] = vals[act]
-        consumed = np.where(is_xor, _U64(13) + mlen, _U64(1))
-        pos += np.where(act, consumed, _U64(0))
-    return out
+    """(B, max_count) float64 matrix, NaN past each block's count."""
+    return _pad(decode_val_points(blocks, counts), counts, np.nan)
 
 
 def decode_ts_blocks(blocks: list[bytes], counts: np.ndarray) -> np.ndarray:
-    """Decode B timestamp blocks at once -> (B, max_count) int64 matrix
-    (padding cells hold 0 past each block's count)."""
-    counts = np.asarray(counts, dtype=np.int64)
-    b_count = len(blocks)
-    maxc = int(counts.max()) if b_count else 0
-    out = np.zeros((b_count, maxc), dtype=np.int64)
-    if not b_count or maxc == 0:
-        return out
-    words = _blocks_to_words(blocks)
-    prev = words[:, 0].view(np.int64).copy()
-    # counts[i]==0 rows keep the documented 0-padding, not header bytes
-    out[counts > 0, 0] = prev[counts > 0]
-    delta = np.zeros(b_count, dtype=np.int64)
-    pos = np.full(b_count, 64, dtype=np.uint64)
-    for i in range(1, maxc):
-        act = counts > i
-        reg = _window64(words, pos)
-        b0 = (reg >> _U64(63)) & _U64(1)
-        b1 = (reg >> _U64(62)) & _U64(1)
-        b2 = (reg >> _U64(61)) & _U64(1)
-        b3 = (reg >> _U64(60)) & _U64(1)
-        p7 = ((reg >> _U64(55)) & _U64(0x7F)).astype(np.int64) - 63
-        p9 = ((reg >> _U64(52)) & _U64(0x1FF)).astype(np.int64) - 255
-        p12 = ((reg >> _U64(48)) & _U64(0xFFF)).astype(np.int64) - 2047
-        p64 = _window64(words, pos + _U64(4)).view(np.int64)
-        dod = np.where(
-            b0 == 0, 0,
-            np.where(b1 == 0, p7,
-                     np.where(b2 == 0, p9,
-                              np.where(b3 == 0, p12, p64))),
-        )
-        consumed = np.where(
-            b0 == 0, 1,
-            np.where(b1 == 0, 9,
-                     np.where(b2 == 0, 12,
-                              np.where(b3 == 0, 16, 68))),
-        ).astype(np.uint64)
-        delta = np.where(act, delta + dod, delta)
-        prev = np.where(act, prev + delta, prev)
-        out[act, i] = prev[act]
-        pos += np.where(act, consumed, _U64(0))
-    return out
+    """(B, max_count) int64 matrix, 0 past each block's count."""
+    return _pad(decode_ts_points(blocks, counts), counts, 0)

@@ -52,7 +52,12 @@ from pyspark.sql.types import (
 )
 
 from ..functions.kernels import ROLLUP_FEATURES, window_stats
-from ..functions.gorilla import encode_ts_blocks, encode_val_blocks
+from ..functions.gorilla import (
+    decode_ts_points,
+    decode_val_points,
+    encode_ts_blocks,
+    encode_val_blocks,
+)
 
 DEFAULT_TIERS = [("1m", 60), ("1h", 3600), ("1d", 86400)]
 T0_MS = 1704067200000  # 2024-01-01T00:00:00Z
@@ -78,8 +83,8 @@ def _next_pow2(x: np.ndarray) -> np.ndarray:
 #: The multi-feature pass re-reads the matrix (and feature temporaries)
 #: ~dozens of times; blocking windows so each matrix is ~2 MB keeps that
 #: traffic cache-resident instead of streaming a 10-100 MB matrix from
-#: DRAM per feature — measured 15% single-threaded, more under the
-#: 32-worker DRAM contention this box saturates at (CLAUDE.md).
+#: DRAM per feature — measured on one core at 1.25 s blocked vs 1.47 s
+#: unblocked.
 #: Values are UNCHANGED by construction: every window's statistics
 #: depend only on its own (pow2-padded) row, so splitting the rows of a
 #: bucket into blocks leaves each per-window reduction tree identical
@@ -335,42 +340,29 @@ def tier_points(
     key_cols: list[str] | None = None,
 ) -> DataFrame:
     """Decode a (flat) tier frame's Gorilla blocks back into points —
-    the read path of the compressed tier tables. Uses the batched
-    SIMD-across-blocks decoders (functions/gorilla.py): one vectorized
-    step per value index advances EVERY block in the Arrow batch, so
-    decode cost is O(points) numpy work, not per-bit Python.
-    Output: key cols + tier + (ts_ms, value) per point."""
+    the read path of the compressed tier tables. The cross-block
+    decoders (functions/gorilla.py) advance every block of the Arrow
+    batch that still has a point with one vectorized step per point
+    index and write the points flat, so decode cost and memory are
+    O(points) for any mix of block lengths, not per-bit Python.
+    Output: key cols + (ts_ms, value) per point, in row order."""
     key_cols = key_cols if key_cols is not None else ["doc_id"]
-    from ..functions.gorilla import decode_ts_blocks, decode_val_blocks
-
     sel = tier_df.where(
         F.col("ts_gorilla").isNotNull() & F.col("val_gorilla").isNotNull()
-    ).select(*key_cols, "tier", "count", "ts_gorilla", "val_gorilla")
-    fields = [tier_df.schema[c] for c in key_cols] + [
-        StructField("tier", StringType()),
-        StructField("ts_ms", LongType()),
-        StructField("value", DoubleType()),
-    ]
-    schema = StructType(fields)
+    ).select(*key_cols, "count", "ts_gorilla", "val_gorilla")
+    schema = StructType(
+        [tier_df.schema[c] for c in key_cols]
+        + [StructField("ts_ms", LongType()), StructField("value", DoubleType())]
+    )
 
     def run(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             counts = pdf["count"].to_numpy().astype(np.int64)
-            mt = decode_ts_blocks(
-                [bytes(b) for b in pdf["ts_gorilla"]], counts
-            )
-            mv = decode_val_blocks(
-                [bytes(b) for b in pdf["val_gorilla"]], counts
-            )
-            row_of = np.repeat(np.arange(len(pdf)), counts)
-            offs = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            j = np.arange(int(counts.sum())) - np.repeat(offs, counts)
-            res = {c: pdf[c].to_numpy()[row_of] for c in key_cols}
-            res["tier"] = pdf["tier"].to_numpy()[row_of]
-            res["ts_ms"] = mt[row_of, j]
-            res["value"] = mv[row_of, j]
+            res = {c: np.repeat(pdf[c].to_numpy(), counts) for c in key_cols}
+            res["ts_ms"] = decode_ts_points(pdf["ts_gorilla"], counts)
+            res["value"] = decode_val_points(pdf["val_gorilla"], counts)
             yield pd.DataFrame(res)
 
     return sel.mapInPandas(run, schema)

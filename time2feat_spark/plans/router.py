@@ -259,4 +259,4 @@ def route_points(
     pts = tier_points(windows, key_cols=["source", "doc_id"])
     return pts.where(
         (F.col("ts_ms") >= start_ms) & (F.col("ts_ms") < end_ms)
-    ).drop("tier")
+    )
