@@ -1,4 +1,5 @@
-"""Every engine module has a consumer, or is allowlisted with a reason.
+"""Every engine module, function and class has a consumer, or is
+allowlisted with a reason.
 
 A consumer is a driver query (`__spark_entry__.py`), a bench leaf
 (`bench.py`, `bench_extra.py`, `perfbench/*.py`), `pipeline()` or
@@ -9,11 +10,23 @@ functions count, and a package's `__init__.py` is kept whenever any
 module under it is reached or allowlisted. A module outside the closure
 serves no workload, so it goes together with its tests instead of
 staying as tested, documented code that nothing runs.
+
+The same rule holds for each module-level function and class of the
+engine, again from `ast` alone. Every top-level definition in a
+`CONSUMERS` file is a root. A definition in a reached module is reached
+when its name is used, as an `ast.Name`, an attribute or an import
+alias, by a reached definition or by the module-level code of a reached
+module; its own body does not count, and strings, docstrings and
+`__all__` do not count either. This runs to a fixpoint, so a helper that
+only unreached definitions use is unreached too. Names are matched
+without their module, which is deliberately conservative: an unreached
+function whose name collides with a reached one is missed.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -40,6 +53,35 @@ ALLOWLIST = {
     "time2feat_spark/streaming/continuous.py": (
         "ContinuousRollup is the only late-data-safe points path; it folds "
         "into a points shape of LadderJob first"
+    ),
+}
+
+_IN_ALLOWLISTED_MODULE = "its module is on ALLOWLIST, for the reason there"
+
+#: unreached definitions kept on purpose, "path::name" -> why
+DEFINITION_ALLOWLIST = {
+    "time2feat_spark/functions/gorilla.py::_BitReader": (
+        "the bit reader of the sequential reference decoders"
+    ),
+    "time2feat_spark/functions/gorilla.py::decode_ts_block": (
+        "sequential reference the flat timestamp decoder is tested against"
+    ),
+    "time2feat_spark/functions/gorilla.py::decode_val_block": (
+        "sequential reference the flat value decoder is tested against"
+    ),
+    "time2feat_spark/functions/parity.py::_permutation_entropy": (
+        "per-row reference the batched permutation-entropy kernel is "
+        "tested against"
+    ),
+    "time2feat_spark/sources/tableio.py::TableIO": _IN_ALLOWLISTED_MODULE,
+    "time2feat_spark/sources/tableio.py::ParquetTableIO": (
+        _IN_ALLOWLISTED_MODULE
+    ),
+    "time2feat_spark/sources/tableio.py::IcebergTableIO": (
+        _IN_ALLOWLISTED_MODULE
+    ),
+    "time2feat_spark/streaming/continuous.py::ContinuousRollup": (
+        _IN_ALLOWLISTED_MODULE
     ),
 }
 
@@ -84,6 +126,7 @@ def _imported_names(path: str) -> set[str]:
     return names
 
 
+@functools.cache
 def _closure() -> set[str]:
     mods = _modules()
     path_to_mod = {p: m for m, p in mods.items()}
@@ -101,6 +144,64 @@ def _closure() -> set[str]:
         )
         todo.extend(n for n in _imported_names(mods[mod]) if n in mods)
     return {mods[m] for m in seen}
+
+
+def _used_names(node: ast.AST) -> set[str]:
+    """Names `node` uses: `ast.Name` ids, attribute names and the last
+    part of each imported name. String constants are never names."""
+    names: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.add(n.attr)
+        elif isinstance(n, ast.alias):
+            names.add(n.name.rsplit(".", 1)[-1])
+    return names
+
+
+def _definitions(path: str) -> tuple[dict[str, set[str]], set[str]]:
+    """A file's top-level functions and classes, each with the names its
+    decorators, signature and body use, and the names used by the
+    module-level code outside those definitions."""
+    with open(os.path.join(ROOT, path)) as f:
+        tree = ast.parse(f.read(), path)
+    defs: dict[str, set[str]] = {}
+    top: set[str] = set()
+    for node in tree.body:
+        if isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            defs[node.name] = _used_names(node)
+        else:
+            top |= _used_names(node)
+    return defs, top
+
+
+@functools.cache
+def _definition_reach() -> tuple[frozenset[str], frozenset[str]]:
+    """("path::name" of every definition in the closure and the engine,
+    "path::name" of the reached ones)."""
+    closure = _closure()
+    uses: dict[str, set[str]] = {}
+    used: set[str] = set()
+    for path in closure | _engine_files():
+        defs, top = _definitions(path)
+        if path in closure:
+            used |= top
+        uses.update({f"{path}::{name}": u for name, u in defs.items()})
+    reached = {d for d in uses if d.split("::")[0] in CONSUMERS}
+    frontier = reached
+    while frontier:
+        for d in frontier:
+            used |= uses[d]
+        frontier = {
+            d
+            for d in uses.keys() - reached
+            if d.split("::")[0] in closure and d.split("::")[1] in used
+        }
+        reached |= frontier
+    return frozenset(uses), frozenset(reached)
 
 
 def _engine_files() -> set[str]:
@@ -129,3 +230,22 @@ def test_allowlist_holds_only_unreached_modules():
     engine, reached = _engine_files(), _closure()
     assert set(ALLOWLIST) <= engine, sorted(set(ALLOWLIST) - engine)
     assert not set(ALLOWLIST) & reached, sorted(set(ALLOWLIST) & reached)
+
+
+def test_every_engine_definition_has_a_consumer():
+    defined, reached = _definition_reach()
+    unreached = {
+        d for d in defined - reached if d.startswith(ENGINE + "/")
+    } - set(DEFINITION_ALLOWLIST)
+    assert not unreached, (
+        f"functions and classes no consumer reaches: {sorted(unreached)}; "
+        "delete them with their tests, or add them to DEFINITION_ALLOWLIST "
+        "with a reason"
+    )
+
+
+def test_definition_allowlist_holds_only_unreached_definitions():
+    defined, reached = _definition_reach()
+    allowed = set(DEFINITION_ALLOWLIST)
+    assert allowed <= defined, sorted(allowed - defined)
+    assert not allowed & reached, sorted(allowed & reached)

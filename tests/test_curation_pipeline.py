@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from time2feat_spark.operators import dedup as D
-from time2feat_spark.operators.packing import pack_sequences, packing_stats
+from time2feat_spark.operators.packing import pack_sequences
 from time2feat_spark.operators.sampling import deterministic_split
 from time2feat_spark.operators.text import (
     bpe_ish_token_count,
@@ -94,6 +94,6 @@ def test_packing_covers_train_exactly_once(curated):
     assert packed.doc_id.is_unique
     g = packed.groupby("bin_id").n_tok.sum()
     assert g.max() <= 1024
-    stats = packing_stats(curated["packed"], 1024).first()
-    assert stats.n_docs == len(train_ids)
-    assert stats.fill_rate > 0.5  # short docs, small contexts: sane fill
+    assert len(packed) == len(train_ids)
+    # short docs, small contexts: sane fill
+    assert g.sum() / (len(g) * 1024) > 0.5

@@ -44,16 +44,17 @@ def test_small_inputs_pass_without_flag(spark):
 def test_selection_driver_bound_trips(spark):
     """The deliberately-driver-side selection layer (SURVEY §4 O8) must
     fail fast, not OOM, when fed a matrix above max_driver_rows."""
-    from time2feat_spark.operators.selection import pfa_select
+    from time2feat_spark.operators.selection import relevance_p_values
 
     df = spark.range(100).selectExpr(
-        "cast(id as double) as f1", "cast(id*2 as double) as f2"
+        "cast(id as double) as f1", "cast(id*2 as double) as f2",
+        "id % 2 as label",
     )
     with pytest.raises(ValueError, match="driver-side by design"):
-        pfa_select(df, ["f1", "f2"], max_driver_rows=10)
+        relevance_p_values(df, ["f1", "f2"], "label", max_driver_rows=10)
     # under the bound it runs
-    out = pfa_select(df, ["f1", "f2"], max_driver_rows=1000)
-    assert set(out) <= {"f1", "f2"} and out
+    out = relevance_p_values(df, ["f1", "f2"], "label", max_driver_rows=1000)
+    assert set(out) == {"f1", "f2"}
 
 
 def test_near_duplicate_clusters_components(spark):

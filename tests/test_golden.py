@@ -123,30 +123,3 @@ def test_batched_permutation_entropy_matches_per_row_reference():
                 assert np.isnan(got), (d, i)
             else:
                 assert got == ref, (d, i, got, ref)
-
-
-def test_query_similarity_count_vs_brute_force():
-    """Parametric query_similarity_count (explicit query) against a
-    direct z-normalized sliding-distance computation."""
-    from time2feat_spark.functions.parity import query_similarity_count
-
-    rng = np.random.default_rng(9)
-    x = np.sin(np.arange(300) * 0.21) + 0.05 * rng.standard_normal(300)
-    q = x[40:60].copy()  # a planted motif: exact match must be counted
-    m = len(q)
-    W = np.lib.stride_tricks.sliding_window_view(x, m)
-    Z = (W - W.mean(1, keepdims=True)) / W.std(1, keepdims=True)
-    zq = (q - q.mean()) / q.std()
-    brute = np.sqrt(((Z - zq[None, :]) ** 2).sum(1))
-    for thr in (0.5, 2.0, 5.0):
-        want = float((brute <= thr).sum())
-        got = query_similarity_count(x, q, thr)
-        assert got == want, (thr, got, want)
-    assert query_similarity_count(x, q, 0.01) >= 1.0  # the motif itself
-    # non-normalized variant
-    brute_raw = np.sqrt(((W - q[None, :]) ** 2).sum(1))
-    got_raw = query_similarity_count(x, q, 1.0, normalize=False)
-    assert got_raw == float((brute_raw <= 1.0).sum())
-    # edges: short series, constant query
-    assert np.isnan(query_similarity_count(x[:5], q, 1.0))
-    assert np.isnan(query_similarity_count(x, np.full(10, 3.0), 1.0))

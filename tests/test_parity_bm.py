@@ -20,7 +20,7 @@ from time2feat_spark.operators.features import (
     extract_pair_features,
     extract_series_features,
 )
-from time2feat_spark.operators.selection import clean_features, pfa, top_k_features
+from time2feat_spark.operators.selection import anova_f_scores, clean_features, pfa
 from time2feat_spark.sources.ts_reader import bm_series_rows, read_ts
 
 BM_TRAIN = "/root/reference/data/BasicMotions/BasicMotions_TRAIN.txt"
@@ -117,11 +117,7 @@ def test_parity_registry_matches_checked_in_tsfresh_grid():
     phantom coeff-100), change_quantiles carries the 60 settings-grid
     cells plus the 4 flagged bridge cells."""
     from time2feat_spark.functions.parity import PARITY_FEATURES
-    from time2feat_spark.functions.tsfresh_grid import (
-        BRIDGE_CELLS,
-        grid,
-        tsfresh_name,
-    )
+    from time2feat_spark.functions.tsfresh_grid import BRIDGE_CELLS, grid
 
     g = grid()
     ts_names = [t for t, _ in g]
@@ -138,13 +134,6 @@ def test_parity_registry_matches_checked_in_tsfresh_grid():
     cq = [t for t in ts_names if t.startswith("change_quantiles")]
     assert len(cq) == 64 and len(BRIDGE_CELLS) == 4
     assert all(b in cq for b in BRIDGE_CELLS)
-    # canonical naming round-trip
-    assert tsfresh_name("q10") == "value__quantile__q_0.1"
-    assert (
-        tsfresh_name("change_q_0_2_1_mean", "sig0")
-        == 'sig0__change_quantiles__f_agg_"mean"__isabs_True'
-           "__qh_0.2__ql_0.0"
-    )
 
 
 def test_grid_family_counts_match_derivation_note():
@@ -152,12 +141,11 @@ def test_grid_family_counts_match_derivation_note():
     against the derivation note (functions/GRID_DERIVATION.md — tsfresh
     0.20 settings.py defaults + report Table 3 widths), so a future grid
     correction must re-balance this arithmetic explicitly."""
-    from time2feat_spark.functions.tsfresh_grid import (
-        SIMPLE,
-        family_counts,
-    )
+    from collections import Counter
 
-    counts = family_counts()
+    from time2feat_spark.functions.tsfresh_grid import SIMPLE, grid
+
+    counts = Counter(ts.split("__", 1)[0] for ts, _ in grid())
     assert len(SIMPLE) == 37
     assert all(counts[f] == 1 for f in SIMPLE)
     expected_param = {
@@ -274,7 +262,8 @@ def test_supervised_topk_ranking(spark, bm):
     cols = ["feat_variance", "feat_std", "feat_median", "feat_abs_energy",
             "feat_autocorr_lag1", "feat_mean_abs_change", "feat_skewness"]
     sdf = feats.select("source", *cols)
-    top = top_k_features(sdf, cols, "source", 3)
+    scores = anova_f_scores(sdf, cols, "source")
+    top = sorted(cols, key=lambda c: (-scores[c], c))[:3]
     assert len(top) == 3
     # variance-family features dominate for motion classes
     assert set(top) & {"feat_variance", "feat_std", "feat_abs_energy",

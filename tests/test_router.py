@@ -30,7 +30,6 @@ from time2feat_spark.plans.router import (
     choose_tier,
     quantile_range,
     route_points,
-    route_range,
     route_range_tiered,
 )
 
@@ -54,40 +53,6 @@ def _ladder(spark, tmp_path, n=80):
     return job
 
 
-def test_route_range_picks_tier_and_prunes(spark, tmp_path):
-    job = _ladder(spark, tmp_path)
-    full = job.read_output()
-    t_lo = full.where("tier = '1h'").agg(
-        F.min(F.unix_millis("window_start"))
-    ).first()[0]
-    start, end = t_lo, t_lo + 6 * 3600 * 1000
-
-    tier, df = route_range(job, start, end, resolution_sec=7200)
-    assert tier == "1h"
-    got = df.select("source", "doc_id", "window_start", "count").toPandas()
-    want = (
-        full.where(
-            (F.col("tier") == "1h")
-            & (F.unix_millis("window_start") >= start)
-            & (F.unix_millis("window_start") < end)
-        )
-        .select("source", "doc_id", "window_start", "count")
-        .toPandas()
-    )
-    key = ["source", "doc_id", "window_start"]
-    pd.testing.assert_frame_equal(
-        got.sort_values(key).reset_index(drop=True),
-        want.sort_values(key).reset_index(drop=True),
-    )
-    # day-resolution request routes to 1d, week-long range
-    tier2, df2 = route_range(job, start, start + 7 * 86_400_000, 86_400)
-    assert tier2 == "1d" and df2.count() > 0
-    # pruning evidence on the routed plan
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "window_day" in plan.split("PartitionFilters")[1][:300]
-
-
 def test_route_points_matches_raw_tier_decode(spark, tmp_path):
     """Points routed from 1m Gorilla windows == the same range decoded
     from the INDEPENDENT raw-tier whole-series blocks."""
@@ -99,9 +64,7 @@ def test_route_points_matches_raw_tier_decode(spark, tmp_path):
     # deliberately unaligned range (30 s into a minute, 150 s long)
     start, end = t_lo + 30_000, t_lo + 180_000
 
-    tier, got_df = route_range(job, start, end, resolution_sec=1)
-    assert tier == "points"
-    got = got_df.toPandas()
+    got = route_points(job, start, end).toPandas()
     raw = tier_points(
         full.where("tier = 'raw'"), key_cols=["source", "doc_id"]
     ).where(

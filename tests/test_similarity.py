@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from time2feat_spark.operators import similarity as S
+from time2feat_spark.operators.clustering import kmeans
 
 SF_DIR = "/root/testdata/sf0.01"
 N_PLANT = 40
@@ -104,6 +105,17 @@ def test_lsh_topk_finds_planted_neighbor_first(spark, planted):
         assert top[1] == src_of[int(qid)], f"query {qid}: top2={top}"
 
 
+def _ivf_centroids(corpus, n_cells: int, seed: int = 42) -> np.ndarray:
+    """IVF coarse quantizer as the driver trains it: numpy k-means over
+    the corpus's collected unit vectors."""
+    X = np.vstack(
+        [np.asarray(r[0], dtype=np.float64)
+         for r in corpus.select("embedding").collect()]
+    )
+    X = X / np.linalg.norm(X, axis=1, keepdims=True)
+    return kmeans(X, n_cells, seed=seed, n_init=3)[0]
+
+
 def test_ivf_topk_recall_on_clustered_corpus(spark):
     """IVF with a coarse quantizer is the clustered-corpus scale path:
     on 8 well-separated Gaussian clusters, probing 4/16 cells must reach
@@ -117,7 +129,7 @@ def test_ivf_topk_recall_on_clustered_corpus(spark):
     queries = sdf.where(F.col("vec_id").isin([3, 200, 777])).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cents = S.ivf_train_centroids(sdf, n_cells=16, seed=7)
+    cents = _ivf_centroids(sdf, n_cells=16, seed=7)
     got = S.ivf_topk(sdf, queries, cents, k=10, nprobe=4)
     bf = S.brute_force_topk(sdf, queries, k=10)
     g = {(r.query_id, r.vec_id) for r in got.collect()}
@@ -131,7 +143,7 @@ def test_ivf_topk_runs_on_testdata(spark):
     q = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cents = S.ivf_train_centroids(emb, n_cells=16)
+    cents = _ivf_centroids(emb, n_cells=16)
     out = S.ivf_topk(emb, q, cents, k=10, nprobe=8).toPandas()
     assert len(out) == 30
     # self-match always survives: its cell is always probed first

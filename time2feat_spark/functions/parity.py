@@ -478,48 +478,6 @@ def _matrix_profile_stats(x: np.ndarray) -> dict[str, float]:
     }
 
 
-def query_similarity_count(
-    x: np.ndarray,
-    query: np.ndarray,
-    threshold: float,
-    normalize: bool = True,
-) -> float:
-    """tsfresh query_similarity_count with an ACTUAL query: the number
-    of length-m subsequences of x within `threshold` distance of the
-    query (z-normalized Euclidean by default — the MASS distance
-    profile, computed via one sliding-window matmul; normalize=False
-    uses plain Euclidean). The default grid cell keeps tsfresh's
-    query=None => NaN semantics; this is the parametric path a user
-    reaches with an explicit query."""
-    x = np.asarray(x, dtype=np.float64)
-    q = np.asarray(query, dtype=np.float64)
-    m = len(q)
-    n = len(x)
-    if m == 0 or n < m:
-        return np.nan
-    windows = _sliding(x, m)  # (l, m) view
-    if not normalize:
-        d2 = ((windows - q[None, :]) ** 2).sum(axis=1)
-        return float((np.sqrt(np.maximum(d2, 0.0)) <= threshold).sum())
-    qs = q.std()
-    if qs == 0:
-        return np.nan  # constant query: z-normalization undefined
-    zq = (q - q.mean()) / qs
-    c1 = np.cumsum(np.concatenate(([0.0], x)))
-    c2 = np.cumsum(np.concatenate(([0.0], x * x)))
-    mu = (c1[m:] - c1[:-m]) / m
-    sig2 = (c2[m:] - c2[:-m]) / m - mu * mu
-    sig = np.sqrt(np.maximum(sig2, 0.0))
-    qt = windows @ zq  # zq sums to 0, so no mu correction term
-    const = sig <= 1e-13 * np.maximum(np.abs(mu), 1.0)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        corr = qt / (m * sig)
-    d2 = 2.0 * m * (1.0 - corr)
-    d = np.sqrt(np.maximum(d2, 0.0))
-    d = np.where(const, np.sqrt(2.0 * m), d)  # constant window vs varying q
-    return float((d <= threshold).sum())
-
-
 def _ricker(points: int, a: float) -> np.ndarray:
     A = 2.0 / (np.sqrt(3.0 * a) * np.pi**0.25)
     vec = np.arange(points) - (points - 1.0) / 2.0

@@ -217,20 +217,3 @@ BRIDGE_CELLS: dict[str, str] = {
     for b in (False, True)
     for agg in ("std", "median")
 }
-
-
-def family_counts() -> dict[str, int]:
-    """Cells per tsfresh calculator family. The per-family arithmetic is
-    test-enforced against the derivation note (GRID_DERIVATION.md next to
-    this module), so any future grid correction is a one-file change that
-    must re-balance to the report-pinned 787 explicitly."""
-    from collections import Counter
-
-    return dict(Counter(ts.split("__", 1)[0] for ts, _ in grid()))
-
-
-def tsfresh_name(engine_name: str, signal: str = "value") -> str:
-    """tsfresh's full column name (``{column}__{calculator}__params``)
-    for an engine parity-feature name."""
-    m = {eng: ts for ts, eng in grid()}
-    return f"{signal}__{m[engine_name]}"

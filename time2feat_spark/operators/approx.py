@@ -4,10 +4,10 @@ HyperLogLog built from cross-engine-replayable primitives.
 Why in-repo instead of `F.approx_count_distinct`: Spark's builtin HLL++
 state is opaque (no stable cross-engine definition, no partial you can
 persist next to tier tables), while a training-data pipeline wants
-distinct-user / distinct-token cardinalities maintained INCREMENTALLY
-alongside the rollup ladder — i.e. a register table you can merge with
-`max` per bucket (SURVEY.md §2.4 "aggregations maintained under
-appends").
+distinct-user / distinct-token cardinalities alongside the rollup
+ladder — i.e. a register table that merges with `max` per bucket, so
+each coarser tier is built from the finer one (`hll_tier_rollup`,
+SURVEY.md §2.4).
 
 Construction (Flajolet et al., "HyperLogLog: the analysis of a
 near-optimal cardinality estimation algorithm", AofA 2007):
@@ -30,9 +30,8 @@ oracle reproduces the ESTIMATE value-exactly, not just approximately.
 
 Scale shape: one map-side-combinable groupBy to (keys, bucket) — 64
 rows per key regardless of input size — then a 64-row-per-key final
-agg. The partial (`hll_partial`) is a persistable register table;
-appending a day of data = partial over the new rows + `hll_merge` —
-no rescan of history.
+agg. The partial (`hll_partial`) is the register table both
+`hll_estimate` and `hll_tier_rollup` consume.
 """
 
 from __future__ import annotations
@@ -56,9 +55,8 @@ def _rho(w: Column) -> Column:
 
 
 def hll_hash(value_col: str, seed: int = 0) -> Column:
-    """The single definition of the HLL value hash — batch
-    (`hll_partial`) and streaming (`streaming_hll_registers`) both use
-    it, so their register tables stay merge-compatible by construction."""
+    """The HLL value hash of `hll_partial`: md5_64 of the value salted
+    with `seed`, the family `sql_hll_distinct` replays in DuckDB."""
     return md5_64(F.concat(F.col(value_col).cast("string"), F.lit(f"|{seed}")))
 
 
@@ -77,25 +75,13 @@ def hll_partial(
     seed: int = 0,
 ) -> DataFrame:
     """Register table: (keys..., bucket, m) with m = max rho per bucket.
-    <= 64 rows per key group; partials from disjoint inputs merge with
-    `hll_merge` (register max is associative/commutative/idempotent, so
-    re-processing a chunk is harmless — same crash-safety argument as
-    the ladder's overwrite-per-unit sink)."""
+    <= 64 rows per key group."""
     return (
         df.where(F.col(value_col).isNotNull())
         .select(*key_cols, hll_hash(value_col, seed).alias("_h"))
         .groupBy(*key_cols, hll_bucket(F.col("_h")).alias("bucket"))
         .agg(F.max(hll_rho(F.col("_h"))).alias("m"))
     )
-
-
-def hll_merge(*partials: DataFrame) -> DataFrame:
-    """Union register tables and re-max — the append path."""
-    out = partials[0]
-    for p in partials[1:]:
-        out = out.unionByName(p)
-    keys = [c for c in out.columns if c not in ("m",)]
-    return out.groupBy(*keys).agg(F.max("m").alias("m"))
 
 
 def hll_estimate(registers: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -178,9 +164,9 @@ def _cms_col(c: Column, r: int, w: int, seed: int) -> Column:
 
 
 def cms_cells_expr(value_col: str, d: int, w: int, seed: int) -> Column:
-    """The single definition of a value's d (row, col) cells — build,
-    lookup, and the streaming face (`streaming_cms_cells`) all use it,
-    so their cell tables stay merge/probe-compatible by construction."""
+    """The single definition of a value's d (row, col) cells — build
+    and lookup both use it, so every probe hits the cells its value
+    was counted in."""
     return F.array(
         *[
             F.struct(
@@ -205,11 +191,7 @@ def cms_build(
     min over rows of the probed cells — always >= the true count, and
     <= true + 2N/w with probability 1 - (1/2)^d (paper Thm 1).
 
-    Like `hll_partial`, the sketch is the persistable partial: sketches
-    of disjoint inputs merge with `cms_merge` (cell-wise sum), giving
-    frequency estimates maintained under appends without rescanning
-    history — the frequency-sketch sibling of the ladder's quantile
-    cascade. Distinct role vs `text.heavy_hitters`: Misra-Gries answers
+    Distinct role vs `text.heavy_hitters`: Misra-Gries answers
     "which values are frequent" exactly; the CM sketch answers "how
     frequent is value X" for ANY later probe from O(d*w) state."""
     return (
@@ -218,14 +200,6 @@ def cms_build(
         .groupBy(F.col("c.row").alias("row"), F.col("c.col").alias("col"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum — the append/union path."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "col").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_lookup(
@@ -250,34 +224,6 @@ def cms_lookup(
     return joined.groupBy(value_col).agg(
         F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("cms_estimate")
     )
-
-
-def sql_cms_estimates(
-    table: str,
-    value_expr: str,
-    probe_sql: str,
-    d: int = 4,
-    w: int = 1024,
-    seed: int = 0,
-) -> str:
-    """DuckDB replay of cms_build + cms_lookup: `probe_sql` must yield a
-    one-column relation `v` of probe values; `value_expr` is the
-    inserted value expression over `table`."""
-    rows = ", ".join(f"({r})" for r in range(d))
-    h = sql_md5_64(f"CAST(x AS VARCHAR) || '|cms{seed}|' || r")
-    return f"""
-WITH _cms_rs(r) AS (VALUES {rows}),
-_cms_ins AS (SELECT {value_expr} AS x FROM {table}
-             WHERE {value_expr} IS NOT NULL),
-_cms_cells AS (SELECT r, {h} % {w} AS col, count(*) AS cnt
-               FROM _cms_ins CROSS JOIN _cms_rs GROUP BY ALL),
-_cms_probes AS (SELECT v AS x FROM ({probe_sql})),
-_cms_pc AS (SELECT x, r, {h} % {w} AS col
-            FROM _cms_probes CROSS JOIN _cms_rs)
-SELECT _cms_pc.x AS v, CAST(min(coalesce(_cms_cells.cnt, 0)) AS BIGINT)
-         AS cms_estimate
-FROM _cms_pc LEFT JOIN _cms_cells USING (r, col) GROUP BY _cms_pc.x
-""".strip()
 
 
 def hll_tier_rollup(

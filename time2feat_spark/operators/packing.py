@@ -12,9 +12,9 @@ on natural length distributions.
 Scale posture: packing is a GLOBAL optimization, but the standard
 distributed practice (and what training shards need anyway) is
 partition-local packing — each partition packs its own docs into its
-own bins, so the job is one repartition (optionally salted round-robin
-for balance) followed by an embarrassingly-parallel mapInPandas; bin
-ids are made globally unique by offsetting with the partition id. The
+own bins, so the job is one embarrassingly-parallel mapInPandas with
+no shuffle; bin ids are made globally unique by offsetting with the
+partition id. The
 fill-rate loss vs global packing is negligible when partitions hold
 thousands of docs (law of large numbers on the length distribution).
 """
@@ -73,23 +73,14 @@ def pack_sequences(
     max_len: int,
     id_col: str = "doc_id",
     len_col: str = "n_tok",
-    deterministic: bool = False,
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Assign every doc a packing bin: (id, length, bin_id, bin_fill).
     Bin ids are globally unique (partition-offset); `bin_fill` is the
     bin's total length, duplicated on each member row so a training
     shard writer can filter under-filled bins without another join.
 
-    Default mode packs whatever partition layout arrives (zero
-    shuffle), so bin assignment depends on upstream partitioning.
-    `deterministic=True` buys layout-independence for one shuffle: rows
-    are hash-repartitioned on `id_col` into exactly `num_partitions`
-    and sorted by id within each, so the same corpus packs into the
-    IDENTICAL bins no matter how it was partitioned upstream — the
-    engine's partition-invariance posture, opt-in because the shuffle
-    is pure overhead when reproducible bins aren't needed. (Keep
-    `num_partitions` fixed across runs; it is part of the layout.)"""
+    It packs whatever partition layout arrives (zero shuffle), so bin
+    assignment depends on upstream partitioning."""
     schema = StructType(
         [
             StructField(id_col, df.schema[id_col].dataType),
@@ -100,9 +91,6 @@ def pack_sequences(
         ]
     )
     sel = df.select(id_col, F.col(len_col).cast("long").alias(len_col))
-    if deterministic:
-        sel = sel.repartition(num_partitions, F.col(id_col)) \
-                 .sortWithinPartitions(id_col)
 
     def run(iterator):
         from pyspark import TaskContext
@@ -128,20 +116,3 @@ def pack_sequences(
         )
 
     return sel.mapInPandas(run, schema)
-
-
-def packing_stats(packed: DataFrame, max_len: int) -> DataFrame:
-    """One-row summary: bins, docs, fill rate (= packed tokens /
-    (bins * max_len)), padding waste."""
-    return (
-        packed.groupBy("bin_id")
-        .agg(F.first("bin_fill").alias("fill"), F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("n_bins"),
-            F.sum("n").alias("n_docs"),
-            F.sum("fill").alias("packed_tokens"),
-            (
-                F.sum("fill") / (F.count(F.lit(1)) * F.lit(max_len))
-            ).alias("fill_rate"),
-        )
-    )

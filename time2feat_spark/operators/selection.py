@@ -209,15 +209,6 @@ def relevance_p_values(
     return out
 
 
-def top_k_features(
-    df: DataFrame, cols: list[str], label_col: str, k: int
-) -> list[str]:
-    """T1: rank by ANOVA F desc (name asc tie-break), take k."""
-    scores = anova_f_scores(df, cols, label_col)
-    ranked = sorted(cols, key=lambda c: (-scores[c], c))
-    return ranked[:k]
-
-
 def pfa(
     matrix: np.ndarray,
     feature_names: list[str],
@@ -251,17 +242,3 @@ def pfa(
             seen.add(i)
             out.append(feature_names[i])
     return out
-
-
-def pfa_select(
-    df: DataFrame,
-    cols: list[str],
-    explained_var: float = 0.9,
-    seed: int = 42,
-    max_driver_rows: int = MAX_DRIVER_ROWS,
-) -> list[str]:
-    """Unsupervised selection (selection.py:59 -> PFA.py:46): collect the
-    (small) feature matrix and run PFA."""
-    ensure_driver_bound(df, max_driver_rows, "pfa_select")
-    pdf = df.select(*[_qc(c) for c in cols]).toPandas()
-    return pfa(pdf.to_numpy(), cols, explained_var, seed)

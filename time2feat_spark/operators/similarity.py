@@ -194,31 +194,6 @@ def lsh_topk(
     )
 
 
-def ivf_train_centroids(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    n_cells: int = 32,
-    sample_rows: int = 20_000,
-    seed: int = 42,
-) -> np.ndarray:
-    """Coarse quantizer for IVF: k-means centroids trained on a bounded
-    sample collected driver-side (SURVEY.md §4 O8 posture — the centroid
-    table is tiny and the sample is capped regardless of corpus size;
-    at 100 TB this is a Spark sample + collect of `sample_rows` rows)."""
-    from .clustering import kmeans
-
-    frac_df = corpus.select(vec_col)
-    n = frac_df.count()
-    if n > sample_rows:
-        frac_df = frac_df.sample(fraction=sample_rows / n, seed=seed)
-    sample = np.vstack(
-        [np.asarray(r[0], dtype=np.float64) for r in frac_df.collect()]
-    )
-    sample = sample / np.linalg.norm(sample, axis=1, keepdims=True)
-    centers, _ = kmeans(sample, min(n_cells, len(sample)), seed=seed, n_init=3)
-    return centers
-
-
 def _cell_assign_udf(centroids: np.ndarray, nprobe: int):
     """pandas_udf: nprobe nearest centroid ids per vector (one matmul
     per Arrow batch — scan-side, no shuffle, no per-row Python).

@@ -49,23 +49,6 @@ def choose_tier(cfg: RollupConfig, resolution_sec: float) -> str | None:
     return best
 
 
-def route_range(
-    job,
-    start_ms: int,
-    end_ms: int,
-    resolution_sec: float,
-    sources: list[str] | None = None,
-) -> tuple[str, DataFrame]:
-    """Windows of the coarsest sufficient tier for [start_ms, end_ms),
-    day-partition-pruned. Returns (tier_name, DataFrame); tier_name is
-    "points" when the request is finer than the finest windowed tier
-    (the DataFrame is then decoded points: key cols + ts_ms + value)."""
-    tier = choose_tier(job.cfg, resolution_sec)
-    if tier is None:
-        return "points", route_points(job, start_ms, end_ms, sources)
-    return tier, job.read_tier_range(tier, start_ms, end_ms, sources)
-
-
 def available_days(job, tier: str, sources: list[str] | None = None) -> set:
     """window_day partitions that still exist for a tier (directory
     listing — the same metadata a catalog would serve)."""

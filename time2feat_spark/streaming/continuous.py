@@ -1,22 +1,15 @@
-"""Continuous aggregates over streams.
+"""Continuous aggregates over streams (SURVEY.md §2.9).
 
-Two formulations (SURVEY.md §2.9):
-
-1. ``streaming_basic_rollup`` — pure Structured Streaming for the
-   algebraic stats (count/sum/min/max/mean): readStream -> watermark ->
-   tumbling ``F.window`` aggregation. Fully incremental, built-in state
-   store, but limited to mergeable aggregates.
-
-2. ``ContinuousRollup`` — the engine's exactness-preserving path:
-   foreachBatch appends raw points to a staging table partitioned by the
-   coarsest-tier chunk, then idempotently RE-ROLLS exactly the chunk
-   partitions the batch touched (dynamic partition overwrite). Holistic
-   statistics (quantiles, autocorrelation, streaks) are recomputed from
-   the chunk's raw points, so late/out-of-order data converges to the
-   same tier tables a batch run over the full input produces — "drop
-   late" would break tier-exact equality, reprocessing is the design.
-   Restart safety comes from the streaming checkpoint (source offsets)
-   plus idempotent partition overwrites.
+``ContinuousRollup`` is the engine's exactness-preserving path:
+foreachBatch appends raw points to a staging table partitioned by the
+coarsest-tier chunk, then idempotently RE-ROLLS exactly the chunk
+partitions the batch touched (dynamic partition overwrite). Holistic
+statistics (quantiles, autocorrelation, streaks) are recomputed from
+the chunk's raw points, so late/out-of-order data converges to the
+same tier tables a batch run over the full input produces — "drop
+late" would break tier-exact equality, reprocessing is the design.
+Restart safety comes from the streaming checkpoint (source offsets)
+plus idempotent partition overwrites.
 """
 
 from __future__ import annotations
@@ -24,30 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.rollup import RollupConfig, rollup_points
-
-
-def streaming_basic_rollup(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    val_col: str,
-    window: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Algebraic tier via built-in streaming windows."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols, F.window(ts_col, window).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("count"),
-            F.sum(val_col).alias("sum"),
-            F.min(val_col).alias("min"),
-            F.max(val_col).alias("max"),
-            F.avg(val_col).alias("mean"),
-        )
-        .select(*key_cols, F.col("w.start").alias("window_start"),
-                "count", "sum", "min", "max", "mean")
-    )
 
 
 class ContinuousRollup:
@@ -121,92 +90,3 @@ class ContinuousRollup:
             .parquet(self.out_root)
             .drop("_out_chunk")
         )
-
-
-def streaming_hll_registers(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    value_col: str,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-    seed: int = 0,
-) -> DataFrame:
-    """Streaming face of `operators/approx.py`: maintain per-window
-    HyperLogLog registers incrementally. Register max is algebraic
-    (associative/commutative/idempotent), so the built-in state store
-    handles it — unlike count_distinct, which is holistic and
-    unbounded-state in a stream. State is BOUNDED at
-    keys x windows x 64 rows regardless of input rate; the sink is a
-    register table that `operators.approx.hll_estimate` (grouped on
-    key_cols + window_start_ms) turns into cardinalities, and that
-    `hll_merge` can fold into the batch ladder's registers — one sketch
-    family across batch and streaming.
-
-    Output: (key_cols..., window_start_ms, bucket, m). Use update mode
-    with a foreachBatch register-upsert for long-running jobs, or
-    complete mode to a small sink when keys x windows is bounded."""
-    from ..operators.approx import hll_bucket, hll_hash, hll_rho
-
-    return (
-        stream.where(F.col(value_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .select(
-            *key_cols,
-            F.col(ts_col).alias("_ts"),
-            hll_hash(value_col, seed).alias("_h"),
-        )
-        .groupBy(
-            *key_cols,
-            F.window("_ts", window).alias("w"),
-            hll_bucket(F.col("_h")).alias("bucket"),
-        )
-        .agg(F.max(hll_rho(F.col("_h"))).alias("m"))
-        .select(
-            *key_cols,
-            F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-            "bucket",
-            "m",
-        )
-    )
-
-
-def streaming_cms_cells(
-    stream: DataFrame,
-    ts_col: str,
-    value_col: str,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-    d: int = 4,
-    w: int = 1024,
-    seed: int = 0,
-) -> DataFrame:
-    """Streaming face of the Count-Min sketch (operators/approx.py):
-    per-window frequency cells maintained incrementally — cell counts
-    are plain sums (algebraic), so the built-in state store handles
-    them with state BOUNDED at windows x d x w rows regardless of the
-    key cardinality flowing through (a per-value streaming count would
-    hold state per distinct value). The sink is the same (row, col,
-    cnt) cell table `cms_lookup` probes and `cms_merge` folds —
-    with `streaming_hll_registers`, one sketch family across batch
-    and streaming for both cardinality and frequency."""
-    from ..operators.approx import cms_cells_expr
-
-    return (
-        stream.where(F.col(value_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .select(
-            F.col(ts_col).alias("_ts"),
-            F.explode(cms_cells_expr(value_col, d, w, seed)).alias("c"),
-        )
-        .groupBy(
-            F.window("_ts", window).alias("w"),
-            F.col("c.row").alias("row"),
-            F.col("c.col").alias("col"),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-            "row", "col", "cnt",
-        )
-    )
