@@ -16,7 +16,8 @@ For each workload and metric the summary prints each side's median and
 quartiles, the pairs ``head`` won (ties count for neither side, the
 better direction comes from ``BENCHMARK.json``), and the median of the
 per-pair ``head / base`` ratios. Runs that were not ``correct`` are
-counted and left out of the metric rows.
+counted and left out of the metric rows. Each side's operations
+attempted and failed are summed over its runs.
 """
 
 from __future__ import annotations
@@ -85,8 +86,14 @@ def report(rows: list[dict]) -> None:
         pairs = [(s, p) for s, p in pairs if "base" in p and "head" in p]
         bad = {side: sum(not p[side]["correct"] for _, p in pairs)
                for side in ("base", "head")}
+        ops = {side: [sum(p[side][k] for _, p in pairs)
+                      for k in ("attempted", "failed")]
+               for side in ("base", "head")}
         print(f"\n{workload}: {len(pairs)} pairs; not correct: base "
               f"{bad['base']}, head {bad['head']}")
+        print("  operations attempted/failed: "
+              f"base {ops['base'][0]}/{ops['base'][1]}, "
+              f"head {ops['head'][0]}/{ops['head'][1]}")
         print(f"  {'metric':<40} {'base median [q1, q3]':>28} "
               f"{'head median [q1, q3]':>28} {'wins':>6} {'ratio':>6}")
         ok = [p for _, p in pairs if p["base"]["correct"] and p["head"]["correct"]]

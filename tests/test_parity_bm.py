@@ -110,12 +110,12 @@ def test_full_parity_width_matches_report_table3(spark, bm):
 
 
 def test_parity_registry_matches_checked_in_tsfresh_grid():
-    """Round-3 VERDICT item 2: the 787-cell registry is a 1:1 bijection
-    with the checked-in enumeration of the public tsfresh 0.20 grid
-    (functions/tsfresh_grid.py), with 787 falling out as a consequence
-    of the composition — fft_coefficient is coeff 0..99 (400 cells, no
-    phantom coeff-100), change_quantiles carries the 60 settings-grid
-    cells plus the 4 flagged bridge cells."""
+    """Round-3 VERDICT item 2: the 787-cell registry is the checked-in
+    enumeration of the public tsfresh 0.20 grid (functions/tsfresh_grid.py),
+    in its order, with 787 falling out as a consequence of the
+    composition — fft_coefficient is coeff 0..99 (400 cells, no phantom
+    coeff-100), change_quantiles carries the 60 settings-grid cells plus
+    the 4 flagged bridge cells."""
     from time2feat_spark.functions.parity import PARITY_FEATURES
     from time2feat_spark.functions.tsfresh_grid import BRIDGE_CELLS, grid
 
@@ -125,7 +125,7 @@ def test_parity_registry_matches_checked_in_tsfresh_grid():
     assert len(g) == 787
     assert len(set(ts_names)) == 787, "duplicate tsfresh names"
     assert len(set(eng_names)) == 787, "duplicate engine names"
-    assert set(eng_names) == set(PARITY_FEATURES)
+    assert eng_names == PARITY_FEATURES
     # tsfresh's actual fft grid: coeff 0..99, no 100
     assert 'fft_coefficient__attr_"real"__coeff_99' in ts_names
     assert 'fft_coefficient__attr_"real"__coeff_100' not in ts_names
@@ -173,6 +173,54 @@ def test_grid_family_counts_match_derivation_note():
     assert set(counts) == set(SIMPLE) | set(expected_param)
     assert sum(expected_param.values()) == 750
     assert sum(counts.values()) == 37 + 750 == 787
+
+
+def _bits(x) -> np.ndarray:
+    """float64 bit patterns, every NaN mapped to one pattern."""
+    x = np.asarray(x, dtype=np.float64)
+    return np.where(np.isnan(x), np.nan, x).view(np.int64)
+
+
+def test_full_grid_rows_depend_only_on_their_own_series(spark):
+    """The full-grid Spark path on a synthetic frame: 787 columns in
+    registry order, and each series' row equals parity_stats over that
+    series alone in its pow2 bucket, so the row does not move with the
+    input partitioning or with the series that share its Arrow batch."""
+    from time2feat_spark.functions.parity import PARITY_FEATURES, parity_stats
+    from time2feat_spark.operators.features import extract_parity_features
+
+    rng = np.random.default_rng(11)
+    lens = [0, 1, 7, 100, 300, 257, 64, 9]
+    series = {f"s{i}": rng.normal(0, 3, n).round(2) for i, n in enumerate(lens)}
+    series["s7"][:] = 4.0  # a constant series
+    cols = [f"feat_{f}" for f in PARITY_FEATURES]
+
+    def extract(ids, partitions):
+        pdf = pd.DataFrame({
+            "doc_id": ids, "source": "syn",
+            "values": [series[i].tolist() for i in ids],
+        })
+        sdf = spark.createDataFrame(pdf).repartition(partitions)
+        out = extract_parity_features(sdf, value_col="values").toPandas()
+        return out.set_index("doc_id").loc[ids]
+
+    ids = list(series)
+    one = extract(ids, 1)
+    assert [c for c in one.columns if c.startswith("feat_")] == cols
+    assert one["n"].tolist() == lens
+    for doc, vals in series.items():
+        n = len(vals)
+        mat = np.full((1, 1 << max(n - 1, 0).bit_length()), np.nan)
+        mat[0, :n] = vals
+        st = parity_stats(mat, np.array([n]))
+        want = _bits([st[f][0] for f in PARITY_FEATURES])
+        assert (_bits(one.loc[doc, cols]) == want).all(), doc
+
+    seven = extract(ids, 7)
+    assert (_bits(seven[cols]) == _bits(one[cols])).all()
+    alone = extract(["s3"], 1)
+    beside = extract(["s3", "s4"], 1)
+    assert (_bits(beside.loc[["s3"], cols]) == _bits(alone[cols])).all()
 
 
 @needs_bm

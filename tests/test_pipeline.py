@@ -120,6 +120,7 @@ def test_reference_feature_name_grammar():
     assert r("feat_cid_ce_norm") == "cid_ce__normalize_True"
     assert r("feat_fft_centroid") == 'fft_aggregated__aggtype_"centroid"'
     assert r("feat_binned_entropy_10") == "binned_entropy__max_bins_10"
+    assert r("feat_fourier_entropy_10") == "fourier_entropy__bins_10"
 
 
 @needs_bm

@@ -16,6 +16,7 @@ import pandas as pd
 import pytest
 
 from time2feat_spark.generator import gen_pandas
+from time2feat_spark.operators import rollup as R
 from time2feat_spark.operators.rollup import (
     RollupConfig,
     assemble,
@@ -127,7 +128,7 @@ def test_algebraic_cross_tier_consistency(seq_pdf):
     pd.testing.assert_frame_equal(agg, hh)
 
 
-def test_rollup_points_streaming_flush_invariance(spark):
+def test_rollup_points_streaming_flush_invariance(spark, monkeypatch):
     """The streaming group-flush kernel stage (scale path: bounded task
     memory) must be value-identical to any other partitioning/flush size,
     on a SKEWED key distribution (one hot key with ~80% of rows)."""
@@ -151,10 +152,9 @@ def test_rollup_points_streaming_flush_invariance(spark):
         key = "spark.sql.shuffle.partitions"
         prev = spark.conf.get(key)
         spark.conf.set(key, str(num_partitions))
+        monkeypatch.setattr(R, "_FLUSH_ROWS", flush_rows)
         try:
-            out = rollup_points(
-                sdf, ["key"], "ts", "value", cfg, flush_rows=flush_rows,
-            ).toPandas()
+            out = rollup_points(sdf, ["key"], "ts", "value", cfg).toPandas()
         finally:
             spark.conf.set(key, prev)
         return out.sort_values(

@@ -29,7 +29,6 @@ __all__ = [
     "window_stats",
     "ROLLUP_FEATURES",
     "BASIC_FEATURES",
-    "pad_windows",
 ]
 
 # Features always emitted (top-level tier-table columns).
@@ -115,26 +114,6 @@ ROLLUP_FEATURES = (
         for (ql, qh, isabs, agg) in _CHANGE_Q
     ]
 )
-
-
-def pad_windows(values: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Slice ``values`` into k ragged windows [starts[i], ends[i]) and pack
-    them into a right-NaN-padded (k, w) matrix. Vectorized (no per-window
-    Python loop): a flat gather index is built with arange arithmetic.
-    """
-    counts = (ends - starts).astype(np.int64)
-    k = counts.shape[0]
-    if k == 0:
-        return np.empty((0, 0)), counts
-    w = int(counts.max())
-    # gather index: row i, col j -> starts[i] + j  (clamped; mask -> NaN)
-    col = np.arange(w)
-    idx = starts[:, None] + col[None, :]
-    mask = col[None, :] < counts[:, None]
-    idx = np.where(mask, idx, 0)
-    mat = values[idx].astype(np.float64, copy=False)
-    mat = np.where(mask, mat, np.nan)
-    return mat, counts
 
 
 def _nansum(mat: np.ndarray) -> np.ndarray:
@@ -812,11 +791,17 @@ def _fft_features(
     k = mat.shape[0]
     for f in feats:
         out[f] = np.full(k, np.nan)
+    want_angle = any(f.startswith("fft_coeff_angle_") for f in feats)
     for cnt in np.unique(counts):
         sel = np.nonzero(counts == cnt)[0]
+        if int(cnt) < 1:
+            continue
         sub = mat[sel, : int(cnt)]
         cplx = np.fft.rfft(sub, axis=1)
         spec = np.abs(cplx)
+        # angle of the whole spectrum at once: on a strided column
+        # numpy's arctan2 can take its scalar path, whose last bits differ
+        angle = np.angle(cplx, deg=True) if want_angle else None
         nb = spec.shape[1]
         for f in feats:
             m = re.fullmatch(r"fft_coeff_(abs|real|imag|angle)_(\d+)", f)
@@ -831,7 +816,7 @@ def _fft_features(
                     elif attr == "imag":
                         out[f][sel] = cplx[:, c].imag
                     else:  # angle, in degrees (tsfresh convention)
-                        out[f][sel] = np.angle(cplx[:, c], deg=True)
+                        out[f][sel] = angle[:, c]
             elif f == "fft_centroid":
                 idx = np.arange(nb, dtype=np.float64)
                 tot = spec.sum(axis=1)
@@ -863,7 +848,7 @@ def welch_psd_rows(sub: np.ndarray) -> np.ndarray:
     # (rows, segments, nper) gather — one fancy index, no Python loop
     idx = starts[:, None] + np.arange(nper)[None, :]
     segs = sub[:, idx]
-    segs = segs - segs.mean(axis=2, keepdims=True)
+    segs = segs - (_ordered_sum(segs, 2) / nper)[:, :, None]
     # periodic hann; length-1 degenerates to [0] -> scipy uses [1]
     w = (
         0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(nper) / nper)
@@ -924,18 +909,33 @@ def _agg_autocorr(
     lag_valid = (np.arange(1, L + 1)[:, None] < counts[None, :])
     masked = np.where(lag_valid, acf, np.nan)
     cnt = lag_valid.sum(axis=0).astype(np.float64)
+
+    def nansum(x):
+        return _ordered_sum(np.where(np.isnan(x), 0.0, x), 0)
+
     with np.errstate(invalid="ignore", divide="ignore"):
         for f in feats:
             agg = f.split("_")[2]  # agg_autocorr_<agg>_40
             if agg == "mean":
-                out[f] = np.nansum(masked, axis=0) / cnt
+                out[f] = nansum(masked) / cnt
             elif agg == "median":
                 out[f] = _masked_quantile(masked.T, 0.5)
             elif agg == "var":
-                mu = np.nansum(masked, axis=0) / cnt
+                mu = nansum(masked) / cnt
                 dev = np.where(lag_valid, (masked - mu[None, :]) ** 2, np.nan)
-                out[f] = np.nansum(dev, axis=0) / cnt
+                out[f] = nansum(dev) / cnt
             out[f] = np.where(cnt > 0, out[f], np.nan)
+
+
+def _ordered_sum(x: np.ndarray, axis: int) -> np.ndarray:
+    """Sum along ``axis`` in index order, for any number of windows.
+    numpy adds along a strided axis in order but along a contiguous one
+    pairwise, and which one an axis is can depend on how many windows
+    share the call, so a window alone would get different last bits."""
+    acc = np.zeros(np.delete(x.shape, axis))
+    for part in np.moveaxis(x, axis, 0):
+        acc += part
+    return acc
 
 
 def _pacf(

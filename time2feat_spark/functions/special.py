@@ -37,6 +37,9 @@ def _betacf(a, b, x):
     d = np.where(np.abs(d) < _FPMIN, _FPMIN, d)
     d = 1.0 / d
     h = d.copy()
+    # an element stops at its own convergence, not at the slowest one's,
+    # so its value does not depend on the other elements of the call
+    done = np.zeros(h.shape, dtype=bool)
     for m in range(1, _MAXIT + 1):
         m2 = 2 * m
         aa = m * (b - m) * x / ((qam + m2) * (a + m2))
@@ -45,7 +48,7 @@ def _betacf(a, b, x):
         c = 1.0 + aa / c
         c = np.where(np.abs(c) < _FPMIN, _FPMIN, c)
         d = 1.0 / d
-        h = h * d * c
+        half = h * d * c
         aa = -(a + m) * (qab + m) * x / ((a + m2) * (qap + m2))
         d = 1.0 + aa * d
         d = np.where(np.abs(d) < _FPMIN, _FPMIN, d)
@@ -53,8 +56,9 @@ def _betacf(a, b, x):
         c = np.where(np.abs(c) < _FPMIN, _FPMIN, c)
         d = 1.0 / d
         delta = d * c
-        h = h * delta
-        if np.all(np.abs(delta - 1.0) < _EPS):
+        h = np.where(done, h, half * delta)
+        done |= np.abs(delta - 1.0) < _EPS
+        if done.all():
             break
     return h
 

@@ -25,8 +25,8 @@ Reconstruction provenance, cell by cell:
   as the full-corridor (ql=0, qh=1) std/median cells from the survey's
   4-agg spec, flagged in ``BRIDGE_CELLS``. If an environment that can
   import tsfresh 0.20 finds a different composition, THIS file is the
-  single point of correction — parity.py's registry is tested to be a
-  1:1 bijection with it (tests/test_parity_bm.py).
+  single point of correction — parity.py's registry is derived from it,
+  in its order.
 
 This is an enumeration of a public API's parameter space; no reference
 code is copied.
@@ -72,9 +72,10 @@ def grid() -> list[tuple[str, str]]:
             f"time_reversal_asymmetry_statistic__lag_{lag}",
             f"time_reversal_asymmetry_lag{lag}",
         ))
+    for lag in (1, 2, 3):
         g.append((f"c3__lag_{lag}", f"c3_lag{lag}"))
-    g.append(("cid_ce__normalize_True", "cid_ce_norm"))
     g.append(("cid_ce__normalize_False", "cid_ce"))
+    g.append(("cid_ce__normalize_True", "cid_ce_norm"))
     for r in range(20):
         g.append((
             f"symmetry_looking__r_{_f(r * 0.05)}",
@@ -106,8 +107,8 @@ def grid() -> list[tuple[str, str]]:
             f"index_mass_quantile__q_{_f(q / 100)}",
             f"index_mass_quantile_{q}",
         ))
-    for coeff in range(15):
-        for w in (2, 5, 10, 20):
+    for w in (2, 5, 10, 20):
+        for coeff in range(15):
             g.append((
                 f"cwt_coefficients__coeff_{coeff}__w_{w}"
                 "__widths_(2, 5, 10, 20)",
@@ -130,7 +131,7 @@ def grid() -> list[tuple[str, str]]:
                         f"change_q_{int(ql * 10)}_{int(qh * 10)}"
                         f"_{int(b)}_{agg}",
                     ))
-    g.extend(sorted(BRIDGE_CELLS.items()))
+    g.extend(BRIDGE_CELLS.items())
     for a in ("real", "imag", "abs", "angle"):
         for coeff in range(100):
             g.append((
@@ -188,6 +189,7 @@ def grid() -> list[tuple[str, str]]:
     g.append(("count_below__t_0", "count_below_t0"))
     for b in (2, 3, 5, 10, 100):
         g.append((f"lempel_ziv_complexity__bins_{b}", f"lempel_ziv_b{b}"))
+    for b in (2, 3, 5, 10, 100):
         g.append((f"fourier_entropy__bins_{b}", f"fourier_entropy_b{b}"))
     for d in (3, 4, 5, 6, 7):
         g.append((

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..functions.kernels import ROLLUP_FEATURES
-from ..operators.rollup import RollupConfig, rollup_sequences
+from ..operators.rollup import RollupConfig, apply_ragged, rollup_sequences
 
 # one window wide enough to cover any series => whole-series aggregation
 _WHOLE = [("all", 1 << 40)]
@@ -72,8 +72,9 @@ def extract_parity_features(
     (report Table 3 width oracle; tsfresh call at
     /root/reference/t2f/extraction/extractor_single.py:26-32). Fixture-
     parity path — the production ladder uses the curated subset
-    (SURVEY.md §7.3). Shuffle-free mapInPandas; batch rows are padded to
-    a common width and processed by functions/parity.py in one call."""
+    (SURVEY.md §7.3). Shuffle-free mapInPandas; each series is padded to
+    its pow2 bucket, as the ladder's windows are, so its row does not
+    depend on which series share its batch."""
     from pyspark.sql.types import DoubleType, LongType
 
     from ..functions.parity import PARITY_FEATURES, parity_stats
@@ -94,22 +95,14 @@ def extract_parity_features(
         for pdf in batches:
             if not len(pdf):
                 continue
-            from ..functions.kernels import pad_windows
-
-            arrs = list(pdf["_vals"])
-            lens = np.fromiter((len(a) for a in arrs), dtype=np.int64,
-                               count=len(arrs))
-            flat = (
-                np.concatenate([np.asarray(a, dtype=np.float64) for a in arrs])
-                if lens.sum()
-                else np.empty(0)
-            )
+            arrs = [np.asarray(a, dtype=np.float64) for a in pdf["_vals"]]
+            lens = np.fromiter(map(len, arrs), dtype=np.int64, count=len(arrs))
+            # the trailing NaN keeps every gather index in bounds when all
+            # series of the batch are empty
+            flat = np.concatenate(arrs + [np.full(1, np.nan)])
             ends = np.cumsum(lens)
-            starts = ends - lens
-            mat, counts = pad_windows(flat, starts, ends)
-            st = parity_stats(mat, counts)
-            res = {"doc_id": pdf["doc_id"], "source": pdf["source"],
-                   "n": counts}
+            st = apply_ragged(flat, ends - lens, ends, parity_stats)
+            res = {"doc_id": pdf["doc_id"], "source": pdf["source"], "n": lens}
             for nm in PARITY_FEATURES:
                 res[f"feat_{nm}"] = st[nm]
             yield pd.DataFrame(res)

@@ -79,7 +79,7 @@ def _next_pow2(x: np.ndarray) -> np.ndarray:
     return np.power(2, np.ceil(np.log2(np.maximum(x, 1))).astype(np.int64))
 
 
-#: row-block budget for one padded matrix inside stats_ragged (bytes).
+#: row-block budget for one padded matrix inside apply_ragged (bytes).
 #: The multi-feature pass re-reads the matrix (and feature temporaries)
 #: ~dozens of times; blocking windows so each matrix is ~2 MB keeps that
 #: traffic cache-resident instead of streaming a 10-100 MB matrix from
@@ -92,19 +92,21 @@ def _next_pow2(x: np.ndarray) -> np.ndarray:
 _STATS_BLOCK_BYTES = 2 << 20
 
 
-def stats_ragged(
+def apply_ragged(
     flat: np.ndarray,
     starts: np.ndarray,
     ends: np.ndarray,
-    features: list[str],
+    fn,
 ) -> dict[str, np.ndarray]:
-    """window_stats over ragged windows, batch-invariant via pow2 buckets."""
+    """``fn(mat, counts)`` over the ragged windows ``[starts, ends)`` of
+    ``flat``, assembled back into window order. Each window is padded
+    with NaN to the width of its pow2 bucket, so its matrix width
+    depends only on its own length, and an ``fn`` whose rows do not
+    depend on each other gives a window the same result in any batch.
+    ``fn`` returns ``{name: (rows,) array}``."""
     counts = (ends - starts).astype(np.int64)
     k = len(counts)
     out: dict[str, np.ndarray] | None = None
-    if k == 0:
-        names = ["count", "sum", "min", "max", "mean"] + list(features)
-        return {nm: np.empty(0) for nm in names}
     buckets = _next_pow2(counts)
     for b in np.unique(buckets):
         sel_all = np.nonzero(buckets == b)[0]
@@ -123,13 +125,28 @@ def stats_ragged(
                     np.float64, copy=False
                 )
                 mat = np.where(mask, mat, np.nan)
-            st = window_stats(mat, counts[sel], features)
+            st = fn(mat, counts[sel])
             if out is None:
                 out = {nm: np.empty(k, dtype=v.dtype) for nm, v in st.items()}
             for nm, v in st.items():
                 out[nm][sel] = v
     assert out is not None
     return out
+
+
+def stats_ragged(
+    flat: np.ndarray,
+    starts: np.ndarray,
+    ends: np.ndarray,
+    features: list[str],
+) -> dict[str, np.ndarray]:
+    """window_stats over ragged windows, batch-invariant via pow2 buckets."""
+    if len(starts) == 0:
+        names = ["count", "sum", "min", "max", "mean"] + list(features)
+        return {nm: np.empty(0) for nm in names}
+    return apply_ragged(
+        flat, starts, ends, lambda mat, counts: window_stats(mat, counts, features)
+    )
 
 
 # --------------------------------------------------------------------- core
@@ -432,6 +449,8 @@ def rollup_points_pdf(
 
 #: scan bytes per shuffle partition when rollup_points sizes its shuffle
 _BYTES_PER_TASK = 256 << 20
+#: rows rollup_points buffers before it looks for completed groups
+_FLUSH_ROWS = 65_536
 
 
 def rollup_points(
@@ -440,7 +459,6 @@ def rollup_points(
     ts_col: str,
     val_col: str,
     cfg: RollupConfig | None = None,
-    flush_rows: int = 65_536,
 ) -> DataFrame:
     """Tier-ladder rollup over long-format points.
 
@@ -501,6 +519,7 @@ def rollup_points(
         size_bytes = 0
     num_partitions = max(default_p, -(-size_bytes // _BYTES_PER_TASK))
     group_cols = key_cols + ["_chunk"]
+    flush_rows = _FLUSH_ROWS  # read here, so the closure carries the value
     parted = chunked.repartition(num_partitions, *group_cols)
     parted = parted.sortWithinPartitions(*group_cols)
 

@@ -26,6 +26,7 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 
+from .functions.parity import _KERNEL_RENAME
 from .operators.clustering import ClusterWrapper, ami
 from .operators.features import (
     extract_pair_features,
@@ -37,12 +38,10 @@ from .operators.selection import clean_features, pfa
 from .sources.ts_reader import bm_series_rows
 
 
-#: kernel-registry names whose tsfresh counterpart differs from the
-#: parity-registry name (parity.py's _KERNEL_RENAME, inverted, plus the
-#: rollup-only fft aggregate aliases)
+#: kernel-registry names that differ from the parity-registry name:
+#: parity's _KERNEL_RENAME, inverted, plus the rollup-only fft aggregates
 _KERNEL_TO_PARITY = {
-    "count": "length", "sum": "sum_values", "min": "minimum",
-    "max": "maximum", "std": "standard_deviation",
+    **{kern: par for par, kern in _KERNEL_RENAME.items()},
     "fft_centroid": "fft_agg_centroid", "fft_variance": "fft_agg_variance",
 }
 
