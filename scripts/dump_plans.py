@@ -7,9 +7,8 @@ Writes OUTDIR/<query>_<SUFFIX>.txt for each named query (default: every
 query in queries()). Plans are built, not collected, at
 $SPARK_GRAFT_SF_DIR (default sf0.1); building some queries still runs
 Spark jobs (eager checkpoints, and the IVF layout and LadderJob tables
-cached under .cache/ on first use). No builder branches on input size
-(rollup_points widens its shuffle only past 256 MB of scan per task), so
-plan shape does not depend on sf; AQE runtime rewrites are noted in
+cached under .cache/ on first use). No query branches on input size,
+so plan shape does not depend on sf; AQE runtime rewrites are noted in
 OPTIMIZATION_r06.md where they matter.
 """
 

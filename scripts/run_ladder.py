@@ -7,10 +7,13 @@ Usage (north_rule launch mode):
   spark-submit --py-files t2f_spark.zip scripts/run_ladder.py \
       --input  s3://bucket/sequences \
       --output s3://bucket/rollup \
-      [--incremental] [--rows-per-task 200000]
+      [--incremental] [--conf spark.sql.shuffle.partitions=2000]
 
 On a real cluster pass the usual --master/--num-executors/--conf flags;
-the job itself is agnostic (no local-mode assumptions). Re-running after
+the job itself is agnostic (no local-mode assumptions). It passes no
+partition count to any shuffle: AQE sizes each unit's rebalance from the
+bytes it carries, up to spark.sql.shuffle.partitions, so a cluster run
+raises that conf as it would for any other keyed shuffle. Re-running after
 a failure resumes from the checkpoint manifest; --incremental processes
 only rows past each unit's watermark.
 """
@@ -32,7 +35,6 @@ def main() -> None:
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
     p.add_argument("--incremental", action="store_true")
-    p.add_argument("--rows-per-task", type=int, default=200_000)
     p.add_argument("--max-units", type=int, default=None)
     p.add_argument(
         "--retention",
@@ -48,7 +50,7 @@ def main() -> None:
         help="after the run, run LadderJob.maintain(): retention (keep "
         "everything unless --retention is given), then rewrite each "
         "(tier, window_day) leaf holding more than one file to one file — "
-        "the small-file maintenance pass for salted/incremental writes (on "
+        "the small-file maintenance pass for rebalanced/incremental writes (on "
         "Iceberg use rewrite_data_files instead).",
     )
     args = p.parse_args()
@@ -58,9 +60,7 @@ def main() -> None:
     from time2feat_spark.plans.ladder_job import LadderJob
 
     spark = SparkSession.builder.appName("t2f-ladder").getOrCreate()
-    job = LadderJob(
-        spark, args.input, args.output, rows_per_task=args.rows_per_task
-    )
+    job = LadderJob(spark, args.input, args.output)
     res = job.run(incremental=args.incremental, max_units=args.max_units)
     if args.retention or args.compact:
         from time2feat_spark.plans.retention import RetentionPolicy

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -20,6 +21,25 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def spark_conf(spark):
+    """``with spark_conf({key: value}):`` sets session confs for the
+    block only and restores the previous values after it."""
+
+    @contextlib.contextmanager
+    def scoped(conf: dict):
+        prev = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+
+    return scoped
 
 
 @pytest.fixture(scope="session")

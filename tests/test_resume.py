@@ -1,7 +1,7 @@
 """T-resume (SURVEY.md §5): kill the ladder job after k units, resume,
 and verify the output table is identical to an uninterrupted run, with
 checkpoint lineage populated. Also exercises incremental watermark runs
-(append-only input -> only new docs processed) and the skew-salted
+(append-only input -> only new docs processed) and the rebalanced
 write path."""
 
 from __future__ import annotations
@@ -30,6 +30,9 @@ from time2feat_spark.plans.ladder_job import LadderJob
 from time2feat_spark.plans.retention import RetentionPolicy
 
 CFG = RollupConfig(tiers=[("1m", 60), ("1h", 3600)], include_raw=False)
+#: the test units are below AQE's default 1 MB partition floor; under a
+#: 16 KB floor the larger ones split into several tasks, hence files
+MULTI_FILE = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k"}
 
 
 def _write_input(spark, path, n):
@@ -100,7 +103,7 @@ def _written(files) -> tuple[int, int, int]:
     return rows, points, nbytes
 
 
-def test_unit_metrics_are_what_each_run_wrote(spark, tmp_path):
+def test_unit_metrics_are_what_each_run_wrote(spark, spark_conf, tmp_path):
     """Each `done` record holds what its own run wrote for the unit (the
     increment in append mode, not the unit's running total) and the
     highest doc_id it processed; a run with no new docs records 0 and
@@ -108,12 +111,13 @@ def test_unit_metrics_are_what_each_run_wrote(spark, tmp_path):
     inp, out = str(tmp_path / "seq"), str(tmp_path / "out")
     docs = gen_pandas(0, 200)
     spark.createDataFrame(docs[:150]).write.parquet(inp)
-    job = LadderJob(spark, inp, out, CFG, rows_per_task=40)  # several files
+    job = LadderJob(spark, inp, out, CFG)
     marks = {f"source={s}": "" for s in docs["source"].unique()}
 
     def run_and_check(new_docs):
         before = {u: set(_parquet_files(f"{out}/{u}")) for u in marks}
-        r = job.run(incremental=True)
+        with spark_conf(MULTI_FILE):  # several files per leaf
+            r = job.run(incremental=True)
         assert sorted(r["processed"]) == sorted(marks)
         recs = {x.unit: x for x in job.manifest.records()
                 if x.run_id == r["run_id"] and x.status == "done"}
@@ -210,30 +214,34 @@ def test_incremental_crash_between_write_and_manifest(spark, tmp_path):
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_salted_write_spreads_hot_source(spark, tmp_path):
-    """The Zipf-heavy source must be written by multiple salted tasks."""
+def test_salted_write_spreads_hot_source(spark, spark_conf, tmp_path):
+    """The Zipf-heavy source must be written by several parallel tasks,
+    with no engine argument: AQE splits its rebalance by the bytes it
+    carries. Its docs all fall in one day, so each file is one task."""
     import glob
 
     inp = str(tmp_path / "seq")
     _write_input(spark, inp, 600)
     out = str(tmp_path / "out")
-    LadderJob(spark, inp, out, CFG, rows_per_task=50).run()
+    with spark_conf(MULTI_FILE):
+        LadderJob(spark, inp, out, CFG).run()
     hot_files = glob.glob(f"{out}/source=src_0/tier=1m/window_day=*/part-*.parquet")
-    assert len(hot_files) >= 3, f"expected salted parallel files, got {len(hot_files)}"
+    assert len(hot_files) >= 3, f"expected parallel files, got {len(hot_files)}"
 
 
-def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
-    """plans/compaction: after a salted run plus an incremental append,
+def test_compaction_shrinks_files_preserves_data(spark, spark_conf, tmp_path):
+    """plans/compaction: after a multi-file run plus an incremental append,
     leaves hold many small files; compact_all must reduce to one file
     per leaf and leave the table contents bit-identical."""
     inp = str(tmp_path / "seq")
     out = str(tmp_path / "out")
     _write_input(spark, inp, 300)
-    job = LadderJob(spark, inp, out, CFG, rows_per_task=40)  # heavy salting
-    job.run()
-    # incremental append piles more files into the same leaves
-    spark.createDataFrame(gen_pandas(300, 420)).write.mode("append").parquet(inp)
-    job.run(incremental=True)
+    job = LadderJob(spark, inp, out, CFG)
+    with spark_conf(MULTI_FILE):
+        job.run()
+        # incremental append piles more files into the same leaves
+        spark.createDataFrame(gen_pandas(300, 420)).write.mode("append").parquet(inp)
+        job.run(incremental=True)
 
     before_files = len(_parquet_files(out))
     before = _table(spark, out)
@@ -248,7 +256,7 @@ def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
     assert all(r["rows"] is None for r in res2.values())
 
 
-def test_run_compact_postpass(spark, tmp_path):
+def test_run_compact_postpass(spark, spark_conf, tmp_path):
     """maintain() owns the small-file fix after an incremental run: every
     leaf holds at most one file, the data is unchanged, and each rewrite
     is recorded in the manifest (status='compacted', namespaced unit key
@@ -259,12 +267,12 @@ def test_run_compact_postpass(spark, tmp_path):
     inp = str(tmp_path / "seq")
     out = str(tmp_path / "out")
     _write_input(spark, inp, 300)
-    job = LadderJob(spark, inp, out, CFG, rows_per_task=40)  # heavy salting
-    job.run(incremental=True)
-    before = _table(spark, out)
-    spark.createDataFrame(gen_pandas(300, 420)).write.mode("append").parquet(inp)
-    job = LadderJob(spark, inp, out, CFG, rows_per_task=40)
-    r = job.run(incremental=True)
+    with spark_conf(MULTI_FILE):
+        LadderJob(spark, inp, out, CFG).run(incremental=True)
+        before = _table(spark, out)
+        spark.createDataFrame(gen_pandas(300, 420)).write.mode("append").parquet(inp)
+        job = LadderJob(spark, inp, out, CFG)
+        r = job.run(incremental=True)
     assert r["processed"]
     res = job.maintain(policy=RetentionPolicy(max_age_days={}))  # keep all
     assert not res["retention"]["dropped"]
@@ -289,13 +297,14 @@ def test_run_compact_postpass(spark, tmp_path):
 
 
 @pytest.fixture(scope="module")
-def salted_out(spark, tmp_path_factory):
-    """A tier table whose leaves hold one file or several (salted run).
-    Tests copy it before changing it."""
+def salted_out(spark, spark_conf, tmp_path_factory):
+    """A tier table whose leaves hold one file or several. Tests copy it
+    before changing it."""
     base = tmp_path_factory.mktemp("salted")
     inp, out = str(base / "seq"), str(base / "out")
     _write_input(spark, inp, 300)
-    LadderJob(spark, inp, out, CFG, rows_per_task=40).run()
+    with spark_conf(MULTI_FILE):
+        LadderJob(spark, inp, out, CFG).run()
     return out
 
 

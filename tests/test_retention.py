@@ -24,6 +24,9 @@ from time2feat_spark.plans.retention import (
 # 10-minute ticks spread each ~1056-token doc across ~7.3 days
 CFG = RollupConfig(tiers=[("1h", 3600), ("1d", 86400)], include_raw=False,
                    tick_ms=600_000, features=["variance", "median"])
+#: the test units are below AQE's default 1 MB partition floor; under a
+#: 16 KB floor the larger ones split into several tasks, hence files
+MULTI_FILE = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k"}
 
 
 @pytest.fixture(scope="module")
@@ -87,14 +90,16 @@ def test_default_policy_tiers():
     assert p.cutoff_day("unknown_tier", now) is None  # default: keep
 
 
-def test_maintain_orchestrates_retention_and_compaction(spark, tmp_path):
+def test_maintain_orchestrates_retention_and_compaction(spark, spark_conf,
+                                                       tmp_path):
     """LadderJob.maintain = retention drops then compaction, idempotent,
     both recorded in the manifest — the cron-able maintenance entry."""
     inp = str(tmp_path / "seq")
     spark.createDataFrame(gen_pandas(0, 40)).write.parquet(inp)
     out = str(tmp_path / "out")
-    job = LadderJob(spark, inp, out, CFG, rows_per_task=30)  # salted files
-    job.run()
+    job = LadderJob(spark, inp, out, CFG)
+    with spark_conf(MULTI_FILE):
+        job.run()
 
     days = sorted(
         int(p.rsplit("window_day=", 1)[1])
@@ -121,8 +126,8 @@ def test_maintain_orchestrates_retention_and_compaction(spark, tmp_path):
     assert all(v["rows"] is None for v in res2["compaction"].values())
 
 
-def test_run_ladder_compact_alone_keeps_everything(spark, tmp_path, monkeypatch,
-                                                   capsys):
+def test_run_ladder_compact_alone_keeps_everything(spark, spark_conf, tmp_path,
+                                                   monkeypatch, capsys):
     """scripts/run_ladder.py --compact maintains through
     LadderJob.maintain() with a keep-everything policy: raw and 1m
     windows old enough for the default policy to drop stay, and every
@@ -140,9 +145,9 @@ def test_run_ladder_compact_alone_keeps_everything(spark, tmp_path, monkeypatch,
     run_ladder = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(run_ladder)
     monkeypatch.setattr(sys, "argv", ["run_ladder.py", "--input", inp,
-                                      "--output", out, "--rows-per-task", "5",
-                                      "--compact"])
-    run_ladder.main()
+                                      "--output", out, "--compact"])
+    with spark_conf(MULTI_FILE):  # the script reuses this session
+        run_ladder.main()
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert res["retention"]["dropped"] == []
     assert any(c["rows"] is not None for c in res["compaction"].values())

@@ -128,7 +128,8 @@ def test_algebraic_cross_tier_consistency(seq_pdf):
     pd.testing.assert_frame_equal(agg, hh)
 
 
-def test_rollup_points_streaming_flush_invariance(spark, monkeypatch):
+def test_rollup_points_streaming_flush_invariance(spark, spark_conf,
+                                                 monkeypatch):
     """The streaming group-flush kernel stage (scale path: bounded task
     memory) must be value-identical to any other partitioning/flush size,
     on a SKEWED key distribution (one hot key with ~80% of rows)."""
@@ -147,16 +148,14 @@ def test_rollup_points_streaming_flush_invariance(spark, monkeypatch):
     sdf = spark.createDataFrame(pdf)
 
     def run(num_partitions, flush_rows):
-        # the input is far below _BYTES_PER_TASK, so the shuffle width is
-        # exactly spark.sql.shuffle.partitions
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, str(num_partitions))
+        # no AQE coalescing: the shuffle width is exactly
+        # spark.sql.shuffle.partitions
         monkeypatch.setattr(R, "_FLUSH_ROWS", flush_rows)
-        try:
+        with spark_conf({
+            "spark.sql.shuffle.partitions": str(num_partitions),
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        }):
             out = rollup_points(sdf, ["key"], "ts", "value", cfg).toPandas()
-        finally:
-            spark.conf.set(key, prev)
         return out.sort_values(
             ["key", "tier", "window_start_ms"]
         ).reset_index(drop=True)

@@ -194,37 +194,19 @@ def window_stats(
     n = counts.astype(np.float64)
     out: dict[str, np.ndarray] = {}
 
-    # Fast path for padding-free matrices (every pow2 bucket whose
-    # windows are exactly full — the COMMON case in the ladder): plain
-    # ufunc reductions skip nansum's NaN-substitution copy. Bit-identical
-    # to the nan path: same matrix, same pairwise reduction tree, the
-    # substitution was a no-op. NaN VALUES (not padding) still route
-    # through the nan-aware path.
-    full = bool((counts == w).all()) and not np.isnan(mat).any() if w else False
-    if full:
-        rsum = lambda m: np.sum(m, axis=1)  # noqa: E731
-        rmin = lambda m: np.min(m, axis=1)  # noqa: E731
-        rmax = lambda m: np.max(m, axis=1)  # noqa: E731
-        rcumsum = lambda m: np.cumsum(m, axis=1)  # noqa: E731
-    else:
-        rsum = _nansum
-        rmin = lambda m: np.nanmin(m, axis=1)  # noqa: E731
-        rmax = lambda m: np.nanmax(m, axis=1)  # noqa: E731
-        rcumsum = lambda m: np.nancumsum(m, axis=1)  # noqa: E731
-
     with np.errstate(invalid="ignore", divide="ignore"):
-        s = rsum(mat) if w else np.zeros(k)
+        s = _nansum(mat) if w else np.zeros(k)
         mean = s / n
         out["count"] = n
         out["sum"] = s
-        out["min"] = rmin(mat) if w else np.full(k, np.nan)
-        out["max"] = rmax(mat) if w else np.full(k, np.nan)
+        out["min"] = np.nanmin(mat, axis=1) if w else np.full(k, np.nan)
+        out["max"] = np.nanmax(mat, axis=1) if w else np.full(k, np.nan)
         out["mean"] = mean
 
         centered = mat - mean[:, None]
-        m2 = rsum(centered * centered) / n  # population variance (ddof=0)
+        m2 = _nansum(centered * centered) / n  # population variance (ddof=0)
         std = np.sqrt(m2)
-        sq_sum = rsum(mat**2)
+        sq_sum = _nansum(mat**2)
 
         if "variance" in fset:
             out["variance"] = m2
@@ -235,7 +217,7 @@ def window_stats(
         if "root_mean_square" in fset:
             out["root_mean_square"] = np.sqrt(sq_sum / n)
         if "absolute_maximum" in fset:
-            out["absolute_maximum"] = rmax(np.abs(mat))
+            out["absolute_maximum"] = np.nanmax(np.abs(mat), axis=1)
         if "variation_coefficient" in fset:
             out["variation_coefficient"] = std / mean
         # feature names are parametric: any grid cell of the tsfresh
@@ -273,13 +255,13 @@ def window_stats(
         # ---- moment shape stats (pandas G1/G2 estimators) ----
         c2 = centered * centered
         if "skewness" in fset:
-            m3 = rsum(c2 * centered) / n
+            m3 = _nansum(c2 * centered) / n
             g1 = m3 / np.where(m2 > 0, m2, np.nan) ** 1.5
             G1 = g1 * np.sqrt(n * (n - 1)) / (n - 2)
             G1 = np.where(m2 == 0, 0.0, G1)
             out["skewness"] = np.where(counts >= 3, G1, np.nan)
         if "kurtosis" in fset:
-            m4 = rsum(c2 * c2) / n
+            m4 = _nansum(c2 * c2) / n
             g2 = m4 / np.where(m2 > 0, m2, np.nan) ** 2 - 3.0
             G2 = ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
             G2 = np.where(m2 == 0, 0.0, G2)
@@ -294,11 +276,11 @@ def window_stats(
         } or any(f.startswith("change_q_") for f in fset)
         d = mat[:, 1:] - mat[:, :-1] if (w > 1 and need_diff) else None
         if "mean_abs_change" in fset:
-            asc = rsum(np.abs(d)) if d is not None else np.zeros(k)
+            asc = _nansum(np.abs(d)) if d is not None else np.zeros(k)
             out["mean_abs_change"] = np.where(counts > 1, asc / (n - 1), np.nan)
         if "absolute_sum_of_changes" in fset:
             out["absolute_sum_of_changes"] = (
-                rsum(np.abs(d)) if d is not None else np.zeros(k)
+                _nansum(np.abs(d)) if d is not None else np.zeros(k)
             )
         if "mean_change" in fset:
             last = _take_last_valid(mat, counts)
@@ -314,11 +296,11 @@ def window_stats(
                 counts > 2, (last - last2 - x1 + mat[:, 0]) / (2 * (n - 2)), np.nan
             )
         if "cid_ce" in fset:
-            out["cid_ce"] = np.sqrt(rsum(d**2)) if d is not None else np.zeros(k)
+            out["cid_ce"] = np.sqrt(_nansum(d**2)) if d is not None else np.zeros(k)
         if "cid_ce_norm" in fset:
             z = (mat - mean[:, None]) / std[:, None]
             dz = z[:, 1:] - z[:, :-1] if w > 1 else None
-            val = np.sqrt(rsum(dz**2)) if dz is not None else np.zeros(k)
+            val = np.sqrt(_nansum(dz**2)) if dz is not None else np.zeros(k)
             out["cid_ce_norm"] = np.where(std == 0, 0.0, val)
 
         # ---- autocorrelation family ----
@@ -330,7 +312,7 @@ def window_stats(
             name = f"autocorr_lag{lag}"
             if w > lag:
                 prod = centered[:, :-lag] * centered[:, lag:]
-                num = rsum(prod)
+                num = _nansum(prod)
             else:
                 num = np.zeros(k)
             denom = (n - lag) * m2
@@ -344,7 +326,7 @@ def window_stats(
             lag = int(m[1])
             if w > 2 * lag:
                 prod = mat[:, 2 * lag :] * mat[:, lag:-lag] * mat[:, : -2 * lag]
-                val = rsum(prod) / (n - 2 * lag)
+                val = _nansum(prod) / (n - 2 * lag)
             else:
                 val = np.full(k, np.nan)
             out[f] = np.where(counts > 2 * lag, val, np.nan)
@@ -357,7 +339,7 @@ def window_stats(
                 a = mat[:, 2 * lag :]
                 b = mat[:, lag:-lag]
                 c = mat[:, : -2 * lag]
-                val = rsum(a * a * b - b * c * c) / (n - 2 * lag)
+                val = _nansum(a * a * b - b * c * c) / (n - 2 * lag)
             else:
                 val = np.full(k, np.nan)
             out[f] = np.where(counts > 2 * lag, val, 0.0)
@@ -405,8 +387,8 @@ def window_stats(
             "first_location_of_minimum",
             "last_location_of_minimum",
         }:
-            mx = rmax(mat)[:, None]
-            mn = rmin(mat)[:, None]
+            mx = np.nanmax(mat, axis=1)[:, None]
+            mn = np.nanmin(mat, axis=1)[:, None]
             idxs = np.arange(w)[None, :]
             big = np.float64(w + 1)
             if "first_location_of_maximum" in fset:
@@ -428,15 +410,10 @@ def window_stats(
                            "linear_trend_rvalue", "linear_trend_stderr"}
         if lt_feats:
             t = np.arange(w, dtype=np.float64)[None, :]
-            if full:
-                st = np.full(k, t.sum())
-                stt = np.full(k, (t**2).sum())
-                stx = rsum(t * mat)
-            else:
-                tmask = np.where(np.isnan(mat), np.nan, t)
-                st = _nansum(tmask)
-                stt = _nansum(tmask**2)
-                stx = _nansum(np.where(np.isnan(mat), np.nan, t * mat))
+            tmask = np.where(np.isnan(mat), np.nan, t)
+            st = _nansum(tmask)
+            stt = _nansum(tmask**2)
+            stx = _nansum(np.where(np.isnan(mat), np.nan, t * mat))
             sst_t = stt - st * st / n  # sum (t - tbar)^2
             cov_tx = stx - st * s / n  # sum (t - tbar)(x - xbar)
             slope = cov_tx / sst_t
@@ -462,7 +439,7 @@ def window_stats(
         # ---- energy ratio by chunks (tsfresh np.array_split semantics) ----
         er = [f for f in fset if f.startswith("energy_ratio_chunk")]
         if er:
-            csum = rcumsum(mat**2)  # (k, w) prefix energy
+            csum = np.nancumsum(mat**2, axis=1)  # (k, w) prefix energy
             total = np.where(sq_sum == 0, np.nan, sq_sum)
             q_, r_ = np.divmod(counts, _N_CHUNKS)
             for i in range(_N_CHUNKS):
@@ -528,8 +505,8 @@ def window_stats(
             # tsfresh index_mass_quantile: smallest i with
             # cumsum(|x|)/sum(|x|) >= q, returned as (i+1)/n
             absx = np.abs(mat)
-            tot = rsum(absx)
-            mc = rcumsum(absx) / tot[:, None]
+            tot = _nansum(absx)
+            mc = np.nancumsum(absx, axis=1) / tot[:, None]
             for f, qq in imq:
                 idx = np.argmax(mc >= qq, axis=1)
                 out[f] = (idx + 1) / n
@@ -537,12 +514,12 @@ def window_stats(
         for f in fset:
             m = re.fullmatch(r"large_standard_deviation_r(\d{2})", f)
             if m:
-                rng_ = rmax(mat) - rmin(mat)
+                rng_ = np.nanmax(mat, axis=1) - np.nanmin(mat, axis=1)
                 out[f] = (std > int(m[1]) / 100 * rng_).astype(np.float64)
         for f in fset:
             m = re.fullmatch(r"symmetry_looking_r(\d{2})", f)
             if m:
-                rng_ = rmax(mat) - rmin(mat)
+                rng_ = np.nanmax(mat, axis=1) - np.nanmin(mat, axis=1)
                 med = (
                     out["median"]
                     if "median" in out

@@ -116,15 +116,9 @@ def apply_ragged(
         for off in range(0, len(sel_all), rows):
             sel = sel_all[off:off + rows]
             idx = starts[sel][:, None] + col[None, :]
-            if (counts[sel] == w).all():
-                # full windows: plain gather, no padding mask needed
-                mat = flat[idx].astype(np.float64, copy=False)
-            else:
-                mask = col[None, :] < counts[sel][:, None]
-                mat = flat[np.where(mask, idx, 0)].astype(
-                    np.float64, copy=False
-                )
-                mat = np.where(mask, mat, np.nan)
+            mask = col[None, :] < counts[sel][:, None]
+            mat = flat[np.where(mask, idx, 0)].astype(np.float64, copy=False)
+            mat = np.where(mask, mat, np.nan)
             st = fn(mat, counts[sel])
             if out is None:
                 out = {nm: np.empty(k, dtype=v.dtype) for nm, v in st.items()}
@@ -447,8 +441,6 @@ def rollup_points_pdf(
     )
 
 
-#: scan bytes per shuffle partition when rollup_points sizes its shuffle
-_BYTES_PER_TASK = 256 << 20
 #: rows rollup_points buffers before it looks for completed groups
 _FLUSH_ROWS = 65_536
 
@@ -466,16 +458,16 @@ def rollup_points(
     any task must hold for a hot key (skew relief) while windows of every
     tier nest inside the chunk, so holistic stats stay exact.
 
-    Scale posture (100 TB): the shuffle partition count is sized from the
-    optimizer's scan-size statistics (`_BYTES_PER_TASK`, no extra pass —
-    file-listing stats Catalyst already has) rather than the static
-    `spark.sql.shuffle.partitions`, and the kernel stage streams — rows
-    are sorted within partitions by group key, so completed (key, chunk)
+    Scale posture (100 TB): the shuffle states only the hash key that
+    keeps each (key, chunk) group whole and passes no partition count;
+    AQE coalesces its partitions from the bytes they actually carry, up
+    to `spark.sql.shuffle.partitions`, which a cluster run raises as for
+    every other keyed shuffle. The kernel stage streams — rows are
+    sorted within partitions by group key, so completed (key, chunk)
     groups flush as soon as a later group appears in the Arrow stream.
     Peak task memory is O(one chunk group + flush buffer), NOT O(whole
-    partition), so a 100x data growth widens the shuffle instead of
-    OOMing the executor. Tier values stay bit-identical regardless of
-    which flush a group lands in (pow2-bucket kernels, SURVEY.md §7.5).
+    partition). Tier values stay bit-identical regardless of which task
+    or flush a group lands in (pow2-bucket kernels, SURVEY.md §7.5).
     """
     cfg = cfg or RollupConfig(include_raw=False)
     coarsest_ms = max(sec for _, sec in cfg.tiers) * 1000
@@ -504,31 +496,16 @@ def rollup_points(
             F.unix_millis(F.col(ts_col).cast("timestamp")) / F.lit(coarsest_ms)
         ).cast("long"),
     )
-    default_p = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    try:
-        size_bytes = int(
-            chunked._jdf.queryExecution()
-            .optimizedPlan()
-            .stats()
-            .sizeInBytes()
-            .toString()
-        )
-    except Exception:
-        size_bytes = 0
-    num_partitions = max(default_p, -(-size_bytes // _BYTES_PER_TASK))
     group_cols = key_cols + ["_chunk"]
     flush_rows = _FLUSH_ROWS  # read here, so the closure carries the value
-    parted = chunked.repartition(num_partitions, *group_cols)
+    parted = chunked.repartition(*group_cols)
     parted = parted.sortWithinPartitions(*group_cols)
 
     def run(batches):
-        # Arrow batches can be tiny (maxRecordsPerBatch is tuned for
-        # token-ARRAY inputs; point rows are scalars), so per-batch
-        # Python work must be O(1): batches are buffered RAW, and the
-        # group-boundary detection runs ONCE per flush over the whole
-        # ~flush_rows buffer (one vectorized pass), not once per batch.
+        # batches are buffered RAW and the group-boundary detection runs
+        # ONCE per flush over the whole ~flush_rows buffer (one
+        # vectorized pass), so a partition's work does not grow with the
+        # number of Arrow batches it arrives in.
         buf: list[pd.DataFrame] = []
         buf_rows = 0
         # key tuple of the group known to fill the tail of the buffer.

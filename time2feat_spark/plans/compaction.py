@@ -1,14 +1,15 @@
 """Small-file compaction for tier tables.
 
-LadderJob's salted, per-unit, incremental writes deliberately trade
+LadderJob's rebalanced, per-unit, incremental writes deliberately trade
 file granularity for parallelism and resumability: a hot source writes
-through `salt_k` tasks and every incremental run appends more files
-into the same `(tier, window_day)` leaves. At 100 TB that is the
-classic small-file problem — scan planning cost and open-file overhead
-grow with file count, not data size. `compact_source` rewrites every
-leaf of one source tree that holds more than one file into one file,
-swaps each rewritten leaf in with two directory renames, and records
-the rewrite in the checkpoint manifest. `LadderJob.maintain` is the
+through as many tasks as AQE gives its rebalance, and every
+incremental run appends more files into the same `(tier, window_day)`
+leaves. At 100 TB that is the classic small-file problem — scan
+planning cost and open-file overhead grow with file count, not data
+size. `compact_source` rewrites every leaf of one source tree that
+holds more than one file into one file, swaps each rewritten leaf in
+with two directory renames, and records the rewrite in the checkpoint
+manifest. `LadderJob.maintain` is the
 only caller in the engine; it compacts every source tree through
 `compact_all`.
 

@@ -2,18 +2,21 @@
 
 Work is split into per-source units (the input's natural partition key;
 at 100 TB the input table is partitioned by source, so each unit's scan
-is partition-pruned). Each unit is rolled up, salted, written to its own
-output partition directory (idempotent overwrite), and checkpointed in
-the manifest with lineage + metrics. A re-run skips units whose
+is partition-pruned). Each unit is rebalanced, rolled up, written to its
+own output partition directory (idempotent overwrite), and checkpointed
+in the manifest with lineage + metrics. A re-run skips units whose
 checkpoint matches the current input snapshot — kill the job after k
 units and the next run completes only the missing ones, yielding the
 identical table (tests/test_resume.py).
 
-Skew (north_rule "explicit salting for skewed sources"): the Zipf-heavy
-source holds ~35% of rows; a cheap pre-pass histogram sizes a per-unit
-salt ``pmod(xxhash64(doc_id), k)`` used as the repartition key before
-the write, so one hot source still writes through many parallel tasks
-and bounded-size files.
+Skew is handled explicitly (north_rule): the Zipf-heavy source holds
+~35% of rows. Every unit is its own shuffle, a ``rebalance`` hint on
+``doc_id`` before the rollup, and states no partition count: AQE sizes
+it from the bytes the unit actually carries, coalescing a small unit's
+partitions and splitting a hot one's, so a hot source still rolls and
+writes through many parallel tasks. A row is a whole series, so any
+split keeps every window whole. A cluster run bounds the shuffle with
+``spark.sql.shuffle.partitions``.
 
 Incremental mode realizes the continuous-aggregate semantics as
 restartable batch (SURVEY.md §2.9): sequences are append-only with
@@ -27,9 +30,9 @@ in append mode the increment, not the unit's running total. They are
 observed on the write itself (``DataFrame.observe``), so recording them
 costs no extra scan of the output or the input.
 
-``run`` only writes. The salted and incremental writes leave many small
-files per leaf; ``maintain`` is the one pass that cleans up after them:
-retention drops, then a file-level compaction that rewrites each
+``run`` only writes. The rebalanced and incremental writes leave many
+small files per leaf; ``maintain`` is the one pass that cleans up after
+them: retention drops, then a file-level compaction that rewrites each
 multi-file leaf as one file (no Spark job), each rewrite logged in the
 manifest.
 """
@@ -57,17 +60,16 @@ class LadderJob:
         input_path: str,
         out_root: str,
         cfg: RollupConfig | None = None,
-        rows_per_task: int = 20_000,
     ):
         self.spark = spark
         self.input_path = input_path
         self.out_root = out_root
         self.cfg = cfg or RollupConfig()
-        self.rows_per_task = rows_per_task
         self.manifest = Manifest(out_root)
 
     def _unit_stats(self, df: DataFrame) -> list[tuple[str, int]]:
-        """Pre-pass histogram: (source, rows) — drives units + salt size."""
+        """Pre-pass histogram: (source, rows) — the units, and each
+        unit's ``rows_in``."""
         rows = df.groupBy("source").count().collect()
         return sorted((r["source"], r["count"]) for r in rows)
 
@@ -126,11 +128,7 @@ class LadderJob:
             # the write runs: no re-read of the output, no second scan
             seen, wrote = Observation(), Observation()
             part = part.observe(seen, F.max("doc_id").alias("hi"))
-            salt_k = max(1, -(-n_rows // self.rows_per_task))
-            flat = rollup_sequences(
-                part.repartition(salt_k, F.pmod(F.xxhash64("doc_id"), F.lit(salt_k))),
-                self.cfg,
-            )
+            flat = rollup_sequences(part.hint("rebalance", "doc_id"), self.cfg)
             # window_day partition level makes retention a directory/
             # Iceberg-partition DROP instead of a data rewrite
             out = (
