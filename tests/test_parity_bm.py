@@ -181,6 +181,7 @@ def _bits(x) -> np.ndarray:
     return np.where(np.isnan(x), np.nan, x).view(np.int64)
 
 
+@pytest.mark.filterwarnings("error:All-NaN slice encountered")
 def test_full_grid_rows_depend_only_on_their_own_series(spark):
     """The full-grid Spark path on a synthetic frame: 787 columns in
     registry order, and each series' row equals parity_stats over that

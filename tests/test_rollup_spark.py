@@ -16,7 +16,6 @@ import pandas as pd
 import pytest
 
 from time2feat_spark.generator import gen_pandas
-from time2feat_spark.operators import rollup as R
 from time2feat_spark.operators.rollup import (
     RollupConfig,
     assemble,
@@ -128,11 +127,11 @@ def test_algebraic_cross_tier_consistency(seq_pdf):
     pd.testing.assert_frame_equal(agg, hh)
 
 
-def test_rollup_points_streaming_flush_invariance(spark, spark_conf,
-                                                 monkeypatch):
-    """The streaming group-flush kernel stage (scale path: bounded task
-    memory) must be value-identical to any other partitioning/flush size,
-    on a SKEWED key distribution (one hot key with ~80% of rows)."""
+def test_rollup_points_arrow_batch_invariance(spark, spark_conf):
+    """The per-batch kernel stage (scale path: bounded task memory) must
+    be value-identical under any shuffle width and Arrow batch size, on a
+    SKEWED key distribution (one hot key with ~80% of rows): a group cut
+    across batches rolls exactly as a group inside one."""
     rng = np.random.default_rng(7)
     n = 30_000
     keys = np.where(rng.uniform(size=n) < 0.8, "hot", "cold")
@@ -147,23 +146,23 @@ def test_rollup_points_streaming_flush_invariance(spark, spark_conf,
                                                  "autocorr_lag1", "skewness"])
     sdf = spark.createDataFrame(pdf)
 
-    def run(num_partitions, flush_rows):
+    def run(num_partitions, batch_rows):
         # no AQE coalescing: the shuffle width is exactly
         # spark.sql.shuffle.partitions
-        monkeypatch.setattr(R, "_FLUSH_ROWS", flush_rows)
         with spark_conf({
             "spark.sql.shuffle.partitions": str(num_partitions),
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.execution.arrow.maxRecordsPerBatch": str(batch_rows),
         }):
             out = rollup_points(sdf, ["key"], "ts", "value", cfg).toPandas()
         return out.sort_values(
             ["key", "tier", "window_start_ms"]
         ).reset_index(drop=True)
 
-    # tiny flush (forces many incremental flushes + carries) vs one big
-    # partition (single flush) vs many partitions
+    # tiny batches (the hot key's (key, day) groups span many of them)
+    # vs one big partition in one batch vs many partitions
     a = run(2, 512)
-    b = run(1, 10**9)
+    b = run(1, 1_048_576)
     c = run(13, 4096)
     for other in (b, c):
         assert len(a) == len(other)
@@ -257,8 +256,9 @@ def test_sequences_zero_token_doc(compress):
 
 
 def test_rollup_points_edge_inputs(spark):
-    """Edge shapes through the streaming flush: empty input, all-null/
-    NaN values (filtered scan-side), and a single surviving point."""
+    """Edge shapes through the per-batch kernel stage: empty input,
+    all-null/NaN values (filtered scan-side), and a single surviving
+    point."""
     from time2feat_spark.operators.rollup import RollupConfig, rollup_points
 
     cfg = RollupConfig(

@@ -76,6 +76,35 @@ def test_continuous_rollup_converges_to_batch(spark, tmp_path):
             assert (g == w).all(), c
 
 
+def test_continuous_rollup_pre_1970_chunk_and_session_conf(spark, spark_conf,
+                                                          tmp_path):
+    """A window before 1970 lands in its own (floored) output chunk, so a
+    later batch touching only 1969-12-31 keeps 1970-01-01's windows; and
+    the dynamic partition overwrite does not change the session conf."""
+    cfg = RollupConfig(tiers=[("1h", 3600), ("1d", 86400)], include_raw=False,
+                       compress=False, features=["variance"])
+
+    def batch(*stamps):
+        return spark.createDataFrame(pd.DataFrame({
+            "key": "k", "ts": pd.to_datetime(list(stamps)),
+            "value": np.arange(len(stamps), dtype=np.float64),
+        }))
+
+    cr = ContinuousRollup(
+        str(tmp_path / "staging"), str(tmp_path / "out"), ["key"], "ts",
+        "value", cfg,
+    )
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    with spark_conf({conf: "STATIC"}):
+        cr.process_batch(batch("1969-12-31 10:00", "1970-01-01 10:00"), 0)
+        cr.process_batch(batch("1969-12-31 11:00"), 1)
+        mode = spark.conf.get(conf)
+    got = sorted(r[0] for r in cr.read_output(spark)
+                 .select("window_start_ms").collect())
+    assert got == [-86_400_000, -50_400_000, -46_800_000, 0, 36_000_000]
+    assert mode == "STATIC"
+
+
 def test_streaming_file_source_end_to_end(spark, tmp_path):
     """Real readStream (file source, availableNow) through foreachBatch."""
     src = str(tmp_path / "src")

@@ -183,7 +183,8 @@ def window_stats(
     """Compute all rollup statistics for k NaN-padded windows at once.
 
     mat: (k, w) float64, each row a window's points in time order, right-
-         padded with NaN. counts: (k,) valid point counts (>=1).
+         padded with NaN. counts: (k,) valid point counts (>= 0; a
+         0-count row gives a NaN min, max and mean, with no warning).
     Returns {feature_name: (k,) float64} for BASIC_FEATURES + requested
     `features` (default ROLLUP_FEATURES).
     """
@@ -199,8 +200,10 @@ def window_stats(
         mean = s / n
         out["count"] = n
         out["sum"] = s
-        out["min"] = np.nanmin(mat, axis=1) if w else np.full(k, np.nan)
-        out["max"] = np.nanmax(mat, axis=1) if w else np.full(k, np.nan)
+        # fmin/fmax skip the NaN padding and leave a 0-count row NaN
+        # (np.nanmin/nanmax are these reductions plus an all-NaN warning)
+        out["min"] = mn = np.fmin.reduce(mat, axis=1) if w else np.full(k, np.nan)
+        out["max"] = mx = np.fmax.reduce(mat, axis=1) if w else np.full(k, np.nan)
         out["mean"] = mean
 
         centered = mat - mean[:, None]
@@ -217,7 +220,7 @@ def window_stats(
         if "root_mean_square" in fset:
             out["root_mean_square"] = np.sqrt(sq_sum / n)
         if "absolute_maximum" in fset:
-            out["absolute_maximum"] = np.nanmax(np.abs(mat), axis=1)
+            out["absolute_maximum"] = np.fmax.reduce(np.abs(mat), axis=1)
         if "variation_coefficient" in fset:
             out["variation_coefficient"] = std / mean
         # feature names are parametric: any grid cell of the tsfresh
@@ -387,21 +390,19 @@ def window_stats(
             "first_location_of_minimum",
             "last_location_of_minimum",
         }:
-            mx = np.nanmax(mat, axis=1)[:, None]
-            mn = np.nanmin(mat, axis=1)[:, None]
             idxs = np.arange(w)[None, :]
             big = np.float64(w + 1)
             if "first_location_of_maximum" in fset:
-                first_mx = np.where(mat == mx, idxs, big).min(axis=1)
+                first_mx = np.where(mat == mx[:, None], idxs, big).min(axis=1)
                 out["first_location_of_maximum"] = first_mx / n
             if "last_location_of_maximum" in fset:
-                last_mx = np.where(mat == mx, idxs, -1).max(axis=1)
+                last_mx = np.where(mat == mx[:, None], idxs, -1).max(axis=1)
                 out["last_location_of_maximum"] = (last_mx + 1) / n
             if "first_location_of_minimum" in fset:
-                first_mn = np.where(mat == mn, idxs, big).min(axis=1)
+                first_mn = np.where(mat == mn[:, None], idxs, big).min(axis=1)
                 out["first_location_of_minimum"] = first_mn / n
             if "last_location_of_minimum" in fset:
-                last_mn = np.where(mat == mn, idxs, -1).max(axis=1)
+                last_mn = np.where(mat == mn[:, None], idxs, -1).max(axis=1)
                 out["last_location_of_minimum"] = (last_mn + 1) / n
 
         # ---- linear trend (least squares over t = 0..n-1; scipy
@@ -514,18 +515,16 @@ def window_stats(
         for f in fset:
             m = re.fullmatch(r"large_standard_deviation_r(\d{2})", f)
             if m:
-                rng_ = np.nanmax(mat, axis=1) - np.nanmin(mat, axis=1)
-                out[f] = (std > int(m[1]) / 100 * rng_).astype(np.float64)
+                out[f] = (std > int(m[1]) / 100 * (mx - mn)).astype(np.float64)
         for f in fset:
             m = re.fullmatch(r"symmetry_looking_r(\d{2})", f)
             if m:
-                rng_ = np.nanmax(mat, axis=1) - np.nanmin(mat, axis=1)
                 med = (
                     out["median"]
                     if "median" in out
                     else _q_from_sorted(np.sort(mat, axis=1), counts, 0.5)
                 )
-                out[f] = (np.abs(mean - med) < int(m[1]) / 100 * rng_).astype(
+                out[f] = (np.abs(mean - med) < int(m[1]) / 100 * (mx - mn)).astype(
                     np.float64
                 )
 
@@ -616,8 +615,8 @@ def _number_peaks(mat: np.ndarray, nsup: int) -> np.ndarray:
 
 def _binned_entropy(mat: np.ndarray, counts: np.ndarray, nbins: int) -> np.ndarray:
     k, w = mat.shape
-    lo = np.nanmin(mat, axis=1)
-    hi = np.nanmax(mat, axis=1)
+    lo = np.fmin.reduce(mat, axis=1)
+    hi = np.fmax.reduce(mat, axis=1)
     same = hi == lo
     edges = _linspace_edges(lo, np.where(same, lo + 1, hi), nbins)
     # bin index per np.histogram: count of interior edges <= x (right-open

@@ -620,8 +620,8 @@ def _agg_linear_trend_block(out, sub, sel, cnt):
         ).reshape(len(sel), n_chunks, cl)
         with np.errstate(invalid="ignore", divide="ignore"):
             aggs = {
-                "max": np.nanmax(padded, axis=2),
-                "min": np.nanmin(padded, axis=2),
+                "max": np.fmax.reduce(padded, axis=2),
+                "min": np.fmin.reduce(padded, axis=2),
                 "mean": np.nanmean(padded, axis=2),
                 "var": np.nanvar(padded, axis=2),
             }

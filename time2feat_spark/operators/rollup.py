@@ -17,9 +17,9 @@ the frame. The two input shapes only produce those arrays:
 * ``rollup_points`` — long/event shape (key, ts, value), e.g. the events
   table. Points of one series must be co-located per day-chunk, so this
   path shuffles once on ``(key, 1d-chunk)``, then sorts and optionally
-  gap-fills each group before the core. Chunking by the coarsest tier
-  bounds group size (skew relief) without splitting any window across
-  groups.
+  gap-fills each group before the core, rolling the groups each Arrow
+  batch completes as it arrives. Chunking by the coarsest tier bounds
+  group size (skew relief) without splitting any window across groups.
 
 Determinism (SURVEY.md §7.5): all statistics come from
 ``kernels.window_stats`` on matrices padded to *power-of-two width buckets*
@@ -441,10 +441,6 @@ def rollup_points_pdf(
     )
 
 
-#: rows rollup_points buffers before it looks for completed groups
-_FLUSH_ROWS = 65_536
-
-
 def rollup_points(
     df: DataFrame,
     key_cols: list[str],
@@ -463,11 +459,12 @@ def rollup_points(
     AQE coalesces its partitions from the bytes they actually carry, up
     to `spark.sql.shuffle.partitions`, which a cluster run raises as for
     every other keyed shuffle. The kernel stage streams — rows are
-    sorted within partitions by group key, so completed (key, chunk)
-    groups flush as soon as a later group appears in the Arrow stream.
-    Peak task memory is O(one chunk group + flush buffer), NOT O(whole
-    partition). Tier values stay bit-identical regardless of which task
-    or flush a group lands in (pow2-bucket kernels, SURVEY.md §7.5).
+    sorted within partitions by group key, so each Arrow batch's
+    completed (key, chunk) groups are rolled as the batch arrives and
+    only its trailing group is carried into the next one. Peak task
+    memory is O(one chunk group + one batch), NOT O(whole partition).
+    Tier values stay bit-identical regardless of which task or batch a
+    group lands in (pow2-bucket kernels, SURVEY.md §7.5).
     """
     cfg = cfg or RollupConfig(include_raw=False)
     coarsest_ms = max(sec for _, sec in cfg.tiers) * 1000
@@ -497,31 +494,21 @@ def rollup_points(
         ).cast("long"),
     )
     group_cols = key_cols + ["_chunk"]
-    flush_rows = _FLUSH_ROWS  # read here, so the closure carries the value
     parted = chunked.repartition(*group_cols)
     parted = parted.sortWithinPartitions(*group_cols)
 
     def run(batches):
-        # batches are buffered RAW and the group-boundary detection runs
-        # ONCE per flush over the whole ~flush_rows buffer (one
-        # vectorized pass), so a partition's work does not grow with the
-        # number of Arrow batches it arrives in.
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        # key tuple of the group known to fill the tail of the buffer.
-        # While the newest batch still ends on this key, the sorted order
-        # guarantees the WHOLE batch belongs to it, so a flush attempt
-        # would find cut == 0 — skip the concat + key scan entirely.
-        # Without this, one group of size G >> flush_rows costs
-        # O(G^2 / batch) re-concatenation; with it, O(G).
-        open_key = None
+        # rows arrive sorted by group key, so only a batch's trailing run
+        # (the rows equal to its last key) can continue into the next
+        # batch; everything before it is complete and is rolled at once.
+        # The open run is kept as frames and concatenated once, when its
+        # group ends.
+        carry: list[pd.DataFrame] = []
 
-        def concat(frames):
-            return frames[0] if len(frames) == 1 else pd.concat(
+        def roll(frames):
+            pdf = frames[0] if len(frames) == 1 else pd.concat(
                 frames, ignore_index=True
             )
-
-        def roll(pdf):
             return rollup_points_pdf(
                 pdf, cfg, group_cols, ts_col, val_col
             ).drop(columns=["_chunk"])
@@ -529,28 +516,22 @@ def rollup_points(
         for pdf in batches:
             if not len(pdf):
                 continue
-            last = tuple(pdf[c].iloc[-1] for c in group_cols)
-            buf.append(pdf)
-            buf_rows += len(pdf)
-            if buf_rows >= flush_rows:
-                if open_key is not None and last == open_key:
-                    continue
-                whole = concat(buf)
-                # rows are sorted by group key, so the (possibly still
-                # open) trailing group is the run equal to the last
-                # row's key; everything before it is complete
-                eq = np.ones(len(whole), dtype=bool)
-                for c in group_cols:
-                    v = whole[c].to_numpy()
-                    eq &= v == v[-1]
-                not_eq = np.nonzero(~eq)[0]
-                cut = int(not_eq[-1]) + 1 if len(not_eq) else 0
-                tail = whole.iloc[cut:]
-                buf, buf_rows = [tail], len(tail)
-                open_key = last
-                if cut > 0:
-                    yield roll(whole.iloc[:cut])
-        if buf_rows:
-            yield roll(concat(buf))
+            eq = np.ones(len(pdf), dtype=bool)
+            for c in group_cols:
+                v = pdf[c].to_numpy()
+                eq &= v == v[-1]
+            not_eq = np.nonzero(~eq)[0]
+            cut = int(not_eq[-1]) + 1 if len(not_eq) else 0
+            if not cut and carry and all(
+                carry[-1][c].iloc[-1] == pdf[c].iloc[-1] for c in group_cols
+            ):
+                carry.append(pdf)  # the carried group spans the whole batch
+                continue
+            done = carry + [pdf.iloc[:cut]] if cut else carry
+            if done:
+                yield roll(done)
+            carry = [pdf.iloc[cut:]]
+        if carry:
+            yield roll(carry)
 
     return parted.mapInPandas(run, schema)

@@ -28,18 +28,19 @@ class UnitRecord:
     """One manifest line. ``windows_out``, ``points`` (sum of window
     counts) and ``bytes_compressed`` (Gorilla block bytes) are what this
     run wrote for the unit: in append mode the increment, not the
-    unit's cumulative totals."""
+    unit's cumulative totals. What a record does not know (a tombstone's
+    metrics, a maintenance action's snapshot) is left at its default."""
 
     run_id: str
     unit: str  # partition unit key, e.g. "source=src_3"
-    input_snapshot_id: str
-    partition_range: str  # e.g. doc_id min..max processed in this unit
-    rollup_watermark: str  # high-water mark for incremental resume
-    rows_in: int
-    windows_out: int
-    points: int
-    bytes_compressed: int
-    wall_ms: int
+    input_snapshot_id: str = ""
+    partition_range: str = ""  # e.g. doc_id min..max processed in this unit
+    rollup_watermark: str = ""  # high-water mark for incremental resume
+    rows_in: int = 0
+    windows_out: int = 0
+    points: int = 0
+    bytes_compressed: int = 0
+    wall_ms: int = 0
     status: str = "done"
     ts: float = field(default_factory=time.time)
 

@@ -199,13 +199,9 @@ def compact_source(out_root: str, source: str) -> dict:
         UnitRecord(
             run_id="compaction",
             unit=f"compaction:source={source}",
-            input_snapshot_id="",
             partition_range=f"files {res['files_before']}->{res['files_after']}",
-            rollup_watermark="",
             rows_in=rows,
             windows_out=rows,
-            points=0,
-            bytes_compressed=0,
             wall_ms=int((time.time() - t0) * 1000),
             status="compacted",
         )

@@ -117,10 +117,6 @@ class LadderJob:
                     partition_range=f"{source}",
                     rollup_watermark=str(wm or ""),
                     rows_in=n_rows,
-                    windows_out=0,
-                    points=0,
-                    bytes_compressed=0,
-                    wall_ms=0,
                     status="started",
                 )
             )

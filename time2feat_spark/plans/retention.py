@@ -70,14 +70,8 @@ def enforce_retention(
             UnitRecord(
                 run_id=run_id,
                 unit="retention",
-                input_snapshot_id="",
                 partition_range=f"{len(dropped)} partitions",
                 rollup_watermark=str(now_ms),
-                rows_in=0,
-                windows_out=0,
-                points=0,
-                bytes_compressed=0,
-                wall_ms=0,
                 status="retention",
             )
         )

@@ -14,7 +14,7 @@ plus idempotent partition overwrites.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..operators.rollup import RollupConfig, rollup_points
 
@@ -37,20 +37,17 @@ class ContinuousRollup:
         self.cfg = cfg or RollupConfig(include_raw=False)
         self.coarsest_ms = max(sec for _, sec in self.cfg.tiers) * 1000
 
-    def _with_chunk(self, df: DataFrame) -> DataFrame:
+    def _chunk(self, ms) -> Column:
         # F.floor, not a truncating cast: floors toward -inf like the
-        # kernel-side window ids (pre-1970 timestamps)
-        return df.withColumn(
-            "_stage_chunk",
-            F.floor(
-                F.unix_millis(F.col(self.ts_col).cast("timestamp"))
-                / F.lit(self.coarsest_ms)
-            ).cast("long"),
-        )
+        # kernel-side window ids, so a pre-1970 window keeps its own chunk
+        return F.floor(ms / F.lit(self.coarsest_ms)).cast("long")
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        staged = self._with_chunk(batch_df)
+        staged = batch_df.withColumn(
+            "_stage_chunk",
+            self._chunk(F.unix_millis(F.col(self.ts_col).cast("timestamp"))),
+        )
         staged.write.mode("append").partitionBy("_stage_chunk").parquet(
             self.staging_path
         )
@@ -66,14 +63,11 @@ class ContinuousRollup:
         )
         rolled = rollup_points(
             pts, self.key_cols, self.ts_col, self.val_col, self.cfg
-        ).withColumn(
-            "_out_chunk",
-            (F.col("window_start_ms") / F.lit(self.coarsest_ms)).cast("long"),
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        rolled.write.mode("overwrite").partitionBy("_out_chunk").parquet(
-            self.out_root
-        )
+        ).withColumn("_out_chunk", self._chunk(F.col("window_start_ms")))
+        # dynamic overwrite for this write only, not the whole session
+        rolled.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("_out_chunk").parquet(self.out_root)
 
     def start(self, stream: DataFrame, checkpoint: str, available_now: bool = True):
         writer = (
