@@ -1466,7 +1466,7 @@ SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= 0.9
 # what an external SQL oracle can replicate (VERDICT r3 items 1-3):
 # - image: the operator's n_bytes (through the JVM-digest + mapInPandas
 #   path) plus a cross-engine md5_64 blob digest; the pseudo-decode
-#   pixel stats stay pinned by pytest goldens (not SQL-replicable).
+#   pixel stats are checked by pytest (not SQL-replicable).
 # - audio: the REAL PCM-WAV decode path (stdlib `wave`) over WAV blobs
 #   built deterministically from documents.text — 8-bit mono PCM, so the
 #   per-frame RMS is a windowed byte expression DuckDB replicates.
@@ -1494,7 +1494,6 @@ def _wav_header(data_size: int, sample_rate: int = 8000) -> bytes:
 def q_multimodal_features(spark, sf_dir):
     from time2feat_spark.functions.hashing import md5_64
     from time2feat_spark.operators.multimodal import (
-        attach_media_meta,
         audio_frame_stats,
         image_features,
         video_frame_sample,
@@ -1503,7 +1502,7 @@ def q_multimodal_features(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     blob = docs.select("doc_id", F.encode("text", "utf-8").alias("media"))
 
-    img = image_features(attach_media_meta(blob, "image", "png", 64, 64))
+    img = image_features(blob)
     digests = blob.select(
         "doc_id", md5_64(F.col("media")).alias("digest")
     )
@@ -1533,7 +1532,7 @@ def q_multimodal_features(spark, sf_dir):
         ).alias("media"),
     )
     audio_rows = audio_frame_stats(
-        wav, frame_len=_WAV_FRAME, max_frames=16, deterministic_fake=False
+        wav, frame_len=_WAV_FRAME, max_frames=16
     ).select(
         "doc_id",
         F.lit("audio").alias("modality"),

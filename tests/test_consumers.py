@@ -21,6 +21,14 @@ module; its own body does not count, and strings, docstrings and
 only unreached definitions use is unreached too. Names are matched
 without their module, which is deliberately conservative: an unreached
 function whose name collides with a reached one is missed.
+
+A switch is a parameter whose default is a `bool` literal. Each switch
+of an engine function or method must receive the other literal, or a
+value computed at run time, by keyword or by position, in at least one
+call in a `CONSUMERS` file or an engine module (tests do not count;
+calls are matched by name). A switch no consumer flips keeps a second
+path that only tests run. Functions defined in `CONSUMERS` files are the
+user API and exempt, as are modules on `ALLOWLIST`.
 """
 
 from __future__ import annotations
@@ -85,6 +93,16 @@ DEFINITION_ALLOWLIST = {
     ),
 }
 
+#: switches no consumer flips, kept on purpose, "path::function(param)" -> why
+SWITCH_ALLOWLIST = {
+    "time2feat_spark/operators/dedup.py::ngram_jaccard_pairs(allow_full_scan)": (
+        "overrides a size guard on input from outside the program"
+    ),
+    "time2feat_spark/operators/text.py::heavy_hitters(with_guarantee)": (
+        "opt-in certificate that the returned set is exact"
+    ),
+}
+
 
 def _modules() -> dict[str, str]:
     """Dotted module name -> repo-relative path, for every module of the
@@ -107,13 +125,17 @@ def _modules() -> dict[str, str]:
     return mods
 
 
+def _parse(path: str) -> ast.Module:
+    with open(os.path.join(ROOT, path)) as f:
+        return ast.parse(f.read(), path)
+
+
 def _imported_names(path: str) -> set[str]:
     """Absolute dotted names a file imports: each imported module, and
     for `from X import y` both X and X.y (y may be a submodule)."""
     parts = path[:-3].split("/")
     pkg = parts[:-1]  # an __init__.py's package is its own directory
-    with open(os.path.join(ROOT, path)) as f:
-        tree = ast.parse(f.read(), path)
+    tree = _parse(path)
     names: set[str] = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
@@ -164,8 +186,7 @@ def _definitions(path: str) -> tuple[dict[str, set[str]], set[str]]:
     """A file's top-level functions and classes, each with the names its
     decorators, signature and body use, and the names used by the
     module-level code outside those definitions."""
-    with open(os.path.join(ROOT, path)) as f:
-        tree = ast.parse(f.read(), path)
+    tree = _parse(path)
     defs: dict[str, set[str]] = {}
     top: set[str] = set()
     for node in tree.body:
@@ -249,3 +270,96 @@ def test_definition_allowlist_holds_only_unreached_definitions():
     allowed = set(DEFINITION_ALLOWLIST)
     assert allowed <= defined, sorted(allowed - defined)
     assert not allowed & reached, sorted(allowed & reached)
+
+
+def _is_bool(node) -> bool:
+    return isinstance(node, ast.Constant) and isinstance(node.value, bool)
+
+
+def _switches(path: str):
+    """(function name, param, position seen by a caller or None for a
+    keyword-only param, default) for each switch of a module's top-level
+    functions and its classes' methods."""
+    tree = _parse(path)
+    funcs = [(n, 0) for n in tree.body if isinstance(n, ast.FunctionDef)]
+    for cls in tree.body:
+        if isinstance(cls, ast.ClassDef):
+            funcs += [
+                (n, 0 if any(getattr(d, "id", None) == "staticmethod"
+                             for d in n.decorator_list) else 1)
+                for n in cls.body
+                if isinstance(n, ast.FunctionDef)
+            ]
+    for fn, bound in funcs:
+        a = fn.args
+        params = a.posonlyargs + a.args
+        first = len(params) - len(a.defaults)
+        for i, d in enumerate(a.defaults, first):
+            if _is_bool(d):
+                yield fn.name, params[i].arg, i - bound, d.value
+        for p, d in zip(a.kwonlyargs, a.kw_defaults):
+            if _is_bool(d):
+                yield fn.name, p.arg, None, d.value
+
+
+_RUNTIME = "a value computed at run time"
+
+
+def _passed(node):
+    """What an argument passes: a bool literal's value, `_RUNTIME` for an
+    expression (it may be either bool), or None for any other constant."""
+    if not isinstance(node, ast.Constant):
+        return _RUNTIME
+    return node.value if isinstance(node.value, bool) else None
+
+
+@functools.cache
+def _call_arguments() -> frozenset:
+    """(callee name, keyword or position, `_passed` value) for every
+    argument of a call in a `CONSUMERS` file or an engine module."""
+    seen = set()
+    for path in set(CONSUMERS) | _engine_files():
+        for call in ast.walk(_parse(path)):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(
+                call.func, "attr", None
+            )
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    break  # later positions are unknown
+                seen.add((name, i, _passed(arg)))
+            seen.update(
+                (name, kw.arg, _passed(kw.value)) for kw in call.keywords
+            )
+    return frozenset(seen)
+
+
+def _unflipped_switches() -> set[str]:
+    flipped = _call_arguments()
+    return {
+        f"{path}::{fn}({param})"
+        for path in _engine_files() - set(CONSUMERS) - set(ALLOWLIST)
+        for fn, param, pos, default in _switches(path)
+        if not any(
+            (fn, key, value) in flipped
+            for key in (param, pos)
+            if key is not None
+            for value in (not default, _RUNTIME)
+        )
+    }
+
+
+def test_every_engine_switch_has_a_consumer():
+    unflipped = _unflipped_switches() - set(SWITCH_ALLOWLIST)
+    assert not unflipped, (
+        f"switches no consumer flips: {sorted(unflipped)}; delete the "
+        "switch and the path it selects, or add it to SWITCH_ALLOWLIST "
+        "with a reason"
+    )
+
+
+def test_switch_allowlist_holds_only_unflipped_switches():
+    assert set(SWITCH_ALLOWLIST) <= _unflipped_switches(), sorted(
+        set(SWITCH_ALLOWLIST) - _unflipped_switches()
+    )

@@ -6,6 +6,8 @@ whole-series blocks)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 
@@ -213,6 +215,7 @@ def test_quantile_range_exact_vs_numpy(spark, tmp_path):
 # ---------------------------------------------- declared read schema
 
 DAY_MS = 86_400_000
+MULTI_FILE = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
 SHORT = RollupConfig(features=["variance", "median", "q10"])
 
 
@@ -335,6 +338,51 @@ def test_digit_source_names_stay_strings(spark, tmp_path):
     _, agg = aggregate_range(job, T0_MS, T0_MS + DAY_MS, 6 * 3600, ["007"])
     rows = agg.select("source").collect()
     assert rows and {r[0] for r in rows} == {"007"}
+
+
+def test_source_names_read_back_as_written(spark, spark_conf, tmp_path):
+    """Source directories are named the way Spark's partitionBy names
+    them (percent-escaped), so every name reads back exactly, routes to
+    its own rows, and maintain() works on the tree."""
+    names = ["plain", "p:q", "x%3Ay", "a b", "a/b", "a=b"]
+    inp = str(tmp_path / "seq")
+    pdf = gen_pandas(0, 4 * len(names))
+    pdf["source"] = [names[i % len(names)] for i in range(len(pdf))]
+    spark.createDataFrame(pdf).write.parquet(inp)
+    out = str(tmp_path / "out")
+    job = LadderJob(spark, inp, out, CFG)
+    with spark_conf(MULTI_FILE):  # several files per leaf to compact
+        job.run()
+    ref = str(tmp_path / "ref")
+    spark.createDataFrame(
+        pd.DataFrame({"source": names, "v": range(len(names))})
+    ).write.partitionBy("source").parquet(ref)
+
+    def dirs(root):
+        return sorted(d for d in os.listdir(root) if d.startswith("source="))
+
+    def per_source(df):
+        return dict(df.groupBy("source").count().collect())
+
+    assert dirs(out) == dirs(ref)
+    full = job.read_output()
+    assert set(per_source(full)) == set(names)
+    lo, hi = full.agg(F.min("window_day"), F.max("window_day")).first()
+    daily = per_source(full.where("tier = '1d'"))
+    for name in names:
+        _, df = route_range_tiered(
+            job, lo * DAY_MS, (hi + 1) * DAY_MS, 86400, sources=[name]
+        )
+        assert per_source(df) == {name: daily[name]}
+    windowed = per_source(full.where("tier != 'raw'"))
+    res = job.maintain(
+        RetentionPolicy({"raw": 0, "1m": None, "1h": None, "1d": None}),
+        now_ms=(hi + 1) * DAY_MS,
+    )
+    assert res["retention"]["dropped"]
+    assert any(r["rows"] for r in res["compaction"].values())
+    assert dirs(out) == dirs(ref)
+    assert per_source(job.read_output()) == windowed
 
 
 def test_table_without_data_files_reads_empty(spark, tmp_path):

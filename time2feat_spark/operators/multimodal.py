@@ -1,36 +1,23 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Multimodal (image/audio/video) operators over binary media columns.
 
-Media are opaque `binary` columns with a typed metadata struct; decode /
-feature-extract / resize / frame-sample run as Arrow-batched
-`mapInPandas` stages. Decode status per modality (round 3):
-- image: REAL branch behind `deterministic_fake=False` — uncompressed
-  BMP decodes via stdlib struct+numpy (no codec, tested IN this
-  sandbox, r4), everything else routes to PIL
-  (pytest.importorskip-tested — skips in this codec-less sandbox, runs
-  anywhere PIL exists); the stub remains the default here.
-- audio: REAL branch for PCM WAV via the stdlib `wave` module — needs
-  NO external codec, so it runs and is tested IN this sandbox
-  (test_audio_frame_stats_real_wav_decode); compressed formats raise
-  loudly toward the ffmpeg/soundfile plug point.
-- video: REAL branch for UNCOMPRESSED AVI via stdlib RIFF parsing
-  (r4 — '00db' DIB frames, every_k sampling, tested in-sandbox);
-  compressed video raises loudly toward the ffmpeg plug point. The stub
-  (pseudo-frame schedule from blob size) remains the default; its
-  Spark-side plumbing — schema, ragged frame expansion, batch shape —
-  is shared with the real path.
-`deterministic_fake=True` (default) produces a seeded, content-derived
-pseudo-decode so the full pipeline stays testable without codecs.
+Each operator is one Arrow-batched `mapInPandas` stage:
+- `image_features`: per blob, its size and the mean, std and
+  thumbnail (8x8 by default) of a pseudo-decoded grayscale image;
+- `video_frame_sample`: one row per sampled frame (every k-th of a
+  frame count derived from blob size, capped), with that frame's
+  pseudo-decoded mean and std;
+- `audio_frame_stats`: decodes PCM WAV (8- or 16-bit, channels
+  averaged) with the stdlib `wave` module and emits one RMS row per
+  frame; other formats raise.
 
-Scale posture (north_rule: no per-row Python):
-- the content digest is computed JVM-side (`xxhash64(substring(media,
-  1, 64))`), so the heavy binary column is PRUNED before rows ever cross
-  the Arrow boundary — the Python stage sees (id, seed, n_bytes) only;
-- the pseudo-decode itself is a whole-batch numpy splitmix64 counter
-  stream over a (rows x pixels) uint64 matrix — no Python loop, no
-  per-row hashlib;
-- a real codec integration would widen the projection to include the
-  blob, keep the same batch iterator, and vectorize per batch (decode is
-  then the per-row boundary a codec forces — nothing else is).
+The pseudo-decode of image and video is deterministic and content
+derived: the digest is computed JVM-side (`xxhash64(substring(media,
+1, 64))`), so the heavy binary column is pruned before rows cross the
+Arrow boundary and the Python stage sees (id, seed, n_bytes) only; the
+pixels are one whole-batch numpy splitmix64 pass over a (rows x pixels)
+uint64 matrix, with no Python loop per row. Audio needs the bytes, so
+its WAV decode is the one per-blob step (the codec boundary); framing
+and RMS are vectorized per blob.
 """
 
 from __future__ import annotations
@@ -44,44 +31,9 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
-
-MEDIA_META = StructType(
-    [
-        StructField("media_type", StringType()),  # image|audio|video
-        StructField("format", StringType()),  # png|jpeg|wav|mp4|...
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_frames", IntegerType()),
-    ]
-)
-
-
-def attach_media_meta(
-    df: DataFrame,
-    media_type: str,
-    fmt: str,
-    width: int = 0,
-    height: int = 0,
-    sample_rate: int = 0,
-    n_frames: int = 0,
-) -> DataFrame:
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(fmt).alias("format"),
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.lit(sample_rate).alias("sample_rate"),
-            F.lit(n_frames).alias("n_frames"),
-        ),
-    )
-
 
 _GOLD = np.uint64(0x9E3779B97F4A7C15)
 
@@ -113,229 +65,16 @@ def _with_media_digest(df: DataFrame, blob_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _decode_bmp_gray(b: bytes) -> np.ndarray:
-    """Decode an UNCOMPRESSED BMP (BI_RGB, 24-bpp BGR or 8-bpp gray) to a
-    float64 grayscale matrix using only stdlib struct + numpy — the
-    image analogue of the PCM-WAV audio path: a real, testable decode
-    with no external codec. Luma uses PIL's convert('L') integer
-    weights ((R*299 + G*587 + B*114) / 1000). 8-bpp pixels are INDICES
-    into the mandatory BGRA color table, so they are mapped through the
-    palette's per-entry luma (a paletted color BMP decodes to the same
-    grayscale PIL's convert('L') gives, not to its raw index values).
-    Compressed BMPs, other depths, and a missing/truncated palette
-    raise toward the PIL plug point."""
-    import struct
-
-    if b[:2] != b"BM":
-        raise ValueError("not a BMP stream")
-    (data_off,) = struct.unpack_from("<I", b, 10)
-    (dib_size,) = struct.unpack_from("<I", b, 14)
-    width, height = struct.unpack_from("<ii", b, 18)
-    (bpp,) = struct.unpack_from("<H", b, 28)
-    (compression,) = struct.unpack_from("<I", b, 30)
-    if compression != 0 or bpp not in (8, 24):
-        raise NotImplementedError(
-            f"BMP bpp={bpp} compression={compression} needs a real codec "
-            "(PIL) — stdlib path covers uncompressed 8/24-bpp only"
-        )
-    palette_luma = None
-    if bpp == 8:
-        (clr_used,) = struct.unpack_from("<I", b, 46)
-        entries = clr_used or 256
-        pal_off = 14 + dib_size
-        # the color table sits between the DIB header and the pixel
-        # array; never read past data_off (hostile/truncated headers)
-        entries = min(entries, max((data_off - pal_off) // 4, 0))
-        if entries <= 0:
-            raise NotImplementedError(
-                "8-bpp BMP without a readable color table — PIL plug point"
-            )
-        palette_luma = _palette_luma(b, pal_off, entries)
-    flip = height > 0  # positive height = bottom-up row order
-    return _bgr_rows_to_gray(
-        b, width, abs(height), bpp, flip, offset=data_off,
-        palette_luma=palette_luma,
-    )
-
-
-def _palette_luma(buf: bytes, offset: int, entries: int) -> np.ndarray:
-    """256-slot luma lookup from a BGRA color table (entries beyond the
-    table keep identity so out-of-range indices degrade gracefully)."""
-    pal = np.frombuffer(
-        buf, dtype=np.uint8, count=entries * 4, offset=offset
-    ).reshape(entries, 4)
-    luma = np.arange(256, dtype=np.int64)
-    luma[:entries] = (
-        pal[:, 2].astype(np.int64) * 299
-        + pal[:, 1].astype(np.int64) * 587
-        + pal[:, 0].astype(np.int64) * 114
-    ) // 1000
-    return luma
-
-
-def _bgr_rows_to_gray(
-    buf: bytes,
-    width: int,
-    height: int,
-    bpp: int,
-    flip: bool,
-    offset: int = 0,
-    palette_luma: np.ndarray | None = None,
-) -> np.ndarray:
-    """Shared DIB pixel-array decode (BMP bodies and uncompressed-AVI
-    '00db' frames use the same layout): 4-byte-aligned rows, BGR for
-    24-bpp, palette-index lookup for 8-bpp, bottom-up when flip."""
-    stride = ((bpp * width + 31) // 32) * 4
-    rows = np.frombuffer(
-        buf, dtype=np.uint8, count=stride * height, offset=offset
-    ).reshape(height, stride)
-    if bpp == 24:
-        px = rows[:, : width * 3].reshape(height, width, 3)
-        gray = (
-            px[:, :, 2].astype(np.int64) * 299
-            + px[:, :, 1].astype(np.int64) * 587
-            + px[:, :, 0].astype(np.int64) * 114
-        ) // 1000
-    elif palette_luma is not None:
-        gray = palette_luma[rows[:, :width]]
-    else:
-        gray = rows[:, :width].astype(np.int64)
-    if flip:
-        gray = gray[::-1]
-    return gray.astype(np.float64)
-
-
-def _iter_riff_chunks(b: bytes, start: int, end: int):
-    """(tag, data_offset, size) over a RIFF chunk sequence; chunks are
-    word-aligned (odd sizes padded by one byte)."""
-    import struct
-
-    off = start
-    while off + 8 <= end:
-        tag = b[off:off + 4]
-        (size,) = struct.unpack_from("<I", b, off + 4)
-        yield tag, off + 8, size
-        off += 8 + size + (size & 1)
-
-
-def _decode_avi_frames(b: bytes):
-    """Parse an UNCOMPRESSED AVI (RIFF 'AVI ', video stream with
-    BI_RGB 8/24-bpp DIB frames in '..db'/'..dc' chunks) using only
-    stdlib struct + numpy — the video analogue of the PCM-WAV and BMP
-    paths: real keyframe extraction with no codec. Returns (width,
-    height, [frame byte ranges]) lazily decoded via `frame(i)`.
-    Compressed streams raise toward the ffmpeg plug point."""
-    import struct
-
-    if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-        raise ValueError("not an AVI stream")
-    (riff_size,) = struct.unpack_from("<I", b, 4)
-    width = height = bpp = None
-    compression = None
-    palette_luma = None
-    frames: list[tuple[int, int]] = []
-    def scan_movi(start: int, end: int) -> None:
-        # explicit iterator stack (document-order DFS): preserves frame
-        # order across sibling 'rec ' lists AND survives a hostile file
-        # with thousands of nested lists (no Python recursion)
-        stack = [_iter_riff_chunks(b, start, end)]
-        while stack:
-            descended = False
-            for t2, d2, s2 in stack[-1]:
-                if t2 == b"LIST" and b[d2:d2 + 4] == b"rec ":
-                    # interleaved AVIs group frame chunks in 'rec ' lists
-                    stack.append(_iter_riff_chunks(b, d2 + 4, d2 + s2))
-                    descended = True
-                    break
-                if t2[2:4] in (b"db", b"dc"):
-                    frames.append((d2, s2))
-            if not descended:
-                stack.pop()
-
-    for tag, data, size in _iter_riff_chunks(b, 12, min(8 + riff_size, len(b))):
-        if tag != b"LIST":
-            continue
-        list_type = b[data:data + 4]
-        if list_type == b"hdrl":
-            for t2, d2, s2 in _iter_riff_chunks(b, data + 4, data + size):
-                if t2 == b"LIST" and b[d2:d2 + 4] == b"strl":
-                    # only the VIDEO stream's strf is a BITMAPINFOHEADER
-                    # (an audio strl carries a WAVEFORMATEX here —
-                    # parsing it as video would clobber width/bpp)
-                    is_vids = False
-                    for t3, d3, s3 in _iter_riff_chunks(b, d2 + 4, d2 + s2):
-                        if t3 == b"strh":
-                            is_vids = b[d3:d3 + 4] == b"vids"
-                        elif t3 == b"strf" and is_vids and s3 >= 20:
-                            width, height = struct.unpack_from("<ii", b, d3 + 4)
-                            (bpp,) = struct.unpack_from("<H", b, d3 + 14)
-                            (compression,) = struct.unpack_from(
-                                "<I", b, d3 + 16
-                            )
-                            if bpp == 8 and s3 >= 40:
-                                # 8-bpp frames index the strf's BGRA
-                                # color table (after the header); map
-                                # through it like the BMP path
-                                (bi_size,) = struct.unpack_from(
-                                    "<I", b, d3
-                                )
-                                (clr_used,) = struct.unpack_from(
-                                    "<I", b, d3 + 32
-                                )
-                                n = min(
-                                    clr_used or 256,
-                                    max((s3 - bi_size) // 4, 0),
-                                )
-                                if n > 0:
-                                    palette_luma = _palette_luma(
-                                        b, d3 + bi_size, n
-                                    )
-        elif list_type == b"movi":
-            scan_movi(data + 4, data + size)
-    if width is None:
-        raise ValueError("AVI has no video stream format (strf)")
-    if compression != 0 or bpp not in (8, 24):
-        raise NotImplementedError(
-            f"AVI bpp={bpp} compression={compression} needs a real codec "
-            "(ffmpeg) — stdlib path covers uncompressed 8/24-bpp DIB only"
-        )
-
-    flip = height > 0
-    h = abs(height)
-
-    def frame(i: int) -> np.ndarray:
-        off, _size = frames[i]
-        return _bgr_rows_to_gray(
-            b, width, h, bpp, flip, offset=off, palette_luma=palette_luma
-        )
-
-    return len(frames), frame
-
-
-def _resize_area(gray: np.ndarray, thumb: int) -> np.ndarray:
-    """Deterministic area-average resize to thumb x thumb (block means
-    over integer bin edges)."""
-    h, w = gray.shape
-    re = (np.arange(thumb + 1) * h) // thumb
-    ce = (np.arange(thumb + 1) * w) // thumb
-    out = np.empty((thumb, thumb), dtype=np.float64)
-    for i in range(thumb):
-        band = gray[re[i]:max(re[i + 1], re[i] + 1)]
-        for j in range(thumb):
-            out[i, j] = band[:, ce[j]:max(ce[j + 1], ce[j] + 1)].mean()
-    return out
-
-
 def image_features(
     df: DataFrame,
     blob_col: str = "media",
     id_col: str = "doc_id",
     thumb: int = 8,
-    deterministic_fake: bool = True,
 ) -> DataFrame:
-    """Decode -> resize(thumb x thumb, grayscale) -> basic stats + a
-    thumbnail vector usable for embedding-style dedup. Arrow-batched;
-    whole-batch numpy (no per-row Python)."""
+    """Pseudo-decode -> thumb x thumb grayscale -> basic stats + a
+    thumbnail vector usable for embedding-style dedup. Blobs with the
+    same first 64 bytes get the same pixels. Arrow-batched; whole-batch
+    numpy (no per-row Python)."""
     schema = StructType(
         [
             StructField(id_col, df.schema[id_col].dataType),
@@ -346,57 +85,6 @@ def image_features(
         ]
     )
     n_px = thumb * thumb
-
-    if not deterministic_fake:
-        # REAL codec path (requires PIL — validated by a
-        # pytest.importorskip test wherever codecs exist; this sandbox
-        # has none). The decode itself is necessarily per-image (that IS
-        # the codec boundary); everything around it — blob transport,
-        # Arrow batching, output shape — is identical to the stub path,
-        # so swapping in the codec changes no plan shape.
-        def run_real(batches):
-            import io
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                px = np.empty((len(pdf), n_px), dtype=np.float64)
-                nb = np.empty(len(pdf), dtype=np.int64)
-                for i, blob in enumerate(pdf[blob_col]):
-                    b = bytes(blob)
-                    nb[i] = len(b)
-                    if b[:2] == b"BM":
-                        # stdlib path: uncompressed BMP needs no codec
-                        # (runs and is tested in codec-less sandboxes);
-                        # ANYTHING it cannot handle — compressed, exotic
-                        # depth, corrupt/truncated headers — falls
-                        # THROUGH to PIL rather than failing the task
-                        # (curation pipelines see dirty media)
-                        try:
-                            px[i] = _resize_area(
-                                _decode_bmp_gray(b), thumb
-                            ).reshape(n_px)
-                            continue
-                        except Exception:
-                            pass
-                    from PIL import Image  # noqa: import inside worker
-
-                    im = Image.open(io.BytesIO(b)).convert("L").resize(
-                        (thumb, thumb)
-                    )
-                    px[i] = np.asarray(im, dtype=np.float64).reshape(n_px)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "n_bytes": nb,
-                        "mean_px": px.mean(axis=1),
-                        "std_px": px.std(axis=1),
-                        "thumb_vec": list(px / 255.0),
-                    }
-                )
-
-        blobs = df.where(F.col(blob_col).isNotNull()).select(id_col, blob_col)
-        return blobs.mapInPandas(run_real, schema)
 
     def run(batches):
         for pdf in batches:
@@ -425,13 +113,12 @@ def video_frame_sample(
     every_k: int = 10,
     max_frames: int = 8,
     thumb: int = 8,
-    deterministic_fake: bool = True,
 ) -> DataFrame:
     """Frame-sample a video (every k-th frame, capped) -> per-sampled-
-    frame thumbnail stats. The decode is the same stubbed splitmix64
-    stream (a real codec — ffmpeg — would replace `_fake_decode_matrix`
-    with keyframe extraction; the Spark plumbing, ragged frame expansion
-    and batch shapes are real). One row per (doc, frame_idx)."""
+    frame thumbnail stats. The frame count is one per 4 KB of blob, and
+    each frame is the splitmix64 pseudo-decode of the blob's seed
+    advanced by its index; the ragged frame expansion is
+    repeat/arange. One row per (doc, frame_idx)."""
     schema = StructType(
         [
             StructField(id_col, df.schema[id_col].dataType),
@@ -443,40 +130,6 @@ def video_frame_sample(
     n_px = thumb * thumb
     # pseudo frame count: one frame per 4KB of media, like a ~30fps clip
     bytes_per_frame = 4096
-
-    if not deterministic_fake:
-        # REAL decode path for UNCOMPRESSED AVI via stdlib RIFF parsing
-        # (no codec needed — runs and is tested in this sandbox, like the
-        # PCM-WAV and BMP paths). Compressed video raises loudly toward
-        # the ffmpeg plug point. Same sampling schedule as the stub:
-        # every_k-th frame, capped at max_frames.
-        def run_real(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids, fidx, means, stds = [], [], [], []
-                for doc, blob in zip(pdf[id_col], pdf[blob_col]):
-                    n_total, frame = _decode_avi_frames(bytes(blob))
-                    if not n_total:
-                        continue
-                    n_sampled = min(-(-n_total // every_k), max_frames)
-                    for j in range(n_sampled):
-                        g = frame(j * every_k)
-                        ids.append(doc)
-                        fidx.append(j * every_k)
-                        means.append(g.mean())
-                        stds.append(g.std())
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "frame_idx": np.asarray(fidx, dtype=np.int32),
-                        "mean_px": np.asarray(means, dtype=np.float64),
-                        "std_px": np.asarray(stds, dtype=np.float64),
-                    }
-                )
-
-        blobs = df.where(F.col(blob_col).isNotNull()).select(id_col, blob_col)
-        return blobs.mapInPandas(run_real, schema)
 
     def run(batches):
         for pdf in batches:
@@ -512,12 +165,15 @@ def audio_frame_stats(
     id_col: str = "doc_id",
     frame_len: int = 256,
     max_frames: int = 16,
-    deterministic_fake: bool = True,
 ) -> DataFrame:
-    """Decode -> frame-sample -> per-frame RMS energy (the t2f abs_energy
-    kernel applied to pseudo-samples). Output: one row per (doc, frame);
-    the ragged doc->frames expansion is repeat/arange, the sample
-    synthesis one splitmix64 matrix pass."""
+    """Decode PCM WAV -> frames of `frame_len` samples -> per-frame RMS
+    energy. Samples are scaled to [-1, 1) and a multi-channel clip is
+    averaged across channels first. A doc gives
+    min(max(samples // frame_len, 1), max_frames) frames; a clip shorter
+    than one frame is zero-padded to one. Output: one row per
+    (doc, frame). Compressed formats (mp3/ogg/aac) and sample widths
+    other than 8 or 16 bits raise: they need a codec beyond the stdlib
+    `wave` module."""
     schema = StructType(
         [
             StructField(id_col, df.schema[id_col].dataType),
@@ -526,94 +182,54 @@ def audio_frame_stats(
         ]
     )
 
-    if not deterministic_fake:
-        # REAL decode path for PCM WAV via the stdlib `wave` module (no
-        # external codec needed — runs in this sandbox and is tested,
-        # not skipped). Compressed formats (mp3/ogg/aac) still need
-        # ffmpeg/soundfile and raise loudly. The decode is per-blob by
-        # nature (codec boundary); framing/RMS are vectorized.
-        def run_real(batches):
-            import io
-            import wave as wave_mod
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids, frame_ids, rms_vals = [], [], []
-                for doc, blob in zip(pdf[id_col], pdf[blob_col]):
-                    with wave_mod.open(io.BytesIO(bytes(blob))) as w:
-                        sw = w.getsampwidth()
-                        nch = w.getnchannels()
-                        raw = w.readframes(w.getnframes())
-                    if sw == 2:
-                        x = (
-                            np.frombuffer(raw, dtype="<i2").astype(np.float64)
-                            / 32768.0
-                        )
-                    elif sw == 1:
-                        x = (
-                            np.frombuffer(raw, dtype=np.uint8).astype(
-                                np.float64
-                            )
-                            - 128.0
-                        ) / 128.0
-                    else:
-                        raise NotImplementedError(
-                            f"{sw*8}-bit PCM needs a codec beyond stdlib "
-                            "wave (ffmpeg/soundfile)"
-                        )
-                    if nch > 1:
-                        x = x[: (len(x) // nch) * nch].reshape(
-                            -1, nch
-                        ).mean(axis=1)
-                    nf = int(min(max(len(x) // frame_len, 1), max_frames))
-                    usable = x[: nf * frame_len]
-                    if len(usable) < nf * frame_len:  # sub-frame clip
-                        usable = np.pad(usable, (0, nf * frame_len - len(usable)))
-                    segs = usable.reshape(nf, frame_len)
-                    r = np.sqrt((segs * segs).mean(axis=1))
-                    ids.extend([doc] * nf)
-                    frame_ids.extend(range(nf))
-                    rms_vals.extend(r.tolist())
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "frame": np.asarray(frame_ids, dtype=np.int32),
-                        "rms": rms_vals,
-                    }
-                )
-
-        blobs = df.where(F.col(blob_col).isNotNull()).select(id_col, blob_col)
-        return blobs.mapInPandas(run_real, schema)
-
     def run(batches):
+        import io
+        import wave as wave_mod
+
         for pdf in batches:
             if not len(pdf):
                 continue
-            nb = pdf["_nb"].to_numpy()
-            seeds = pdf["_seed"].to_numpy().astype(np.uint64)
-            n_frames = np.clip(nb // frame_len, 1, max_frames).astype(np.int64)
-            doc_of_frame = np.repeat(np.arange(len(pdf)), n_frames)
-            frame_idx = (
-                np.arange(len(doc_of_frame))
-                - np.repeat(
-                    np.concatenate(([0], np.cumsum(n_frames)[:-1])), n_frames
-                )
-            )
-            # per-frame seed: blob seed advanced by the frame's offset
-            frame_seeds = seeds[doc_of_frame] + (
-                frame_idx.astype(np.uint64) * np.uint64(frame_len)
-            )
-            samples = _fake_decode_matrix(frame_seeds, frame_len).astype(
-                np.float64
-            )
-            samples = (samples - 127.5) / 127.5
+            ids, frame_ids, rms_vals = [], [], []
+            for doc, blob in zip(pdf[id_col], pdf[blob_col]):
+                with wave_mod.open(io.BytesIO(bytes(blob))) as w:
+                    sw = w.getsampwidth()
+                    nch = w.getnchannels()
+                    raw = w.readframes(w.getnframes())
+                if sw == 2:
+                    x = (
+                        np.frombuffer(raw, dtype="<i2").astype(np.float64)
+                        / 32768.0
+                    )
+                elif sw == 1:
+                    x = (
+                        np.frombuffer(raw, dtype=np.uint8).astype(np.float64)
+                        - 128.0
+                    ) / 128.0
+                else:
+                    raise NotImplementedError(
+                        f"{sw*8}-bit PCM needs a codec beyond stdlib "
+                        "wave (ffmpeg/soundfile)"
+                    )
+                if nch > 1:
+                    x = x[: (len(x) // nch) * nch].reshape(-1, nch).mean(
+                        axis=1
+                    )
+                nf = int(min(max(len(x) // frame_len, 1), max_frames))
+                usable = x[: nf * frame_len]
+                if len(usable) < nf * frame_len:  # sub-frame clip
+                    usable = np.pad(usable, (0, nf * frame_len - len(usable)))
+                segs = usable.reshape(nf, frame_len)
+                r = np.sqrt((segs * segs).mean(axis=1))
+                ids.extend([doc] * nf)
+                frame_ids.extend(range(nf))
+                rms_vals.extend(r.tolist())
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy()[doc_of_frame],
-                    "frame": frame_idx.astype(np.int32),
-                    "rms": np.sqrt((samples * samples).mean(axis=1)),
+                    id_col: ids,
+                    "frame": np.asarray(frame_ids, dtype=np.int32),
+                    "rms": rms_vals,
                 }
             )
 
-    return _with_media_digest(df, blob_col, id_col).mapInPandas(run, schema)
+    blobs = df.where(F.col(blob_col).isNotNull()).select(id_col, blob_col)
+    return blobs.mapInPandas(run, schema)

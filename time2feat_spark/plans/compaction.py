@@ -167,6 +167,7 @@ def _compact_leaf(leaf: str, names: list[str]) -> int:
 def compact_source(out_root: str, source: str) -> dict:
     """Compact `{out_root}/source={source}` (layout written by
     LadderJob: partitioned by tier, window_day) to one file per leaf.
+    `source` is the name as the directory holds it, already escaped.
     Returns {files_before, files_after, rows}: `rows` is the tree's row
     count from the parquet footers, or None on a no-op (no leaf holds
     more than one file). A rewrite appends a `compacted` record under

@@ -52,6 +52,21 @@ from ..operators.rollup import (
 )
 from .checkpoint import Manifest, UnitRecord, snapshot_id
 
+# the characters Spark's partitionBy percent-escapes in a partition value
+# (ExternalCatalogUtils.escapePathName on a non-Windows host)
+_PATH_ESCAPED = frozenset(map(chr, range(1, 0x20))) | frozenset(
+    "\"#%'*/:=?\\\x7f{[]^"
+)
+
+
+def escape_path_name(value: str) -> str:
+    """A partition value as Spark's ``partitionBy`` writes it in a
+    directory name (``a/b`` -> ``a%2Fb``, ``x%3Ay`` -> ``x%253Ay``), so
+    partition discovery reads it back exactly. ``src_N`` is unchanged."""
+    return "".join(
+        f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in value
+    )
+
 
 class LadderJob:
     def __init__(
@@ -146,7 +161,7 @@ class LadderJob:
                 )
             )
             out.write.mode(mode).partitionBy("tier", "window_day").parquet(
-                f"{self.out_root}/source={source}"
+                f"{self.out_root}/source={escape_path_name(source)}"
             )
             stats = wrote.get
             hi = seen.get["hi"] or wm or ""

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.rollup import RollupConfig, tier_points
+from .ladder_job import escape_path_name
 
 MS_PER_DAY = 86_400_000
 
@@ -51,14 +52,17 @@ def choose_tier(cfg: RollupConfig, resolution_sec: float) -> str | None:
 
 def available_days(job, tier: str, sources: list[str] | None = None) -> set:
     """window_day partitions that still exist for a tier (directory
-    listing — the same metadata a catalog would serve)."""
+    listing — the same metadata a catalog would serve). Directory names
+    hold source names escaped as ``partitionBy`` writes them, so
+    `sources` is compared in that form."""
     import glob
     import os
 
+    wanted = None if sources is None else set(map(escape_path_name, sources))
     days = set()
     for src_dir in glob.glob(f"{job.out_root}/source=*"):
-        if sources is not None:
-            if src_dir.rsplit("source=", 1)[1] not in sources:
+        if wanted is not None:
+            if src_dir.rsplit("source=", 1)[1] not in wanted:
                 continue
         for d in glob.glob(f"{src_dir}/tier={tier}/window_day=*"):
             days.add(int(os.path.basename(d).split("=", 1)[1]))
